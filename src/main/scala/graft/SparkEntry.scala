@@ -162,11 +162,9 @@ object SparkEntry {
     "d02_fingerprint_dedup"  -> (Dedup.fingerprintDedup _),
     // d03: the ENGINE-PORTABLE MinHash+LSH pipeline (md5-60-bit grams,
     // mod-M61 permutations) — hash-checked end-to-end by a DuckDB
-    // oracle that reproduces signature, banding, prefilter and verify;
-    // the XXH64 kernel (minHashLshPairs) stays the spec'd scale path
+    // oracle that reproduces signature, banding, prefilter and verify
     "d03_minhash_lsh"        -> (Dedup.minHashDedupPortable _),
-    // d04/d05: engine-portable like d03 — the XXH64 kernels
-    // (simHashPairs / ngramJaccardPairs) stay the spec'd scale paths
+    // d04/d05: engine-portable like d03
     "d04_simhash"            -> (Dedup.simHashDedupPortable _),
     "d05_ngram_jaccard"      -> (Dedup.ngramJaccardDedupPortable _),
     // d28: d03 at the alternate 16×2 band geometry (recall-leaning) —
@@ -174,8 +172,7 @@ object SparkEntry {
     // parameterized chain on BOTH engines (the e20/t36 builder pattern)
     "d28_minhash_lsh_alt"    -> (Dedup.minHashDedupPortableAlt _),
     // d06: engine-portable like d03/d04/d05 — md5-derived Rademacher
-    // hyperplanes instead of a seeded Gaussian RNG; the Gaussian
-    // kernel (embeddingNearDupPairs) stays the spec'd scale path
+    // hyperplanes instead of a seeded Gaussian RNG
     "d06_embedding_neardup"  -> (Dedup.embeddingNearDupPortable _),
     // d07 = the flagship pipeline on the exact-Jaccard kernel over the
     // bounded slice (fully oracle-checked); d11 = the identical
@@ -210,7 +207,7 @@ object SparkEntry {
     // d17: SemDeDup-style semantic dedup — fixed-point integer-Lloyd
     // cells + in-cluster greedy sweep on INTEGER quantized-normalized
     // dots since r8, so the survivor set hash-checks (oracle sweeps
-    // via a recursive CTE); float cosine-k-means kernel stays spec'd
+    // via a recursive CTE)
     "d17_semantic_dedup"     -> (Dedup.semanticDedupPortableGate _),
     // d18: URL-keyed dedup — parse_url canonicalization chain
     // (host case, www., default port, trailing slash, tracking params,
@@ -317,7 +314,7 @@ object SparkEntry {
     // — similarity search (SURVEY §2.11) —
     "e01_knn_brute"          -> (Similarity.knnBruteForce _),
     // e02: portable Rademacher banding, ids+rank output (the e01
-    // oracle convention); Gaussian kernel stays the spec'd scale path
+    // oracle convention)
     "e02_knn_lsh"            -> (Similarity.knnLshPortable _),
     // e04: portable md5-ordered centroid selection; machinery
     // unchanged; ids+rank output
@@ -325,11 +322,10 @@ object SparkEntry {
       Similarity.knnIvfPortable(s, dir)),
     // e06: trained IVF with the Lloyd iterations in fixed-point
     // INTEGER arithmetic — the whole train→assign→probe→re-rank
-    // pipeline hash-checks against an unrolled DuckDB CTE chain; the
-    // float MLlib kernel stays as the spec'd scale path
+    // pipeline hash-checks against an unrolled DuckDB CTE chain
     "e06_knn_ivf_kmeans"     -> (Similarity.knnIvfKmeansFixedPoint _),
     // e07: PQ with fixed-point integer train/encode/ADC — the whole
-    // compressed-scan pipeline hash-checks; float kernels stay spec'd
+    // compressed-scan pipeline hash-checks
     "e07_knn_pq"             -> (Similarity.knnPqFixedPoint _),
     // e09: scalar int8 quantization (SQ8) — closed-form quantizer +
     // all-integer shortlist scores make this the one ANN index whose
@@ -341,8 +337,7 @@ object SparkEntry {
     // e11: MMR diversified top-k — greedy relevance-vs-novelty rerank
     // over the e01 shortlist; PORTABLE integer scores since r8 (λ=1/2
     // makes the objective order the integer rel − maxSim), so the
-    // greedy pick sequence hash-checks against k unrolled CTE steps;
-    // the float kernel stays the spec'd scale path
+    // greedy pick sequence hash-checks against k unrolled CTE steps
     "e11_knn_mmr"            -> (Similarity.knnMmrPortable _),
     // e12: kNN JOIN — top-k for EVERY row, both sides large (LSH
     // candidates, never O(n²); rows-only: the SCALE kernel keeps the
@@ -374,14 +369,10 @@ object SparkEntry {
     // scan side reads the 32-long sketch, exact integer arithmetic
     "e19_knn_projected"      -> ((s: SparkSession, dir: String) =>
       Similarity.knnProjected(s, dir)),
-    // e13: PERSISTED IVF index — build on the base slice, incremental
-    // append of the delta with frozen centroids, query from the LOADED
-    // index (rows-only: k-means centroids are engine-specific; the
-    // loaded≡fresh equality anchor lives in SimilaritySpec)
-    // e13 is the fixed-point persisted cycle (build on base slice,
-    // frozen-centroid append, query the LOADED index) — hash-checked
-    // against the e06 CTE chain with base-restricted training; the
-    // float-MLlib persisted path stays spec'd and feeds s13
+    // e13: PERSISTED IVF index, fixed-point — build on the base slice,
+    // frozen-centroid append of the delta, query the LOADED index;
+    // hash-checked against the e06 CTE chain with base-restricted
+    // training (s13 drives the same index from a stream)
     "e13_knn_persisted"      -> (Similarity.knnPersistedFixedPoint _),
     // e21: IVF index-occupancy audit — per-cell counts + id ranges
     // from the LOADED e13-cycle index (build base, frozen append
@@ -407,16 +398,15 @@ object SparkEntry {
     "e24_index_compaction"   -> (Similarity.knnIndexCompaction _),
     "e05_cosine_range"       -> (Similarity.knnRange _),
     // e15: IVF+PQ composite (coarse cells bound rows touched, PQ codes
-    // bound per-row cost — the FAISS-IVFPQ shape; rows-only: k-means +
-    // codebook are engine-specific; recall pinned in e08 and spec)
-    // e15: IVF+PQ with BOTH trained structures fixed-point — cells,
-    // codes, and the ADC shortlist all hash-check; float kernels spec'd
+    // bound per-row cost — the FAISS-IVFPQ shape) with BOTH trained
+    // structures fixed-point — cells, codes, and the ADC shortlist all
+    // hash-check; recall pinned in e08
     "e15_knn_ivf_pq"         -> (Similarity.knnIvfPqFixedPoint _),
     // e16: FILTERED vector search through the IVF index — metadata
     // predicate pruning the assigned slice before the probe join,
     // nProbe widened for the filtered-recall hazard; fixed-point
     // training since r8, so the composition hash-checks (e10 stays
-    // the exact filtered baseline; float kernel spec'd)
+    // the exact filtered baseline)
     "e16_knn_filtered_ivf"   -> (Similarity.knnFilteredIvfFixedPoint _),
     // e08: in-gate ANN quality audit — recall of every approximate
     // index vs the e01 exact ranks. HASH-CHECKED since r9: the oracle

@@ -51,14 +51,14 @@ object Tables {
     * groups don't split, whatever `maxPartitionBytes` says) — so every
     * scan arrives as ONE partition and pre-shuffle map stages run as
     * one task. A blanket `repartition(defaultParallelism)` here was
-    * A/B'd same-JVM (`DebugPerf spreadab`) and REJECTED: warm, the
+    * A/B'd same-JVM (r12) and REJECTED: warm, the
     * heavy text chains are shuffle-bound, not scan-task-bound (raw ≈
     * spread within noise), while composition gates that re-enter the
     * table many times (p06/s19/s23) pay 32-way scheduling on every
     * tiny stage — a net bench regression. The ONE place a single-task
     * stage genuinely dominated — the bounded all-pairs anchor's O(250²)
     * intersection stage — is spread explicitly at that operator
-    * (`Dedup.jaccardExactPairs`, A/B'd 2.6× via `DebugPerf anchorab`).
+    * (`Dedup.jaccardExactPairs`, A/B'd 2.6× same-JVM).
     * At 100 TB tables arrive as thousands of splits and none of this
     * applies; writers there should still avoid monolithic single-group
     * files (see q49 compaction).

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.types._
@@ -660,91 +660,6 @@ object HashFns {
   def signatureMatchFractionBytes(a: Column, b: Column): Column =
     GraftColumnBridge.column(SigMatchFracBytes(GraftColumnBridge.expression(a),
                                                GraftColumnBridge.expression(b)))
-
-  /** Count of matching components of two byte-packed signatures — the
-    * integer twin of [[sigMatchFracBytes]]. Component equality implies
-    * byte equality, so `countBytes(a,b) >= k` is a NECESSARY condition
-    * for the exact `signatureMatchCount(sig_a, sig_b) >= k`. A
-    * two-stage portable chain built on it (32 B packed sigs riding the
-    * band rows, exact count re-applied in the verify join) was A/B'd
-    * same-JVM and REJECTED for the shipped chains (`DebugPerf d28ab`,
-    * r13): at the 16×2 geometry's density the byte false-equalities
-    * admit the large 11-12-of-32 near-threshold population into the
-    * dedup shuffle and the hs-array verify join, roughly doubling the
-    * wall. Kept as the documented negative control the harness
-    * re-measures.
-    */
-  def sigMatchCountBytes(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var same = 0
-    var i = 0
-    while (i < n) {
-      if (a(i) == b(i)) same += 1
-      i += 1
-    }
-    same
-  }
-
-  case class SigMatchCountBytes(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = IntegerType
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "sig_match_count_bytes"
-    override def nullSafeEval(a: Any, b: Any): Any =
-      sigMatchCountBytes(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashFns.sigMatchCountBytes($a, $b)")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  def signatureMatchCountBytes(a: Column, b: Column): Column =
-    GraftColumnBridge.column(SigMatchCountBytes(GraftColumnBridge.expression(a),
-                                                GraftColumnBridge.expression(b)))
-
-  /** `signatureMatchCount(a, b) >= k` with EARLY EXIT — true the
-    * moment `k` matches are seen, false the moment the remaining
-    * components cannot reach `k`. Identical predicate to counting all
-    * components and comparing (the oracle's form). NOT used by the
-    * shipped chains: the same-JVM A/B (`DebugPerf d28ab`, r13) read it
-    * SLOWER than the plain count at 600M-pair enumeration volume — the
-    * two data-dependent branches per element defeat the JIT on what is
-    * otherwise a branch-light, pipelineable count loop. Kept as the
-    * documented negative control the harness re-measures.
-    */
-  def sigMatchAtLeast(a: ArrayData, b: ArrayData, k: Int): Boolean = {
-    if (k <= 0) return true
-    val n = math.min(a.numElements(), b.numElements())
-    var same = 0
-    var i = 0
-    while (i < n) {
-      if (a.getLong(i) == b.getLong(i)) {
-        same += 1
-        if (same >= k) return true
-      } else if (same + (n - i - 1) < k) return false
-      i += 1
-    }
-    false
-  }
-
-  case class SigMatchAtLeast(left: Expression, right: Expression, k: Int)
-      extends BinaryExpression with Predicate {
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "sig_match_at_least"
-    override def nullSafeEval(a: Any, b: Any): Any =
-      sigMatchAtLeast(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        (a, b) => s"graft.functions.HashFns.sigMatchAtLeast($a, $b, $k)")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  def signatureMatchAtLeast(a: Column, b: Column, k: Int): Column =
-    GraftColumnBridge.column(SigMatchAtLeast(GraftColumnBridge.expression(a),
-                                             GraftColumnBridge.expression(b), k))
 
   /** MinHash signature (array<long> of k minima) over byte n-gram
     * shingles of a string column.

@@ -10,19 +10,23 @@ import org.apache.spark.sql.types._
 /** Product quantization — the vector-compression path of ANN at scale:
   * a D-dim float vector (D·4 bytes) becomes `m` small codebook indices
   * (m bytes at k ≤ 256), a 32× memory/scan reduction at D=64, m=8.
-  * The index pipeline is the standard PQ shape:
+  * The index pipeline is the standard PQ shape, in FIXED-POINT integer
+  * arithmetic over floor(nv·2^20)-quantized NORMALIZED components, so
+  * training, codes and ADC scores are bit-reproducible in another
+  * engine (the e07/e15 oracle path — the e06 integer-Lloyd discipline
+  * applied per subspace):
   *
-  *  - TRAIN ([[train]]): per-subspace k-means on a bounded sample,
-  *    driver-side (the codebook is m·k·(D/m) floats — a few KB).
-  *  - ENCODE ([[PqEncode]]): per corpus row, argmin-distance subcode
+  *  - TRAIN ([[trainFixedPoint]]): per-subspace integer Lloyd on a
+  *    bounded sample, driver-side (the codebook is m·k·(D/m) longs —
+  *    a few KB).
+  *  - ENCODE ([[PqEncodeI64]]): per corpus row, argmin-distance subcode
   *    per subspace — a fused map-only expression with the codebooks as
-  *    codegen reference objects; the corpus's float payload never
+  *    codegen reference objects; the corpus's vector payload never
   *    travels again, only the codes.
-  *  - SCORE ([[PqAdcTable]] + [[PqAdcLookup]]): asymmetric distance —
-  *    the UNquantized query against the centroid each code names. The
-  *    per-query m·k distance table is fused once on the (broadcast)
-  *    query side; the hot corpus-×-queries path then costs m table
-  *    lookups per code, not m·subDim float ops.
+  *  - SCORE ([[PqAdcTableI64]] + [[PqAdcLookupI64]]): asymmetric
+  *    distance. The per-query m·k distance table is fused once on the
+  *    (broadcast) query side; the hot corpus-×-queries path then costs
+  *    m table lookups per code, not m·subDim ops.
   *
   * PQ distances are approximations; like the LSH/IVF operators the
   * end-to-end query re-ranks a shortlist exactly, so approximation
@@ -30,205 +34,6 @@ import org.apache.spark.sql.types._
   * ordering criterion.
   */
 object Pq {
-
-  /** Per-subspace Lloyd k-means over a driver-side sample.
-    * Deterministic: seeded initial centers drawn by index stride,
-    * fixed iteration count, ties to the lowest index.
-    * Returns codebooks(m)(k)(subDim).
-    */
-  def train(sample: Array[Array[Float]], m: Int = 8, k: Int = 16,
-            iters: Int = 10): Array[Array[Array[Float]]] = {
-    require(sample.nonEmpty, "PQ training needs a non-empty sample")
-    val d = sample.head.length
-    require(d % m == 0, s"dim $d not divisible into $m subspaces")
-    val sub = d / m
-    Array.tabulate(m) { j =>
-      val vecs = sample.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub))
-      // initial centers: evenly-strided sample rows (deterministic)
-      var centers = Array.tabulate(math.min(k, vecs.length)) { c =>
-        vecs((c.toLong * vecs.length / math.min(k, vecs.length)).toInt).clone()
-      }
-      var it = 0
-      while (it < iters) {
-        val sums = Array.fill(centers.length)(new Array[Double](sub))
-        val counts = new Array[Long](centers.length)
-        vecs.foreach { v =>
-          val c = nearest(v, centers)
-          counts(c) += 1
-          var i = 0
-          while (i < sub) { sums(c)(i) += v(i); i += 1 }
-        }
-        centers = centers.indices.map { c =>
-          if (counts(c) == 0) centers(c) // empty cell keeps its center
-          else Array.tabulate(sub)(i => (sums(c)(i) / counts(c)).toFloat)
-        }.toArray
-        it += 1
-      }
-      centers
-    }
-  }
-
-  private def nearest(v: Array[Float], centers: Array[Array[Float]]): Int = {
-    var best = 0; var bestD = Double.MaxValue
-    var c = 0
-    while (c < centers.length) {
-      var dist = 0.0; var i = 0
-      while (i < v.length) {
-        val diff = v(i).toDouble - centers(c)(i).toDouble
-        dist += diff * diff; i += 1
-      }
-      if (dist < bestD) { bestD = dist; best = c }
-      c += 1
-    }
-    best
-  }
-
-  /** Row kernel: encode one vector to its m subcodes. */
-  def encode(v: ArrayData, cb: Array[Array[Array[Float]]]): Array[Byte] = {
-    val m = cb.length
-    val sub = cb(0)(0).length
-    val out = new Array[Byte](m)
-    var j = 0
-    while (j < m) {
-      val centers = cb(j)
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < centers.length) {
-        var dist = 0.0; var i = 0
-        while (i < sub) {
-          val diff = v.getFloat(j * sub + i).toDouble - centers(c)(i).toDouble
-          dist += diff * diff; i += 1
-        }
-        if (dist < bestD) { bestD = dist; best = c }
-        c += 1
-      }
-      out(j) = best.toByte
-      j += 1
-    }
-    out
-  }
-
-  /** Reference ADC (recomputes sub-distances from the raw query) —
-    * kept for the lookup-table equivalence spec; the hot path is
-    * [[adcTable]] + [[adcLookup]].
-    */
-  def adcDist(q: ArrayData, code: Array[Byte], cb: Array[Array[Array[Float]]]): Double = {
-    val m = cb.length
-    val sub = cb(0)(0).length
-    var total = 0.0
-    var j = 0
-    while (j < m) {
-      // codes are unsigned bytes: mask before indexing or any codebook
-      // with k > 128 sign-extends into negative indices
-      val cen = cb(j)(code(j) & 0xFF)
-      var i = 0
-      while (i < sub) {
-        val diff = q.getFloat(j * sub + i).toDouble - cen(i).toDouble
-        total += diff * diff; i += 1
-      }
-      j += 1
-    }
-    total
-  }
-
-  /** Per-QUERY lookup table: table[j·k + c] = ‖q_j − C_j[c]‖² — the
-    * defining ADC optimization. Computed once per query row (m·k
-    * entries); every corpus code is then scored with m table lookups
-    * instead of m·subDim float ops.
-    */
-  def adcTable(q: ArrayData, cb: Array[Array[Array[Float]]]): ArrayData = {
-    val m = cb.length
-    val k = cb(0).length
-    val sub = cb(0)(0).length
-    val out = new Array[Double](m * k)
-    var j = 0
-    while (j < m) {
-      var c = 0
-      while (c < k) {
-        val cen = cb(j)(c)
-        var dist = 0.0; var i = 0
-        while (i < sub) {
-          val diff = q.getFloat(j * sub + i).toDouble - cen(i).toDouble
-          dist += diff * diff; i += 1
-        }
-        out(j * k + c) = dist
-        c += 1
-      }
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Score one code against a query's precomputed table: m lookups. */
-  def adcLookup(table: ArrayData, code: Array[Byte], k: Int): Double = {
-    var total = 0.0
-    var j = 0
-    while (j < code.length) {
-      total += table.getDouble(j * k + (code(j) & 0xFF))
-      j += 1
-    }
-    total
-  }
-
-  case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Float]]])
-      extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "pq_encode"
-    @transient private lazy val cb: Array[Array[Array[Float]]] =
-      codebooks.map(_.map(_.toArray).toArray).toArray
-    override def nullSafeEval(input: Any): Any =
-      encode(input.asInstanceOf[ArrayData], cb)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("pqCodebooks", cb, "float[][][]")
-      defineCodeGen(ctx, ev, c => s"graft.functions.Pq.encode($c, $ref)")
-    }
-    override def toString: String =
-      s"pq_encode($child, <${codebooks.length}x${codebooks.head.length} codebook>)"
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  case class PqAdcTable(child: Expression, codebooks: Seq[Seq[Seq[Float]]])
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "pq_adc_table"
-    @transient private lazy val cb: Array[Array[Array[Float]]] =
-      codebooks.map(_.map(_.toArray).toArray).toArray
-    override def nullSafeEval(input: Any): Any =
-      adcTable(input.asInstanceOf[ArrayData], cb)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("pqCodebooks", cb, "float[][][]")
-      defineCodeGen(ctx, ev, c => s"graft.functions.Pq.adcTable($c, $ref)")
-    }
-    override def toString: String =
-      s"pq_adc_table($child, <${codebooks.length}x${codebooks.head.length} codebook>)"
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  case class PqAdcLookup(left: Expression, right: Expression, k: Int)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "pq_adc_lookup"
-    override def nullSafeEval(a: Any, b: Any): Any =
-      adcLookup(a.asInstanceOf[ArrayData], b.asInstanceOf[Array[Byte]], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Pq.adcLookup($a, $b, $k)")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-
-  // — FIXED-POINT integer PQ (the e07 oracle path, r8): the same
-  //   train/encode/ADC pipeline with every arithmetic step in
-  //   integers over floor(nv·2^20)-quantized NORMALIZED components, so
-  //   training, codes, and ADC scores are bit-reproducible in another
-  //   engine (the e06 integer-Lloyd discipline applied per subspace).
-  //   Byte codes stay bytes on the wire; distances/tables are longs. —
 
   /** Per-subspace integer Lloyd over a (md5-ordered, bounded,
     * driver-side) quantized sample. Seeds = the first k sample rows'
@@ -334,7 +139,10 @@ object Pq {
     new GenericArrayData(out)
   }
 
-  /** Integer ADC score: m table lookups, exact long sum. */
+  /** Integer ADC score: m table lookups, exact long sum. Codes are
+    * unsigned bytes: the `& 0xFF` mask keeps codebooks with k > 128
+    * from sign-extending into negative indices.
+    */
   def adcLookupI64(table: ArrayData, code: Array[Byte], k: Int): Long = {
     var total = 0L
     var j = 0
@@ -407,17 +215,5 @@ object Pq {
 
   def adcLookupI64Col(table: Column, code: Column, k: Int): Column =
     GraftColumnBridge.column(PqAdcLookupI64(GraftColumnBridge.expression(table),
-      GraftColumnBridge.expression(code), k))
-
-  def encodeCol(v: Column, cb: Array[Array[Array[Float]]]): Column =
-    GraftColumnBridge.column(PqEncode(GraftColumnBridge.expression(v),
-      cb.map(_.map(_.toSeq).toSeq).toSeq))
-
-  def adcTableCol(q: Column, cb: Array[Array[Array[Float]]]): Column =
-    GraftColumnBridge.column(PqAdcTable(GraftColumnBridge.expression(q),
-      cb.map(_.map(_.toSeq).toSeq).toSeq))
-
-  def adcLookupCol(table: Column, code: Column, k: Int): Column =
-    GraftColumnBridge.column(PqAdcLookup(GraftColumnBridge.expression(table),
       GraftColumnBridge.expression(code), k))
 }

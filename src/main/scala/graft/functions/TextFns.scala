@@ -203,14 +203,6 @@ object TextFns {
       .otherwise(lit(0.0))
   }
 
-  /** Punctuation-character ratio of raw text (same class as the
-    * normalization chain's [[PunctClass]]).
-    */
-  def punctRatio(c: Column): Column =
-    when(length(c) > 0,
-      (length(c) - length(regexp_replace(c, PunctClass, ""))).cast("double")
-        / length(c)).otherwise(lit(0.0))
-
   /** Mean token length. */
   def meanTokenLen(toks: Column): Column =
     when(size(toks) > 0,

@@ -213,12 +213,11 @@ object VectorFns {
     GraftColumnBridge.column(CosineSimF32(GraftColumnBridge.expression(a),
                                           GraftColumnBridge.expression(b)))
 
-  /** The seeded hyperplane set every LSH banding operator shares
-    * (e02 `lshTopK`, d06 `embeddingNearDupPairs`, e12 `knnJoin`, and
-    * spec reconstructions): band-major flat fill, one `Random(seed)`
-    * stream. ONE definition — a change to the generation order must hit
-    * every signature producer at once or their buckets silently
-    * desynchronize.
+  /** The seeded hyperplane set of the float LSH banding (e12
+    * `knnJoin` and its spec reconstruction): band-major flat fill, one
+    * `Random(seed)` stream. ONE definition — a change to the generation
+    * order must hit every signature producer at once or their buckets
+    * silently desynchronize.
     */
   def hyperplanes(bands: Int, bitsPerBand: Int, dim: Int,
                   seed: Long): Array[Array[Float]] = {
@@ -228,10 +227,10 @@ object VectorFns {
   }
 
   /** Scalar cosine over plain float arrays — the SAME accumulation
-    * order and zero-norm convention as [[CosineSimF32]], for group-sweep
-    * code that works on collected arrays (the d17 semantic-dedup sweep,
-    * the e11 MMR rerank). One definition: the sweep and the expression
-    * that built its shortlist must never disagree.
+    * order and zero-norm convention as [[CosineSimF32]], for code that
+    * works on collected arrays (driver-side references of the exact
+    * re-rank). One definition: a reference and the expression it checks
+    * must never disagree.
     */
   def cosineScalar(a: Array[Float], b: Array[Float]): Double = {
     var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -247,15 +246,6 @@ object VectorFns {
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
-
-  def l2NormHof(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
-
-  def cosineSimHof(a: Column, b: Column): Column = {
-    val d = dotHof(a, b)
-    val n = l2NormHof(a) * l2NormHof(b)
-    when(n === 0.0, 0.0).otherwise(d / n)
-  }
 
   /** Random-hyperplane signature bit: sign of dot(v, plane) — building
     * block for SimHash-style LSH over embeddings. Planes are generated

@@ -1,7 +1,5 @@
 package graft.jobs
 
-import java.nio.file.Files
-
 import graft.sources.{StubOffre, StubOffresServer}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -81,14 +79,15 @@ object IngestionGate {
 
   /** i01: the full production ingestion scan, landed to parquet and
     * read back (the server must outlive the scan, so the result is
-    * materialized before it stops). Oracle = the same column derivation
-    * over `customer` in SQL.
+    * materialized before it stops). The landing dir is the session's
+    * [[graft.util.Scratch]] dir for i01: wiped per call, removed at
+    * exit. Oracle = the same column derivation over `customer` in SQL.
     */
   def ingestOffres(spark: SparkSession, dir: String): DataFrame = {
     val offers = fixtureOffers(spark, dir, malformedEvery = 0)
     val server = new StubOffresServer(offers, secrets)
     try {
-      val out = Files.createTempDirectory("graft_i01").toString
+      val out = graft.util.Scratch.dir(spark, "i01", dir).toString
       spark.read.format("graft.sources.OffresSource")
         .options(scanOptions(server, offers.size))
         .load()
@@ -133,7 +132,7 @@ object IngestionGate {
     val server = new StubOffresServer(offers, secrets)
     val res =
       try {
-        val out = Files.createTempDirectory("graft_i02").toString
+        val out = graft.util.Scratch.dir(spark, "i02", dir).toString
         IngestionJob.runWithOptions(spark, scanOptions(server, offers.size), out)
       } finally server.stop()
     import spark.implicits._

@@ -229,7 +229,7 @@ object Curation {
     */
   private def decontaminateAndPack(curated: DataFrame, docs: DataFrame,
                                    budget: Int, shards: Int): DataFrame = {
-    // NOT spread (r14 `spreadq` A/B): repartitioning the checkpointed
+    // NOT spread (r14 `propab graft.spread.off` A/B): repartitioning the checkpointed
     // curated frame before the shingle/token kernels measured p01 3.99
     // (raw) vs 4.07, p06 3.61 vs 3.55, p07 4.53 vs 4.65 min-of-3 —
     // neutral everywhere (the d12 raw-scan site DOES win; here the
@@ -320,7 +320,7 @@ object Curation {
     val docs = Tables.documents(spark, dir)
     // the p01 stages, shared: curate once (checkpointed inside), flag
     // once, pack once — the stats all read these three frames (NOT
-    // spread: the r14 `spreadq` A/B measured p07 4.53 raw vs 4.65 —
+    // spread: the r14 `propab graft.spread.off` A/B measured p07 4.53 raw vs 4.65 —
     // the decontaminateAndPack rationale)
     val curated = graft.jobs.CurationJob.curate(spark, dir)
     // ids-only and doc-bounded; checkpointed because the stat branch,

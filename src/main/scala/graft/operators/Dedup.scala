@@ -90,148 +90,6 @@ object Dedup {
       .select(col("keeper_id"), col("n_copies"))
       .orderBy(col("keeper_id"))
 
-  /** LSH candidate-pair generation from a (id, sig array<long>) frame:
-    * band the signature, shuffle ONLY (band, bkey, id) — never the
-    * payload (shingle sets / vectors stay out of the LSH shuffle; at
-    * 100 TB that is the difference between shuffling 8×|corpus| ids and
-    * 8×|corpus| documents). Payloads are re-joined by id afterwards.
-    */
-  private[graft] def lshCandidates(sig: DataFrame, bands: Int, rows: Int): DataFrame =
-    lshCandidatesRaw(sig, bands, rows).dropDuplicates("doc_a", "doc_b")
-
-  /** Candidate pairs WITHOUT the cross-band dedup shuffle: only a few
-    * percent of candidates collide in more than one band, so pipelines
-    * that verify candidates anyway dedup AFTER the (much smaller)
-    * verified set instead of shuffling the full candidate stream.
-    */
-  private[graft] def lshCandidatesRaw(sig: DataFrame, bands: Int, rows: Int,
-                                      maxBucket: Int = 10000): DataFrame =
-    // payload-free banded frame → bare pairs, same hot-bucket guard as
-    // the portable chains (see [[guardedBandedSelfJoin]])
-    guardedBandedSelfJoin(
-      sig.select(col("id"),
-          explode(array((0 until bands).map { b =>
-            struct(lit(b).as("band"),
-                   hash(slice(col("sig"), b * rows + 1, rows)).as("bkey"))
-          }: _*)).as("bb"))
-        .select(col("bb.band").as("band"), col("bb.bkey").as("bkey"), col("id")),
-      maxBucket)
-      .select(col("doc_a"), col("doc_b"))
-
-  /** Alternative candidate generation: one shuffle (groupBy bucket →
-    * collect ids → emit in-bucket pairs) instead of a self-join (which
-    * shuffles the banded frame twice). Wins when buckets are small;
-    * `maxBucket` guards the pathological hot bucket (a bucket that big
-    * means the band is degenerate — its pairs are overwhelmingly false
-    * candidates, and the remaining bands still cover true pairs).
-    */
-  private[graft] def lshCandidatesViaBuckets(sig: DataFrame, bands: Int, rows: Int,
-                                             maxBucket: Int = 10000): DataFrame = {
-    val banded = sig.select(col("id"),
-        explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-                 hash(slice(col("sig"), b * rows + 1, rows)).as("bkey"))
-        }: _*)).as("bb"))
-      .select(col("bb.band").as("band"), col("bb.bkey").as("bkey"), col("id"))
-    banded
-      .groupBy(col("band"), col("bkey"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .filter(size(col("ids")).between(2, maxBucket))
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + 2, size(col("ids"))), y =>
-          struct(x.as("doc_a"), y.as("doc_b")))))).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-  }
-
-  /** MinHash+LSH near-duplicate pairs.
-    *
-    * One-pass minhash signature (custom expression, byte 5-gram
-    * shingles) → band → candidates = pairs sharing a band bucket →
-    * verified by exact Jaccard over char-shingle sets (payload joined
-    * back by id).
-    *
-    * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard >= threshold.
-    */
-  /** @param preNormalized when true, `textCol` is already the output of
-    *                      [[graft.functions.TextFns.normalizeText]] and
-    *                      the chain is not re-applied — lets a pipeline
-    *                      that already carries normalized text (e.g.
-    *                      [[graft.jobs.CurationJob]]) skip a second
-    *                      5-regex pass over the corpus.
-    *
-    * The result is materialized eagerly (localCheckpoint) so the
-    * internal signature/shingle caches can be released before returning
-    * — callers get a small, lineage-free pair set and no leaked cache
-    * entries. Pair sets are the OUTPUT of dedup (tiny vs the corpus),
-    * so eager materialization is the right default at any scale. Pass
-    * `materialize = false` for the lazy plan (plan inspection / callers
-    * that manage caching themselves — the sig cache is then theirs to
-    * release).
-    */
-  def minHashLshPairs(docs: DataFrame, idCol: String, textCol: String,
-                      shingleLen: Int = 5, numHashes: Int = 32, bands: Int = 8,
-                      threshold: Double = 0.6,
-                      preNormalized: Boolean = false,
-                      materialize: Boolean = true): DataFrame = {
-    val rows = numHashes / bands
-    val normed = if (preNormalized) col(textCol) else normalizeText(col(textCol))
-    val base = docs.select(col(idCol).as("id"), normed.as("text_norm"))
-    // sig feeds four plan branches (both sides of the band self-join + the
-    // two prefilter joins): persist so normalize+minhash run once, not
-    // four times. At cluster scale this is the standard
-    // persist-signatures step of a MinHash pipeline.
-    // sigb: the signature packed to one byte per component — the
-    // prefilter joins ship 32 bytes per side instead of 32×8 (byte
-    // false-equality adds ~(1−j)/256 to the estimate, absorbed by the
-    // prefilter margin; the exact verify decides membership anyway)
-    val sig = base.select(col("id"),
-      HashFns.minhashSig(col("text_norm"), shingleLen, numHashes).as("sig"))
-      .withColumn("sigb", HashFns.sigBytes(col("sig")))
-      .persist()
-    // sorted HASHED shingle sets → exact jaccard is one primitive-long
-    // merge pass (8 bytes/shingle through the verify joins and a
-    // one-branch comparator; string-set jaccard is identical absent
-    // 64-bit collisions — the d08 oracle anchor keeps the string
-    // kernel). NOT persisted even though the verification join reads
-    // it twice: caching the arrays deserialized costs more (memory +
-    // GC) than re-running the fused one-pass kernel.
-    val shingled = base.select(col("id"),
-      HashFns.sortedShingleHashSet(col("text_norm"), shingleLen).as("sh"))
-
-    // Cheap signature-estimate prefilter (fraction of matching minhash
-    // components ≈ jaccard, σ≈1/√k): kills the low-similarity bulk of
-    // the candidate set before the expensive exact set comparison.
-    // Margin 0.2 ≈ 2.3σ below threshold → <1% missed true pairs.
-    // raw candidates: duplicate (a,b) pairs from multi-band collisions
-    // are verified redundantly (a few %) and deduped at the END, where
-    // the set is hundreds of rows — not shuffled at candidate volume
-    val prefiltered = lshCandidatesRaw(sig, bands, rows)
-      .join(sig.select(col("id").as("doc_a"), col("sigb").as("sig_a")), "doc_a")
-      .join(sig.select(col("id").as("doc_b"), col("sigb").as("sig_b")), "doc_b")
-      .withColumn("est", HashFns.signatureMatchFractionBytes(col("sig_a"), col("sig_b")))
-      .filter(col("est") >= threshold - 0.2)
-      .select(col("doc_a"), col("doc_b"))
-
-    val lazyPairs = prefiltered
-      .join(shingled.select(col("id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(shingled.select(col("id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("jaccard", HashFns.jaccardSortedLong(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .dropDuplicates("doc_a", "doc_b")
-      .orderBy(col("doc_a"), col("doc_b"))
-    if (!materialize) lazyPairs
-    else {
-      val pairs = lazyPairs.localCheckpoint(true)
-      sig.unpersist()
-      pairs
-    }
-  }
-
-  def minHashDedup(spark: SparkSession, dir: String): DataFrame =
-    minHashLshPairs(Tables.documents(spark, dir), "doc_id", "text")
-
   /** The portable chains' banding step: band key = the signature
     * components THEMSELVES joined as a string (no engine hash — no
     * cross-value collisions), signatures carried on the band rows for
@@ -246,32 +104,13 @@ object Dedup {
       .select(col("bb.band").as("band"), col("bb.bkey").as("bkey"),
               col("id"), col("sig"))
 
-  /** [[portableBanded]] with the BYTE-PACKED signature riding instead
-    * of the 32×8-byte array — band keys still come from the exact
-    * signature slices; only the payload narrows (264 B → 32 B per band
-    * row). NOT used by the shipped chains: the two-stage form this
-    * enables was A/B'd same-JVM and REJECTED (see
-    * [[graft.functions.HashFns.sigMatchCountBytes]] and the
-    * `DebugPerf d28ab` harness, which keeps measuring it as the
-    * negative control).
-    */
-  private[graft] def portableBandedBytes(hashed: DataFrame, bands: Int,
-                                         rows: Int): DataFrame =
-    hashed.select(col("id"), HashFns.sigBytes(col("sig")).as("sigb"),
-        explode(array((0 until bands).map { b =>
-          struct(lit(b).as("band"),
-                 array_join(slice(col("sig"), b * rows + 1, rows), "-").as("bkey"))
-        }: _*)).as("bb"))
-      .select(col("bb.band").as("band"), col("bb.bkey").as("bkey"),
-              col("id"), col("sigb"))
-
   /** The shared banded candidate self-join of the portable LSH chains
     * (d03 minhash, d05 word-n-gram), WITH the hot-bucket guard — the
     * classic LSH skew killer at 100 TB: one degenerate band key
     * (boilerplate-heavy shard, adversarial low-entropy text) makes the
     * plain (band, bkey) self-join O(bucket²) IN ONE TASK, invisible at
-    * fixture scale. Unlike the candidate-dropping cap in
-    * [[lshCandidatesViaBuckets]], this guard is SEMANTICS-PRESERVING:
+    * fixture scale. Unlike a cap that drops oversized buckets, this
+    * guard is SEMANTICS-PRESERVING:
     * buckets wider than `maxBucket` are split into
     * g = ceil(size/maxBucket) groups by the type-agnostic key
     * `xxhash64(id) mod g`, and the join runs over the g×g group
@@ -286,9 +125,9 @@ object Dedup {
     * straggler. The hot-key side is broadcast — ≤ |banded|/maxBucket
     * rows by construction (hot keys are few BECAUSE they are wide).
     * The split key hashes the id rather than taking it numerically:
-    * the public chains (simHashPairs, *Portable, lshCandidatesRaw)
-    * accept STRING ids too, where a raw `id mod g` implicit-casts to
-    * null and would silently drop every hot-bucket pair — the exact
+    * the public `*Portable` chains accept STRING ids too, where a raw
+    * `id mod g` implicit-casts to null and would silently drop every
+    * hot-bucket pair — the exact
     * at-scale condition the guard exists for. The hash split balances
     * binomially (cell width concentrates at bsz/g ≤ maxBucket within
     * ~3·sqrt(maxBucket) w.h.p. — a few % at the default 10000), which
@@ -470,10 +309,9 @@ object Dedup {
   /** ENGINE-PORTABLE MinHash+LSH near-duplicate pairs — the registered
     * d03 gate, hash-checked against a DuckDB oracle that reproduces
     * every stage bit-for-bit (the t08 move applied to the full LSH
-    * pipeline). Same pipeline shape as [[minHashLshPairs]] — persist
-    * signatures, band, candidate self-join, estimate prefilter, ONE
-    * exact-jaccard verify, dedup at verified volume — but every
-    * engine-local choice swapped for a value both engines compute
+    * pipeline): persist signatures, band, candidate self-join,
+    * estimate prefilter, ONE exact-jaccard verify, dedup at verified
+    * volume — with every choice a value both engines compute
     * identically:
     *
     *  - gram hash: first 60 bits of MD5 of the codepoint 5-gram
@@ -496,17 +334,26 @@ object Dedup {
     *    on both engines (not string sets) — the ratio of the same two
     *    ints, so the final doubles are bit-identical
     *
-    * [[minHashLshPairs]] (XXH64 one-pass kernel) remains the
-    * throughput scale path, spec-pinned in `DedupSpec`; this portable
-    * variant is what CI gates, and its per-shingle cost is one MD5 +
-    * 32 fused long-ops — measured within noise of the XXH64 kernel at
-    * 10× stress density.
+    * Per-shingle cost is one MD5 + 32 fused long-ops — measured within
+    * noise of an XXH64 one-pass kernel at 10× stress density, which is
+    * why this kernel is the only MinHash implementation.
+    *
+    * @param preNormalized when true, `textCol` is already the output of
+    *                      [[graft.functions.TextFns.normalizeText]] and
+    *                      the chain is not re-applied.
+    * @param materialize   when true (the default) the pair set is
+    *                      checkpointed and the signature cache released
+    *                      before returning — callers get a small,
+    *                      lineage-free result and no leaked cache. Pass
+    *                      false for the lazy plan (plan inspection); the
+    *                      signature cache is then the caller's to release.
     */
   def minHashLshPairsPortable(docs: DataFrame, idCol: String, textCol: String,
                               shingleLen: Int = 5, numHashes: Int = 32,
                               bands: Int = 8, threshold: Double = 0.6,
                               preNormalized: Boolean = false,
-                              maxBucket: Int = 10000): DataFrame = {
+                              maxBucket: Int = 10000,
+                              materialize: Boolean = true): DataFrame = {
     val rows = numHashes / bands
     val minMatch = math.ceil((threshold - 0.2) * numHashes).toInt
     // spread the shingle+sign map side ONLY at enumeration-heavy
@@ -524,8 +371,8 @@ object Dedup {
     // one-stage exact prefilter, signatures riding the band rows. A
     // two-stage form (32-byte packed sigs on the band rows, exact
     // count re-applied in the verify join) was built and REJECTED on a
-    // same-JVM A/B (r13, `DebugPerf d28ab`): at the 16×2 density the
-    // byte pre-gate's false equalities admit the large near-threshold
+    // same-JVM A/B (r13): at the 16×2 density the byte pre-gate's
+    // false equalities admit the large near-threshold
     // (11-12-of-32) population into the dedup shuffle and the hs-array
     // verify join — 29→44s at 10×, while the 8×4 gain was ~1.2×.
     val candidates = guardedBandedSelfJoin(
@@ -533,11 +380,11 @@ object Dedup {
       // the exact count-and-compare, deliberately: an early-exit
       // `matchAtLeast` predicate was A/B'd same-JVM and REJECTED — its
       // data-dependent branches defeat the JIT on the branch-light
-      // count loop at enumeration volume (`DebugPerf d28ab`, r13)
+      // count loop at enumeration volume (r13 same-JVM A/B)
       .filter(HashFns.signatureMatchCount(col("sig_a"), col("sig_b")) >= minMatch)
       .select(col("doc_a"), col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-    val pairs = candidates
+    val lazyPairs = candidates
       .join(hashed.select(col("id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
       .join(hashed.select(col("id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
       // thresholded merge kernel: candidates provably below threshold
@@ -551,9 +398,12 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
-      .localCheckpoint(true)
-    hashed.unpersist()
-    pairs
+    if (!materialize) lazyPairs
+    else {
+      val pairs = lazyPairs.localCheckpoint(true)
+      hashed.unpersist()
+      pairs
+    }
   }
 
   def minHashDedupPortable(spark: SparkSession, dir: String): DataFrame =
@@ -646,34 +496,22 @@ object Dedup {
     val hashed = lshHashedPortable(docs, idCol, textCol)
       .withColumn("batch", lit(0L))
       .localCheckpoint(true)
-    // hashes and bands both project off the checkpointed hashed frame
-    // into disjoint directories — written CONCURRENTLY (guide §2.6: the
-    // serial order paid one full driver gap per table; overlapped, the
-    // second write's tasks back-fill the first's tail); sizes still
-    // aggregates from the written band files (the compactLshIndex
-    // pattern) so it waits for the join
-    val sizesReadback = sys.props.get("graft.sizes.readback").contains("true")
-    val lanes = Seq(
+    // hashes, bands and sizes all project off the checkpointed hashed
+    // frame into disjoint directories — written CONCURRENTLY (guide
+    // §2.6: the serial order paid one full driver gap per table;
+    // overlapped, each write's tasks back-fill the others' tails).
+    // Sizes aggregate the banding PROJECTION — bit-identical to
+    // aggregating the written band files, since the projection is a
+    // deterministic function of the checkpointed hashes
+    graft.util.Par.all(
       () => hashed.write.mode("overwrite")
-        .parquet(s"$indexDir/${tables("hashes")}"): Unit,
+        .parquet(s"$indexDir/${tables("hashes")}"),
       () => lshBandedOf(hashed)
-        .write.mode("overwrite").parquet(s"$indexDir/${tables("bands")}"): Unit) ++
-      (if (sizesReadback) Nil else Seq(
-        // sizes aggregated from the banding PROJECTION (bit-identical
-        // to aggregating the written band files — the projection is a
-        // deterministic function of the checkpointed hashes), so all
-        // three writes overlap instead of sizes waiting on the bands
-        // commit; `-Dgraft.sizes.readback=true` restores the 2-lane
-        // read-back shape for A/Bs
-        () => lshBandedOf(hashed)
-          .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz"))
-          .write.mode("overwrite")
-          .parquet(s"$indexDir/${tables("sizes")}"): Unit))
-    graft.util.Par.all(lanes: _*)
-    if (sizesReadback)
-      spark.read.parquet(s"$indexDir/${tables("bands")}")
+        .write.mode("overwrite").parquet(s"$indexDir/${tables("bands")}"),
+      () => lshBandedOf(hashed)
         .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz"))
-        .write.mode("overwrite").parquet(s"$indexDir/${tables("sizes")}")
+        .write.mode("overwrite")
+        .parquet(s"$indexDir/${tables("sizes")}"))
     GenManifest.publish(spark, indexDir, graft.util.IndexManifest(
       gen, watermark = 0L,
       meta = Map("bands" -> lshBands.toString,
@@ -824,33 +662,23 @@ object Dedup {
     def live(table: String): DataFrame =
       graft.util.Tombstones.visible(
         spark.read.parquet(m.tableDir(indexDir, table)), "id", tomb)
-    // the two visibility-filtered rewrites read and write disjoint
-    // paths — overlapped (guide §2.6), they share the maintenance
-    // window's idle cores instead of each paying its own driver gap
-    // sizes recomputed from the LIVE bands (the same visibility join
-    // the bands rewrite runs — exact, one extra broadcast-anti pass at
-    // maintenance time) so all three rewrites overlap; one agg at
-    // maintenance time buys every subsequent probe a single-partial
-    // lookup with live counts. `-Dgraft.sizes.readback=true` restores
-    // the sequential read-back-of-compacted-bands shape for A/Bs
-    val sizesReadback = sys.props.get("graft.sizes.readback").contains("true")
-    val lanes = Seq(
+    // the visibility-filtered rewrites read and write disjoint paths —
+    // overlapped (guide §2.6), they share the maintenance window's idle
+    // cores instead of each paying its own driver gap. Sizes are
+    // recomputed from the LIVE bands (the same visibility join the
+    // bands rewrite runs — exact, one extra broadcast-anti pass at
+    // maintenance time): one agg buys every subsequent probe a
+    // single-partial lookup with live counts
+    graft.util.Par.all(
       () => live("hashes").coalesce(targetFiles)
-        .write.mode("overwrite").parquet(s"$indexDir/${next("hashes")}"): Unit,
+        .write.mode("overwrite").parquet(s"$indexDir/${next("hashes")}"),
       () => live("bands").coalesce(targetFiles)
-        .write.mode("overwrite").parquet(s"$indexDir/${next("bands")}"): Unit) ++
-      (if (sizesReadback) Nil else Seq(
-        () => live("bands")
-          .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz"))
-          .coalesce(math.max(1, targetFiles / 4))
-          .write.mode("overwrite")
-          .parquet(s"$indexDir/${next("sizes")}"): Unit))
-    graft.util.Par.all(lanes: _*)
-    if (sizesReadback)
-      spark.read.parquet(s"$indexDir/${next("bands")}")
+        .write.mode("overwrite").parquet(s"$indexDir/${next("bands")}"),
+      () => live("bands")
         .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz"))
         .coalesce(math.max(1, targetFiles / 4))
-        .write.mode("overwrite").parquet(s"$indexDir/${next("sizes")}")
+        .write.mode("overwrite")
+        .parquet(s"$indexDir/${next("sizes")}"))
     // one atomic publish: new generations live, tombstone ledger folded
     GenManifest.publish(spark, indexDir,
       m.copy(gen = gen, tables = next))
@@ -887,22 +715,14 @@ object Dedup {
     // both new-generation tables derive from the persisted hashes (the
     // sizes lane re-scans + re-bands — a cheap projection of a table
     // already on local disk) and write disjoint directories: overlapped
-    // like the build/compact lanes; the toggle restores read-back
-    val sizesReadback = sys.props.get("graft.sizes.readback").contains("true")
-    val lanes = Seq(
+    // like the build/compact lanes
+    graft.util.Par.all(
       () => rebanded.coalesce(targetFiles)
-        .write.mode("overwrite").parquet(s"$indexDir/$bandsDir"): Unit) ++
-      (if (sizesReadback) Nil else Seq(
-        () => rebanded
-          .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz"))
-          .coalesce(math.max(1, targetFiles / 4))
-          .write.mode("overwrite").parquet(s"$indexDir/$sizesDir"): Unit))
-    graft.util.Par.all(lanes: _*)
-    if (sizesReadback)
-      spark.read.parquet(s"$indexDir/$bandsDir")
+        .write.mode("overwrite").parquet(s"$indexDir/$bandsDir"),
+      () => rebanded
         .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz"))
         .coalesce(math.max(1, targetFiles / 4))
-        .write.mode("overwrite").parquet(s"$indexDir/$sizesDir")
+        .write.mode("overwrite").parquet(s"$indexDir/$sizesDir"))
     GenManifest.publish(spark, indexDir, m.copy(
       gen = gen,
       meta = m.meta ++ Map("bands" -> bands.toString, "rows" -> rows.toString),
@@ -1034,16 +854,6 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  // debug accessors for tools.DebugPerf (private internals surfaced
-  // for profiling only)
-  private[graft] def lshHashedPortableDebug(docs: DataFrame): DataFrame =
-    lshHashedPortable(docs, "doc_id", "text")
-  private[graft] def lshBandedOfDebug(hashed: DataFrame): DataFrame =
-    lshBandedOf(hashed)
-  private[graft] def guardedBandedJoinDebug(left: DataFrame, right: DataFrame,
-      maxBucket: Int, rightSizes: Option[DataFrame]): DataFrame =
-    guardedBandedJoin(left, right, maxBucket, rightSizes)
-
   private[graft] def detectLshPairs(hashed: DataFrame, indexDir: String,
                                     maxBucket: Int = 10000): DataFrame = {
     val spark = hashed.sparkSession
@@ -1096,68 +906,23 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** 64-bit SimHash: custom codegen'd expression (one token-array pass;
-    * see [[graft.functions.HashFns.SimHash64]]).
-    */
-  def simhash64(toks: Column): Column = graft.functions.HashFns.simhash(toks)
-
-  /** SimHash near-dup pairs: band the 64-bit signature into 4×16-bit
-    * chunks (any pair within Hamming distance 3 shares ≥1 exact chunk —
-    * pigeonhole), then verify with bit_count(xor) <= maxHamming. The
-    * signature is 8 bytes, so it rides along in the band shuffle.
-    */
-  def simHashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, maxBucket: Int = 10000): DataFrame = {
-    // persisted: the guard's eager sizing probe + the self-join's two
-    // sides would otherwise each re-run normalize+tokenize+simhash over
-    // the corpus (the guard's documented input contract); the cached
-    // frame is 16 bytes/doc
-    val sig = docs.select(col(idCol).as("id"),
-      simhash64(tokens(normalizeText(col(textCol)))).as("sig"))
-      .persist()
-    val banded = sig.select(col("id"), col("sig"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL).as("bkey"))
-      }: _*)).as("bb"))
-      .select(col("id"), col("sig"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    // same hot-bucket guard as the minhash chains: a degenerate 16-bit
-    // band key (boilerplate-heavy shard) is the identical skew killer
-    val pairs = guardedBandedSelfJoin(banded, maxBucket)
-      // verify BEFORE deduping multi-band collisions: the hamming test
-      // is map-side (both 8-byte sigs ride the band rows), so the
-      // dedup shuffle carries only true near-dup pairs — at adversarial
-      // density the raw candidate set is orders of magnitude larger
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("doc_a", "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-      .orderBy(col("doc_a"), col("doc_b"))
-      // eager materialize + release the sig cache — the
-      // minHashLshPairs contract: the pair set is tiny, the cache is not
-      .localCheckpoint(true)
-    sig.unpersist()
-    pairs
-  }
-
-  def simHashDedup(spark: SparkSession, dir: String): DataFrame =
-    simHashPairs(Tables.documents(spark, dir), "doc_id", "text")
-
   /** ENGINE-PORTABLE SimHash near-dup pairs — the registered d04 gate,
     * hash-checked end-to-end (the d03-portable move applied to
     * SimHash). Token hash = md5-60-bit ([[graft.functions.HashFns.md5TokenHashes]]),
     * signature = 60-bit majority vote with the integer tie rule
     * 2·cnt_j > n, bands = 4×15 bits (pigeonhole still covers Hamming
     * ≤ 3), verify = bit_count(xor) ≤ 3 — every stage integer algebra
-    * DuckDB reproduces exactly. Same verify-before-dedup shuffle shape
-    * as [[simHashPairs]], which remains the XXH64 64-bit scale path.
+    * DuckDB reproduces exactly. The hamming test runs BEFORE the
+    * multi-band dedup: both 8-byte sigs ride the band rows, so the
+    * dedup shuffle carries only true near-dup pairs — at adversarial
+    * density the raw candidate set is orders of magnitude larger.
     */
   def simHashPairsPortable(docs: DataFrame, idCol: String, textCol: String,
                            maxHamming: Int = 3,
                            maxBucket: Int = 10000): DataFrame = {
-    // persisted for the same reason as [[simHashPairs]]: probe + two
-    // join sides must read a cached 16-byte/doc frame, not re-run the
-    // md5 token hashing three times
+    // persisted: the guard's eager sizing probe + the self-join's two
+    // sides must read a cached 16-byte/doc frame, not re-run the md5
+    // token hashing three times (the guard's input contract)
     val sig = docs.select(col(idCol).as("id"),
       HashFns.portableSimhash(
         HashFns.md5TokenHashCol(tokens(normalizeText(col(textCol))))).as("sig"))
@@ -1182,53 +947,10 @@ object Dedup {
   def simHashDedupPortable(spark: SparkSession, dir: String): DataFrame =
     simHashPairsPortable(Tables.documents(spark, dir), "doc_id", "text")
 
-  /** Word n-gram Jaccard near-dup: shingle (n tokens) sets compared for
-    * LSH candidates only (reuses the MinHash banding for candidate
-    * generation — exact Jaccard on word shingles as the verdict).
-    */
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, threshold: Double = 0.4): DataFrame = {
-    val base = docs.select(col(idCol).as("id"),
-      tokens(normalizeText(col(textCol))).as("toks"))
-    val numHashes = 16
-    val sig = base.select(col("id"),
-      HashFns.minhashWordSig(col("toks"), n, numHashes).as("sig"))
-      .persist()
-    // not persisted — same rationale as the char-shingle variant: the
-    // shingle expression is cheaper to re-run than to cache
-    val shingled = base.select(col("id"),
-      array_sort(wordShingles(col("toks"), n)).as("sh"))
-
-    val prefiltered = lshCandidatesRaw(sig, bands = 4, rows = 4)
-      .join(sig.select(col("id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-      .join(sig.select(col("id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-      .withColumn("est", HashFns.signatureMatchFraction(col("sig_a"), col("sig_b")))
-      .filter(col("est") >= threshold - 0.25)
-      .select(col("doc_a"), col("doc_b"))
-
-    // eager materialize + release internals — same contract as
-    // [[minHashLshPairs]]: the pair set is small, the caches are not
-    val pairs = prefiltered
-      .join(shingled.select(col("id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(shingled.select(col("id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("jaccard", HashFns.jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .dropDuplicates("doc_a", "doc_b")
-      .orderBy(col("doc_a"), col("doc_b"))
-      .localCheckpoint(true)
-    sig.unpersist()
-    pairs
-  }
-
-  def ngramJaccardDedup(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardPairs(Tables.documents(spark, dir), "doc_id", "text")
-
   /** ENGINE-PORTABLE word n-gram Jaccard near-dup pairs — the
-    * registered d05 gate, hash-checked end-to-end. Same shape as
-    * [[ngramJaccardPairs]] (which stays the XXH64 scale path) with
-    * every stage swapped portable, exactly as in
-    * [[minHashLshPairsPortable]]: n-gram hash = md5-60-bit of the
+    * registered d05 gate, hash-checked end-to-end: word n-gram sets
+    * compared for LSH candidates only, every stage portable exactly as
+    * in [[minHashLshPairsPortable]]: n-gram hash = md5-60-bit of the
     * space-joined window ([[graft.functions.HashFns.sortedPortableWordShingleHashes]]
     * mirrors `TextFns.wordShingles`' window rule), 16 mod-M61
     * permutations banded 4×4, integer ≥3-of-16 estimate prefilter
@@ -1252,7 +974,7 @@ object Dedup {
       // the exact count-and-compare, deliberately: an early-exit
       // `matchAtLeast` predicate was A/B'd same-JVM and REJECTED — its
       // data-dependent branches defeat the JIT on the branch-light
-      // count loop at enumeration volume (`DebugPerf d28ab`, r13)
+      // count loop at enumeration volume (r13 same-JVM A/B)
       .filter(HashFns.signatureMatchCount(col("sig_a"), col("sig_b")) >= minMatch)
       .select(col("doc_a"), col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
@@ -1273,7 +995,7 @@ object Dedup {
 
   /** Exact char-shingle Jaccard threshold pairs over a bounded id slice —
     * the DuckDB-checkable oracle anchor for the MinHash/LSH family:
-    * [[minHashLshPairs]] (d03) approximates exactly this semantic (same
+    * [[minHashLshPairsPortable]] (d03) approximates exactly this semantic (same
     * normalize chain, same 5-char shingle sets, same ≥-threshold pair
     * predicate), so a green hash-match here pins the family's ground
     * truth. Deliberately O(n²) over ≤`maxId` docs — the text analog of
@@ -1305,38 +1027,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** Embedding-cosine near-dup: banded random-hyperplane LSH (multi-
-    * probe — a pair is a candidate if ANY band's bit-signature matches),
-    * exact cosine verdict on candidates only. Seeded, deterministic.
-    * Recall at similarity s per band ≈ (1 - acos(s)/π)^bitsPerBand,
-    * amplified across bands; cost is bounded by bucket collision rate.
-    */
-  def embeddingNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-                            dim: Int, threshold: Double = 0.95,
-                            bands: Int = 8, bitsPerBand: Int = 6,
-                            seed: Long = 42L): DataFrame = {
-    // shared plane generator (VectorFns.hyperplanes); one fused
-    // expression emits every band key (VectorFns.bandKeys)
-    val planes = VectorFns.hyperplanes(bands, bitsPerBand, dim, seed)
-    val vecs = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val sig = vecs
-      .select(col("id"),
-        posexplode(VectorFns.bandKeys(col("v"), planes, bitsPerBand))
-          .as(Seq("band", "bkey")))
-      .select(col("band"), col("bkey"), col("id"))
-    val a = sig.select(col("band"), col("bkey"), col("id").as("id_a"))
-    val b = sig.select(col("band"), col("bkey"), col("id").as("id_b"))
-    a.join(b, Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
-      .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
-      .withColumn("cos", VectorFns.cosineSim(col("v_a"), col("v_b")))
-      .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** Connected components over near-dup pairs: assigns every doc in a
@@ -1418,21 +1108,19 @@ object Dedup {
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
-  def embeddingNearDup(spark: SparkSession, dir: String): DataFrame =
-    embeddingNearDupPairs(Tables.embeddings(spark, dir), "vec_id", "embedding",
-      dim = 64, threshold = 0.25)
-
-  /** ENGINE-PORTABLE embedding near-dup — the registered d06 gate.
-    * Same pipeline as [[embeddingNearDupPairs]] with the two
-    * engine-local pieces swapped portable: hyperplanes are md5-derived
+  /** ENGINE-PORTABLE embedding near-dup — the registered d06 gate:
+    * banded random-hyperplane LSH (multi-probe — a pair is a candidate
+    * if ANY band's bit-signature matches), exact cosine verdict on
+    * candidates only. Recall at similarity s per band ≈
+    * (1 - acos(s)/π)^bitsPerBand, amplified across bands; cost is
+    * bounded by bucket collision rate. Hyperplanes are md5-derived
     * Rademacher ±1 vectors ([[graft.functions.VectorFns.rademacherBandKeys]]
     * — DuckDB derives the identical sign table from
     * `md5(b||'-'||j||'-'||i)`, and ±1 projections are signed sums both
     * engines accumulate identically in doubles), and the output is the
     * verified PAIR SET (ids only, the e03 oracle convention — the
     * cosine stays internal to the threshold predicate, where both
-    * engines agree at fixture margins). The Gaussian-hyperplane kernel
-    * stays the spec'd scale path.
+    * engines agree at fixture margins).
     */
   def embeddingNearDupPairsPortable(emb: DataFrame, idCol: String, vecCol: String,
                                     dim: Int, threshold: Double = 0.25,
@@ -1625,8 +1313,8 @@ object Dedup {
                            k: Int = 40, stride: Int = 10, minDocs: Int = 2): DataFrame = {
     // the span stream is deliberately re-derived on both branches
     // rather than persisted: spans are many short strings per row, and
-    // caching that shape deserialized was measured (shingle variant,
-    // [[minHashLshPairs]]) to cost more in memory+GC than re-running
+    // caching that shape deserialized was measured (on shingle sets)
+    // to cost more in memory+GC than re-running
     // the fused per-row expressions — the double map-side pass wins.
     val spans = spanExploded(docs, idCol, textCol, k, stride)
     val dups = substringDupSpans(docs, idCol, textCol, k, stride, minDocs)
@@ -1899,88 +1587,6 @@ object Dedup {
 
   // — semantic dedup via embedding clustering (d17) —
 
-  /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
-    * k-means-cluster the embedding space (bounded cosine-metric training
-    * sample — the [[graft.operators.Similarity.kmeansIvfTopK]] build),
-    * then WITHIN each cluster greedily keep the lowest-id vector of every
-    * semantic neighborhood: a vector is dropped iff its cosine to an
-    * already-kept vector of the same cluster is ≥ `threshold`.
-    *
-    * This is the capability LSH near-dup (d06) cannot express: LSH finds
-    * PAIRS above a similarity floor; SemDeDup prunes REDUNDANCY — one
-    * survivor per semantic neighborhood — which is how web-scale image/
-    * text corpora are thinned for training efficiency.
-    *
-    * Scale shape: centroids train on a bounded sample and ride into
-    * codegen as literals; assignment is one map-only expression pass; the
-    * corpus shuffles ONCE on cell id; the greedy sweep is sequential only
-    * WITHIN a cluster (exactly as in the paper) and parallel across them.
-    * A cluster holds ≈ |corpus|/nCells rows — at 100 TB, nCells scales
-    * with the corpus (SemDeDup uses 50k clusters for LAION) so per-group
-    * state stays bounded; the sweep's comparison partner set is only the
-    * KEPT representatives, which the threshold keeps far below the
-    * cluster size on redundant data.
-    */
-  def semanticDedupKeep(emb: DataFrame, idCol: String, vecCol: String,
-                        threshold: Double = 0.4, nCells: Int = 16,
-                        seed: Long = 42L, trainFraction: Double = 0.25): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val spark = emb.sparkSession
-    import spark.implicits._
-    // nCells == 1 degenerates to a single global sweep (the brute-force
-    // reference shape, and what specs pin the sweep against) — MLlib
-    // KMeans rejects k < 2, and training would be pointless anyway
-    val assigned =
-      if (nCells == 1)
-        emb.select(col(idCol).as("id"), col(vecCol).as("v"), lit(1).as("cell"))
-      else {
-        // Zero-norm (or denormal-underflow) vectors make cosine distance
-        // undefined and the KMeans fit THROW; the sweep side tolerates
-        // them (cosineScalar returns 0) but the trainer must not see
-        // them. aggregate-of-squares > 0 filters map-side.
-        val train = emb.sample(withReplacement = false, trainFraction, seed)
-          .where(expr(s"aggregate($vecCol, 0D, (a, x) -> a + double(x) * double(x)) > 0"))
-          .select(array_to_vector(col(vecCol)).as("features"))
-        val model = new KMeans().setK(nCells).setSeed(seed).setMaxIter(10)
-          .setDistanceMeasure("cosine")
-          .setFeaturesCol("features").fit(train)
-        val centroids = model.clusterCenters.map(_.toArray.map(_.toFloat))
-        emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-          .withColumn("sims", graft.functions.VectorFns.centroidSimsCol(col("v"), centroids))
-          .withColumn("cell", expr("array_position(sims, array_max(sims))").cast("int"))
-      }
-    val cells = assigned
-      .select(col("id").cast("long").as("id"), col("v"), col("cell"))
-      .as[(Long, Array[Float], Int)]
-    cells.groupByKey(_._3)
-      .flatMapGroups { (cell: Int, rows: Iterator[(Long, Array[Float], Int)]) =>
-        // deterministic sweep order = ascending id (the paper keeps one
-        // representative per neighborhood; WHICH one is policy — lowest
-        // id matches the d01/d09 keeper convention)
-        val sorted = rows.toArray.sortBy(_._1)
-        val kept = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-        val cos = graft.functions.VectorFns.cosineScalar _
-        sorted.foreach { case (id, v, _) =>
-          if (!kept.exists(kv => cos(kv, v) >= threshold)) {
-            kept += v
-            out += ((id, cell))
-          }
-        }
-        out
-      }
-      .toDF("vec_id", "cell")
-  }
-
-  /** The float-MLlib d17 kernel (cosine k-means cells + float-cosine
-    * sweep) — since r8 the spec'd scale path behind the portable
-    * registered gate; the greedy-sweep semantics are spec-verified
-    * against a brute-force reference on a planted corpus.
-    */
-  def semanticDedup(spark: SparkSession, dir: String): DataFrame =
-    semanticDedupKeep(Tables.embeddings(spark, dir), "vec_id", "embedding")
-      .orderBy(col("vec_id"))
 
   /** d17 PORTABLE similarity floor: a pair is "same neighborhood" iff
     * the integer dot of its floor(nv·2^20)-quantized L2-normalized
@@ -1992,9 +1598,13 @@ object Dedup {
     */
   val semanticTauInt = 439804651110L
 
-  /** d17 (registered gate since r8): PORTABLE SemDeDup — the same
-    * cluster-then-sweep shape with every decision an integer
-    * comparison, so the survivor set hash-checks:
+  /** d17: SemDeDup-style semantic dedup (Abbas et al. 2023,
+    * arXiv:2303.09540): cluster the embedding space, then WITHIN each
+    * cluster greedily keep the lowest-id vector of every semantic
+    * neighborhood. This is the capability LSH near-dup (d06) cannot
+    * express: LSH finds PAIRS above a similarity floor; SemDeDup prunes
+    * REDUNDANCY — one survivor per neighborhood. Every decision is an
+    * integer comparison, so the survivor set hash-checks:
     *
     *  - cells = the e06 fixed-point integer Lloyd over
     *    floor(x·2^20)-quantized RAW components
@@ -2007,10 +1617,11 @@ object Dedup {
     * The oracle reproduces the sweep with a RECURSIVE CTE carrying
     * the kept-id list per cell (kept ids are strictly increasing, so
     * each round appends the smallest id above the last kept that is
-    * not adjacent to any kept — exactly the sequential sweep). The
-    * float cosine-k-means kernel ([[semanticDedupKeep]]) stays the
-    * spec'd scale path. Same scale shape: one cell shuffle, sweep
-    * sequential only within a cell, parallel across cells.
+    * not adjacent to any kept — exactly the sequential sweep). Scale
+    * shape: one cell shuffle, sweep sequential only within a cell,
+    * parallel across cells; a cell holds ≈ |corpus|/nCells rows, so
+    * nCells scales with the corpus (SemDeDup uses 50k clusters for
+    * LAION) and per-group state stays bounded.
     */
   def semanticDedupPortable(emb: DataFrame, idCol: String, vecCol: String,
                             tauInt: Long = semanticTauInt,

@@ -15,10 +15,15 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *    the corpus scan: one pass, no shuffle of the corpus, per-query
   *    heap via TakeOrdered-style window ranking. This is the oracle and
   *    is the right plan whenever |queries| is small.
-  *  - `lshTopK` — random-hyperplane LSH: corpus and queries signed into
-  *    multi-probe band buckets; candidates joined on bucket key; exact
-  *    cosine re-ranks candidates. Scale path: corpus shuffles once on
-  *    bucket key (bounded buckets), never O(n²).
+  *  - `lshTopKPortable` — random-hyperplane LSH: corpus and queries
+  *    signed into multi-probe band buckets; candidates joined on bucket
+  *    key; exact cosine re-ranks candidates. Scale path: corpus
+  *    shuffles once on bucket key (bounded buckets), never O(n²).
+  *
+  * The trained indexes (IVF, PQ, IVF+PQ, filtered IVF, the persisted
+  * index) and MMR exist once each, as the fixed-point kernel the DuckDB
+  * oracle reproduces. e12's adaptive kNN join is the one float path,
+  * anchored to its hash-checked e17 twin.
   */
 object Similarity {
 
@@ -46,57 +51,19 @@ object Similarity {
     bruteForceTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
   }
 
-  /** LSH-bucketed ANN: `bands` independent hyperplane signatures of
-    * `bitsPerBand` bits each (multi-probe: a pair is a candidate if ANY
-    * band matches). Candidates re-ranked by exact cosine; recall grows
-    * with bands, cost with bucket collision rate.
-    */
-  def lshTopK(corpus: DataFrame, queries: DataFrame,
-              idCol: String, vecCol: String, dim: Int, k: Int,
-              bands: Int = 8, bitsPerBand: Int = 8, seed: Long = 42L): DataFrame = {
-    // flat band-major plane list (shared generator — see
-    // VectorFns.hyperplanes); ALL band keys come out of one fused
-    // expression pass (VectorFns.bandKeys)
-    val planes = VectorFns.hyperplanes(bands, bitsPerBand, dim, seed)
-    def keysOf(v: org.apache.spark.sql.Column) =
-      VectorFns.bandKeys(v, planes, bitsPerBand)
-
-    // band on ids only — vectors never enter the LSH shuffle; they are
-    // re-joined by id for the exact re-rank (query side broadcastable).
-    val cVecs = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val qVecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v"))
-      .select(col("neighbor_id"), posexplode(keysOf(col("v"))).as(Seq("band", "bkey")))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("v"))
-      .select(col("query_id"), posexplode(keysOf(col("v"))).as(Seq("band", "bkey")))
-
-    val candidates = c.join(broadcast(q), Seq("band", "bkey"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"))
-      .dropDuplicates("query_id", "neighbor_id")
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    candidates
-      .join(broadcast(qVecs), "query_id")
-      .join(cVecs, "neighbor_id")
-      .withColumn("cos", VectorFns.cosineSim(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"), col("neighbor_id"), col("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** ENGINE-PORTABLE LSH top-k — the registered e02 gate. Same
-    * band-on-ids/re-join-by-id shape as [[lshTopK]] with the two
-    * engine-local pieces swapped portable (the d06 move): band keys
+  /** ENGINE-PORTABLE LSH top-k — the registered e02 gate. `bands`
+    * independent hyperplane signatures of `bitsPerBand` bits each
+    * (multi-probe: a pair is a candidate if ANY band matches); recall
+    * grows with bands, cost with bucket collision rate. Banding runs on
+    * ids only — vectors never enter the LSH shuffle; they re-join by id
+    * for the exact re-rank (query side broadcastable). Band keys come
     * from md5-derived Rademacher ±1 hyperplanes
     * ([[graft.functions.VectorFns.rademacherBandKeys]] — bit-identical
     * sign sums on both engines), and the output is (query_id, rank,
     * neighbor_id) — the e01 oracle convention, whose green hash-match
     * already proves cross-engine cosine ORDERING agreement on this
-    * fixture; the cosine value itself never surfaces. The Gaussian
-    * kernel stays the spec'd scale path (e08 recall-audits both).
+    * fixture; the cosine value itself never surfaces. e08 audits its
+    * recall.
     */
   def lshTopKPortable(corpus: DataFrame, queries: DataFrame,
                       idCol: String, vecCol: String, dim: Int, k: Int,
@@ -127,14 +94,14 @@ object Similarity {
 
   /** Largest corpus [[cosinePairsExact]] will accept: beyond this the
     * O(n²) pair count stops being a "small-corpus oracle" and the LSH
-    * path ([[graft.operators.Dedup.embeddingNearDupPairs]]) is the only
+    * path ([[graft.operators.Dedup.embeddingNearDupPairsPortable]]) is the only
     * sane plan. 50k rows ⇒ ~1.25G candidate pairs, the outer edge of
     * what a nested-loop join finishes in minutes on one box.
     */
   val maxExactPairRows: Long = 50000L
 
   /** Exact all-pairs cosine threshold join — the O(n²) baseline that
-    * [[graft.operators.Dedup.embeddingNearDupPairs]] approximates at
+    * [[graft.operators.Dedup.embeddingNearDupPairsPortable]] approximates at
     * scale. Kept as the oracle path (and for corpora small enough to
     * broadcast one side). Guarded: fails fast if the corpus exceeds
     * [[maxExactPairRows]] instead of silently launching an n² join —
@@ -147,7 +114,7 @@ object Similarity {
     val n = emb.limit((maxExactPairRows + 1).toInt).count()
     require(n <= maxExactPairRows,
       s"cosinePairsExact is the small-corpus O(n²) oracle baseline; corpus has " +
-        s"> $maxExactPairRows rows. Use Dedup.embeddingNearDupPairs (LSH) at scale.")
+        s"> $maxExactPairRows rows. Use Dedup.embeddingNearDupPairsPortable (LSH) at scale.")
     val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("v_a"))
     val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("v_b"))
     a.crossJoin(b)
@@ -157,67 +124,9 @@ object Similarity {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** IVF (inverted-file) ANN: partition the corpus into cells around
-    * `nCells` seeded sample centroids (one assignment pass — argmax
-    * cosine against broadcast-inlined centroids), probe each query's
-    * `nProbe` nearest cells, exact re-rank within the probed cells.
-    *
-    * Scale shape: corpus shuffles once on cell id (bounded cells ≈
-    * |corpus|/nCells); a query touches nProbe/nCells of the data. The
-    * cell assignment is a pure per-row expression — centroids ride into
-    * codegen as literals, no shuffle, no model object.
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              nCells: Int = 16, nProbe: Int = 4, seed: Long = 42L): DataFrame = {
-    // deterministic centroids: a seeded pseudo-sample of corpus rows
-    val sample = corpus.select(col(idCol).as("cid"), col(vecCol).as("cv"))
-      .orderBy(xxhash64(col("cid"), lit(seed)))
-      .limit(nCells)
-      .collect()
-      .map(r => r.getSeq[Float](1).toArray)
-    ivfTopKWithCentroids(corpus, queries, idCol, vecCol, k, sample, nProbe)
-  }
-
-  /** IVF with TRAINED centroids: Lloyd-iterated k-means (Spark MLlib —
-    * part of the Spark distribution, each iteration one map-side
-    * partial-sum pass + tiny driver update) instead of the sampled
-    * seeds of [[ivfTopK]]. Trained cells track the data distribution,
-    * so cell populations are balanced and probing nProbe cells recovers
-    * more true neighbors at the same cost — the index-BUILD/index-QUERY
-    * split every vector store at scale uses (train once on a sample,
-    * assign the full corpus with the frozen centroids).
-    */
-  def kmeansIvfTopK(corpus: DataFrame, queries: DataFrame,
-                    idCol: String, vecCol: String, k: Int,
-                    nCells: Int = 16, nProbe: Int = 4, seed: Long = 42L,
-                    trainFraction: Double = 0.25): DataFrame = {
-    val centroids = trainCentroids(corpus, vecCol, nCells, seed, trainFraction)
-    ivfTopKWithCentroids(corpus, queries, idCol, vecCol, k, centroids, nProbe)
-  }
-
-  /** Lloyd-iterated k-means centroid training on a bounded sample (an
-    * index build must not Lloyd-iterate over the full 100 TB corpus),
-    * with the SAME metric the probe side uses — euclidean-trained cells
-    * are magnitude-skewed and would not be cosine-coherent.
-    */
-  private[graft] def trainCentroids(corpus: DataFrame, vecCol: String,
-                                    nCells: Int, seed: Long,
-                                    trainFraction: Double): Array[Array[Float]] = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val train = corpus.sample(withReplacement = false, trainFraction, seed)
-      .select(array_to_vector(col(vecCol)).as("features"))
-    val model = new KMeans().setK(nCells).setSeed(seed).setMaxIter(10)
-      .setDistanceMeasure("cosine")
-      .setFeaturesCol("features").fit(train)
-    model.clusterCenters.map(_.toArray.map(_.toFloat))
-  }
-
-  /** Shared IVF cell-assign / multi-probe / exact-re-rank machinery —
-    * centroids arrive as plain arrays and ride into codegen as
-    * literals, so assignment stays a fused map-only expression whether
-    * the centroids were sampled or trained.
+  /** IVF cell-assign / multi-probe / exact-re-rank over float
+    * centroids — centroids arrive as plain arrays and ride into codegen
+    * as literals, so assignment stays a fused map-only expression.
     */
   private[graft] def ivfTopKWithCentroids(corpus: DataFrame, queries: DataFrame,
                                           idCol: String, vecCol: String, k: Int,
@@ -230,9 +139,7 @@ object Similarity {
   /** Frozen-centroid cell assignment: argmax-similarity cell per corpus
     * row → `(neighbor_id, c_vec, cell)`. A pure per-row expression —
     * centroids ride into codegen as literals, no shuffle, no model
-    * object — so it serves both the in-memory path and the persisted
-    * index build/append (the full-corpus assignment pass of every
-    * production vector store).
+    * object.
     */
   private def assignCells(corpus: DataFrame, idCol: String, vecCol: String,
                           centroids: Array[Array[Float]]): DataFrame =
@@ -242,8 +149,7 @@ object Similarity {
       .drop("sims")
 
   /** Multi-probe + exact re-rank over an ALREADY-ASSIGNED corpus
-    * (`(neighbor_id, c_vec, cell)` — fresh from [[assignCells]] or
-    * loaded from a persisted index).
+    * (`(neighbor_id, c_vec, cell)` from [[assignCells]]).
     */
   private def probeAssigned(cCells: DataFrame, queries: DataFrame,
                             idCol: String, vecCol: String, k: Int,
@@ -292,17 +198,18 @@ object Similarity {
     cosineRange(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", minCos = 0.3)
   }
 
-  def knnIvf(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    ivfTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-  }
-
-  /** ENGINE-PORTABLE IVF — the registered e04 gate. The machinery is
-    * [[ivfTopKWithCentroids]] unchanged (first-max cell assignment,
+  /** ENGINE-PORTABLE IVF (inverted-file) ANN — the registered e04
+    * gate: partition the corpus into cells around `nCells` sample
+    * centroids (one assignment pass — argmax cosine against
+    * broadcast-inlined centroids), probe each query's `nProbe` nearest
+    * cells, exact re-rank within the probed cells. The corpus shuffles
+    * once on cell id (cells ≈ |corpus|/nCells); a query touches
+    * nProbe/nCells of the data. The machinery is
+    * [[ivfTopKWithCentroids]] (first-max cell assignment,
     * (−sim, idx) probe order, exact-cosine re-rank — every rule DuckDB
-    * reproduces with window functions); the ONE engine-local piece,
-    * centroid selection by xxhash sample order, becomes the md5-60-bit
-    * hash order both engines compute (tie-broken by id), and the
+    * reproduces with window functions); centroids are the first
+    * `nCells` rows in the md5-60-bit hash order both engines compute
+    * (tie-broken by id), and the
     * output drops the cosine column (the e01/e02 ids+rank convention —
     * ordering agreement is what e01's green hash-match proves).
     */
@@ -321,11 +228,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"))
   }
 
-  def knnIvfKmeans(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    kmeansIvfTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-  }
-
   // — e06 (registered gate): trained IVF whose TRAINING is itself
   //   engine-portable — Lloyd's algorithm in FIXED-POINT INTEGER
   //   arithmetic. Components quantize to floor(x·2^20) longs; every
@@ -337,9 +239,7 @@ object Similarity {
   //   what lets a DuckDB CTE chain reproduce the WHOLE pipeline
   //   (train → assign → probe → exact-cosine re-rank) bit-for-bit,
   //   converting the one family that was rows-only "because k-means"
-  //   into a hash-checked gate. The float MLlib kernel
-  //   ([[kmeansIvfTopK]]) stays as the spec'd scale path; recall of
-  //   the registered path is audited in e08.
+  //   into a hash-checked gate. Recall is audited in e08.
   //
   //   Scale shape: training runs `iters` bounded jobs over the train
   //   set — cell assignment is one fused codegen'd expression pass
@@ -347,8 +247,7 @@ object Similarity {
   //   combinable groupBy(cell, dim) collecting only nCells·dim longs
   //   to the driver. At 100 TB the train set is the md5-smallest-M
   //   rows (the q84 bounded-top-k trick — still deterministic, still
-  //   oracle-reproducible); the full-corpus pass is assignment only,
-  //   exactly like the MLlib path. —
+  //   oracle-reproducible); the full-corpus pass is assignment only. —
 
   /** 2^20: float→double widening then a power-of-two multiply is
     * exact, and floor agrees across engines on exact doubles.
@@ -372,16 +271,14 @@ object Similarity {
     * `nCells` vectors (e04's portable seed order), then `iters` rounds
     * of integer assign/update. Empty cells keep their previous
     * centroid. Returns the trained centroids as plain long arrays —
-    * they inline into codegen downstream exactly like the float paths.
+    * they inline into codegen downstream as literals.
     */
   private[graft] def trainCentroidsFixedPoint(qemb0: DataFrame, idCol: String,
                                               nCells: Int, iters: Int): Array[Array[Long]] = {
     // materialize the quantized train set once: the seed collect and
     // every Lloyd round below re-scanned + re-quantized the parquet
-    // otherwise (iters+1 passes); `-Dgraft.ivf.nockpt=true` A/Bs it
-    val qemb =
-      if (sys.props.get("graft.ivf.nockpt").contains("true")) qemb0
-      else qemb0.localCheckpoint(true)
+    // otherwise (iters+1 passes)
+    val qemb = qemb0.localCheckpoint(true)
     val seeds = qemb
       .orderBy(expr(s"cast(conv(substr(md5(cast(cast($idCol as string) as binary)), 1, 15), 16, 10) as bigint)"),
         col(idCol))
@@ -496,9 +393,8 @@ object Similarity {
   //   per-row function of the centroids), query loads and probes.
   //   Because every stored artifact is integer-derived, the WHOLE
   //   build→append→load→query cycle hash-checks against the e06 CTE
-  //   chain restricted to base-slice training — the float-MLlib
-  //   persisted path ([[knnPersisted]]) stays as the spec'd scale
-  //   path, and s13's streaming maintenance keeps exercising it. —
+  //   chain restricted to base-slice training; s13's streaming
+  //   maintenance drives the same index. —
 
   /** Write one complete IVF generation (train + assign `corpus`) under
     * `indexDir` at generation `gen`, returning the table→directory map
@@ -595,17 +491,21 @@ object Similarity {
   }
 
 
-  // — e07 (registered gate): PQ with FIXED-POINT integer training,
-  //   encoding, and ADC scoring — the e06 integer-Lloyd discipline
-  //   applied per subspace. Vectors L2-normalize (sequential double
+  // — e07 (registered gate): PQ-compressed ANN
+  //   ([[graft.functions.Pq]]) — the memory-bound scale path: the
+  //   corpus is encoded to m=8 byte subcodes (a 32× payload reduction
+  //   from the 64-float vectors) and queries scan CODES, not vectors,
+  //   via the fused asymmetric-distance (ADC) kernel; an exact cosine
+  //   re-rank on the shortlist makes quantization cost recall only,
+  //   never final ordering. Training, encoding and ADC scoring are
+  //   FIXED-POINT integer — the e06 integer-Lloyd discipline applied
+  //   per subspace. Vectors L2-normalize (sequential double
   //   accumulation both engines share), cast to float, quantize to
   //   floor(nv·2^20) longs; per-subspace codebooks train on the
   //   md5-smallest `sampleN` rows driver-side in pure integer
-  //   arithmetic (bounded sample — the training cost model of the
-  //   float path, unchanged); codes and ADC tables are integer
+  //   arithmetic (a bounded sample); codes and ADC tables are integer
   //   kernels, so the shortlist is bit-reproducible; the exact-cosine
-  //   re-rank is the e01/e04 convention. The float MLlib-style kernel
-  //   ([[pqTopK]]) stays the spec'd scale path. —
+  //   re-rank is the e01/e04 convention. —
 
   val pqSampleN = 256
   val pqIters = 3
@@ -755,16 +655,19 @@ object Similarity {
     s"WHERE rank <= $k ORDER BY query_id, rank"
   }
 
-
-  // — e15 (registered gate): the IVF+PQ composite with BOTH trained
+  // — e15 (registered gate): the IVF+PQ composite (the FAISS-IVFPQ
+  //   index shape) with BOTH trained
   //   structures fixed-point — coarse cells from the e06 integer
   //   Lloyd over raw quantized components, per-subspace PQ codebooks
   //   from the e07 integer Lloyd over normalized quantized components.
   //   The two savings still multiply (probed cells bound WHICH rows,
   //   byte codes bound WHAT each row costs) and now the whole
   //   index — cells, codes, ADC shortlist — hash-checks against one
-  //   composite CTE chain. Float kernels ([[ivfPqTopK]]) stay the
-  //   spec'd scale path. —
+  //   composite CTE chain. One global codebook over L2-normalized
+  //   vectors rather than per-cell residual codebooks: residual
+  //   encoding is the recall upgrade a production build adds, and it
+  //   changes only the encode/ADC inputs, not this operator's join
+  //   shape. —
 
   def ivfPqTopKFixedPoint(corpus: DataFrame, queries: DataFrame,
                           idCol: String, vecCol: String, k: Int,
@@ -1287,81 +1190,6 @@ object Similarity {
     */
   val indexBaseSplit = 400
 
-  /** PERSISTED IVF index — the build-once/load-many split of a real
-    * vector store (e06 trains per call; a 100 TB deployment cannot).
-    * `buildIvfIndex` trains centroids on a bounded sample of the base
-    * corpus and writes TWO parquet tables under `indexDir`:
-    * `centroids` (cell → vector, tiny) and `assignments`
-    * (neighbor_id, c_vec, cell — the inverted lists, one row per
-    * corpus vector, partitioned by nothing: readers prune by the
-    * `cell` predicate pushed to parquet). [[appendIvfIndex]] assigns
-    * NEW rows with the FROZEN centroids and appends — the vector
-    * analog of d21's incremental dedup: per-batch cost scales with the
-    * delta, the historical corpus is never rescanned or re-trained.
-    * [[queryIvfIndex]] loads the frozen index and runs the same
-    * multi-probe + exact re-rank as the in-memory path, so loaded ≡
-    * fresh is a strict equality (the spec pins it).
-    */
-  def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                    indexDir: String, nCells: Int = 16, seed: Long = 42L,
-                    trainFraction: Double = 0.25): Unit = {
-    val spark = corpus.sparkSession
-    val centroids = trainCentroids(corpus, vecCol, nCells, seed, trainFraction)
-    import spark.implicits._
-    // cell ids are 1-based to match array_position in the assign/probe
-    centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i + 1, c.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1) // 16 rows — one tiny footer, not 32
-      .write.mode("overwrite").parquet(s"$indexDir/centroids")
-    assignCells(corpus, idCol, vecCol, centroids)
-      .write.mode("overwrite").parquet(s"$indexDir/assignments")
-  }
-
-  /** Incremental index maintenance: assign `rows` with the FROZEN
-    * stored centroids, append to the assignment lists. Increment ≡
-    * rebuild-with-same-centroids by construction (assignment is a pure
-    * per-row function of the centroids).
-    */
-  def appendIvfIndex(rows: DataFrame, idCol: String, vecCol: String,
-                     indexDir: String): Unit =
-    assignCells(rows, idCol, vecCol, loadCentroids(rows.sparkSession, indexDir))
-      .write.mode("append").parquet(s"$indexDir/assignments")
-
-  private[graft] def loadCentroids(spark: SparkSession,
-                                   indexDir: String): Array[Array[Float]] =
-    spark.read.parquet(s"$indexDir/centroids")
-      .select(col("cell"), col("centroid"))
-      .collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Float](1).toArray)
-
-  /** Query the frozen on-disk index: centroids collect to the driver
-    * (bounded — nCells rows) and inline into codegen exactly as in the
-    * in-memory path; the assignment lists stream from parquet.
-    */
-  def queryIvfIndex(spark: SparkSession, indexDir: String, queries: DataFrame,
-                    idCol: String, vecCol: String, k: Int,
-                    nProbe: Int = 4): DataFrame = {
-    val centroids = loadCentroids(spark, indexDir)
-    val cCells = spark.read.parquet(s"$indexDir/assignments")
-    probeAssigned(cCells, queries, idCol, vecCol, k, centroids, nProbe)
-  }
-
-  /** e13: build the index on the base slice, incrementally append the
-    * delta, answer top-k from the LOADED index — end-to-end proof that
-    * the persisted build/append/query cycle matches the in-memory
-    * engine (rows-only gate: k-means centroids are engine-specific;
-    * the loaded≡fresh and recall anchors live in `SimilaritySpec`).
-    */
-  def knnPersisted(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val idxDir = graft.util.Scratch.dir(spark, "e13_idx", dir).toString
-    buildIvfIndex(emb.filter(col("vec_id") < indexBaseSplit), "vec_id", "embedding", idxDir)
-    appendIvfIndex(emb.filter(col("vec_id") >= indexBaseSplit), "vec_id", "embedding", idxDir)
-    queryIvfIndex(spark, idxDir, emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-  }
-
   /** L2-normalize the `vecCol` of `df` into `outCol` (unit vectors make
     * squared-L2 ordering identical to cosine ordering:
     * ‖a−b‖² = 2 − 2·cos). The norm is PROJECTED once per row before the
@@ -1380,154 +1208,6 @@ object Similarity {
           .otherwise(transform(vecCol, x => (x / col("__nrm")).cast("float"))))
       .drop("__nrm")
 
-  /** e07: PQ-compressed ANN ([[graft.functions.Pq]]) — the memory-bound
-    * scale path: after a driver-side codebook training pass on a
-    * bounded sample, the corpus is encoded to m=8 subcodes (8 ints;
-    * conceptually 4 bits each at k=16 — a 32× payload reduction from
-    * the 64-float vectors), and queries scan CODES, not vectors, via
-    * the fused asymmetric-distance kernel. Vectors are normalized
-    * before encode so the ADC L2 ordering agrees with the cosine
-    * criterion; the exact cosine re-rank on a 4k-deep shortlist makes
-    * quantization cost recall only (asserted in spec), never final
-    * ordering correctness.
-    */
-  def pqTopK(corpus: DataFrame, queries: DataFrame,
-             idCol: String, vecCol: String, k: Int,
-             m: Int = 8, codebookK: Int = 16, shortlistFactor: Int = 4,
-             sampleN: Int = 1000, seed: Long = 42L): DataFrame = {
-    val normed = withL2Normalized(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("v")),
-      col("v"), "nv").select(col("neighbor_id"), col("nv"))
-    val sample = normed
-      .orderBy(xxhash64(col("neighbor_id"), lit(seed)))
-      .limit(sampleN)
-      .collect().map(_.getSeq[Float](1).toArray)
-    val cb = graft.functions.Pq.train(sample, m, codebookK)
-    // the corpus's float payload stops here: only (id, m code bytes)
-    // flows into the scan
-    val codes = normed.select(col("neighbor_id"),
-      graft.functions.Pq.encodeCol(col("nv"), cb).as("code"))
-    // the per-query ADC table is fused ONCE on the broadcast query
-    // side; the hot corpus path does m lookups per code
-    val q = withL2Normalized(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("v")),
-      col("v"), "q_vec")
-      .select(col("query_id"),
-        graft.functions.Pq.adcTableCol(col("q_vec"), cb).as("adc_table"))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc"), col("neighbor_id"))
-    // ids only through the shortlist shuffle — vectors re-join by id
-    // afterwards (the lshTopK pattern)
-    val short = codes.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc",
-        // stride by the TRAINED center count (train caps k at the
-        // sample size), not the requested codebookK — a small sample
-        // would otherwise misalign every table lookup
-        graft.functions.Pq.adcLookupCol(col("adc_table"), col("code"), cb(0).length))
-      .select(col("query_id"), col("neighbor_id"), col("adc"))
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= k * shortlistFactor)
-      .select(col("query_id"), col("neighbor_id"))
-    val vecs = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val qVecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    short.join(vecs, Seq("neighbor_id"))
-      .join(broadcast(qVecs), Seq("query_id"))
-      .withColumn("cos", VectorFns.cosineSim(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  def knnPq(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    pqTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-  }
-
-  /** e15: IVF+PQ composite — the FAISS-IVFPQ index shape and the one
-    * every billion-vector deployment actually runs: a coarse k-means
-    * cell assignment bounds WHICH rows a query touches (nProbe/nCells
-    * of the corpus) while PQ codes bound WHAT each touched row costs
-    * (m byte-lookups instead of a d-float dot) — the two savings
-    * multiply. Candidate scan = codes ⋈ broadcast(query × probed
-    * cell) on cell id: the only corpus-wide data motion is the one-off
-    * shuffle on cell id at build time; at query time the per-cell code
-    * lists are pruned join partitions. ADC shortlist → exact cosine
-    * re-rank by id re-join, so compression costs recall only, never
-    * final-order correctness (the pqTopK invariant).
-    *
-    * Simplification vs the paper: ONE global codebook over L2-
-    * normalized vectors rather than per-cell residual codebooks —
-    * residual encoding is the recall upgrade a production build adds,
-    * and it changes only the encode/ADC inputs (v − centroid), not
-    * this operator's join shape.
-    */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame,
-                idCol: String, vecCol: String, k: Int,
-                nCells: Int = 16, nProbe: Int = 4,
-                m: Int = 8, codebookK: Int = 16, shortlistFactor: Int = 4,
-                sampleN: Int = 1000, seed: Long = 42L,
-                trainFraction: Double = 0.25): DataFrame = {
-    val centroids = trainCentroids(corpus, vecCol, nCells, seed, trainFraction)
-
-    // build side: cell-assign, then swap the float payload for PQ codes
-    val normed = withL2Normalized(
-      assignCells(corpus, idCol, vecCol, centroids), col("c_vec"), "nv")
-      .select(col("neighbor_id"), col("cell"), col("nv"))
-    val sample = normed
-      .orderBy(xxhash64(col("neighbor_id"), lit(seed)))
-      .limit(sampleN)
-      .collect().map(_.getSeq[Float](2).toArray)
-    val cb = graft.functions.Pq.train(sample, m, codebookK)
-    val codes = normed.select(col("neighbor_id"), col("cell"),
-      graft.functions.Pq.encodeCol(col("nv"), cb).as("code"))
-
-    // query side: nProbe cells per query + one fused ADC table
-    def centroidSims(v: Column): Column = VectorFns.centroidSimsCol(v, centroids)
-    val q = withL2Normalized(
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("v")),
-      col("v"), "q_nv")
-      .withColumn("sims", centroidSims(col("v")))
-      .withColumn("ranked", expr(
-        "transform(array_sort(zip_with(sims, sequence(1, size(sims)), (s, i) -> struct(-s AS negs, i AS idx))), p -> p.idx)"))
-      .withColumn("cell", explode(expr(s"slice(ranked, 1, $nProbe)")))
-      .select(col("query_id"), col("cell"),
-        graft.functions.Pq.adcTableCol(col("q_nv"), cb).as("adc_table"))
-
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc"), col("neighbor_id"))
-    val short = codes.join(broadcast(q), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc",
-        graft.functions.Pq.adcLookupCol(col("adc_table"), col("code"), cb(0).length))
-      .select(col("query_id"), col("neighbor_id"), col("adc"))
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= k * shortlistFactor)
-      .select(col("query_id"), col("neighbor_id"))
-
-    val vecs = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val qVecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val wExact = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    short.join(vecs, Seq("neighbor_id"))
-      .join(broadcast(qVecs), Seq("query_id"))
-      .withColumn("cos", VectorFns.cosineSim(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cos"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  def knnIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    ivfPqTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-  }
-
   /** e09: scalar int8-quantized ANN — the simplest production
     * quantization path (what vector stores call SQ8): each vector is
     * compressed 4× to per-vector-scaled int8 codes, the shortlist scan
@@ -1542,7 +1222,7 @@ object Similarity {
     * Scale shape: codes are a map-side projection (corpus floats never
     * enter the scan — 8× less traffic than float64 dots), queries are
     * broadcast with their code+scale, ids-only shortlist shuffle,
-    * vectors re-join by id for the re-rank — the pqTopK pattern.
+    * vectors re-join by id for the re-rank.
     */
   def int8TopK(corpus: DataFrame, queries: DataFrame,
                idCol: String, vecCol: String, k: Int,
@@ -1609,54 +1289,29 @@ object Similarity {
       emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
   }
 
-  /** e16: FILTERED vector search THROUGH the IVF index — the
-    * production shape every vector store exposes (pgvector/Milvus
-    * "metadata filtering"): e10 proves the filtered-brute-force
-    * baseline; this composes the filter with e06's index so query
-    * cost stays bounded by nProbe/nCells of the FILTERED corpus, not
-    * a full scan. Centroids train on the UNFILTERED corpus (an index
-    * is built once; predicates vary per query), the predicate prunes
-    * the assignment table BEFORE the probe join (at the parquet scan
-    * when the assignment is persisted — the e13 build), and the
-    * classic filtered-recall hazard (a selective predicate empties
-    * probed cells) is countered the standard way: widen nProbe (8 of
-    * 16 here vs e06's 4). Rows-only (k-means training); e10 is the
-    * exact oracle anchor and the spec pins recall against it plus
-    * predicate soundness of every returned neighbor.
-    */
-  def filteredIvfTopK(corpus: DataFrame, queries: DataFrame,
-                      idCol: String, vecCol: String, predicate: Column,
-                      k: Int, nCells: Int = 16, nProbe: Int = 8,
-                      seed: Long = 42L,
-                      trainFraction: Double = 0.25): DataFrame = {
-    val centroids = trainCentroids(corpus, vecCol, nCells, seed, trainFraction)
-    ivfTopKWithCentroids(corpus.filter(predicate), queries,
-      idCol, vecCol, k, centroids, nProbe)
-  }
-
-  def knnFilteredIvf(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    filteredIvfTopK(emb, emb.filter(col("vec_id") < 10),
-      "vec_id", "embedding", col("label") === 3, k = 5)
-  }
-
   /** e16's probe width: wider than e06's 4 because a selective
     * predicate thins every probed cell (the filtered-recall hazard) —
     * one constant shared by the kernel and the oracle generator call.
     */
   val filteredIvfProbe = 8
 
-  /** e16 (registered gate since r8): the FIXED-POINT composition —
-    * centroids train unfiltered via the e06 integer Lloyd, the
-    * predicate restricts which rows are assigned/probed (assignment is
-    * a pure per-row function of the frozen centroids, so filtering
-    * before or after assignment is the same set — the kernel filters
+  /** e16: FILTERED vector search THROUGH the IVF index — the
+    * production shape every vector store exposes (pgvector/Milvus
+    * "metadata filtering"): e10 proves the filtered-brute-force
+    * baseline; this composes the filter with e06's index so query cost
+    * stays bounded by nProbe/nCells of the FILTERED corpus, not a full
+    * scan, and the filtered-recall hazard (a selective predicate
+    * empties probed cells) is countered by widening nProbe. Centroids
+    * train on the UNFILTERED corpus via the e06 integer Lloyd (an index
+    * is built once; predicates vary per query), the predicate
+    * restricts which rows are assigned/probed (assignment is a pure
+    * per-row function of the frozen centroids, so filtering before or
+    * after assignment is the same set — the kernel filters
     * BEFORE, so distance arithmetic never touches excluded rows and
     * the predicate reaches the parquet scan), probe by integer
     * distance over [[filteredIvfProbe]] cells, exact-cosine re-rank.
     * Hash-checks against the e06 CTE chain with the predicate applied
-    * at the assignment stage. The float-MLlib composition
-    * ([[filteredIvfTopK]]) stays the spec'd scale path.
+    * at the assignment stage.
     */
   def filteredIvfTopKFixedPoint(corpus: DataFrame, queries: DataFrame,
                                 idCol: String, vecCol: String,
@@ -1678,16 +1333,9 @@ object Similarity {
       "vec_id", "embedding", col("label") === 3, k = 5)
   }
 
-  def knnLsh(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    // 16 bands × 6 bits: ~65% band-level recall for cos≈0.4 neighbors
-    // at a ~25% candidate rate — tuned for top-5 quality on random data
-    lshTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-      dim = 64, k = 5, bands = 16, bitsPerBand = 6)
-  }
-
-  /** The registered (portable) e02: same 16×6 parameters on the
-    * Rademacher family.
+  /** The registered e02: 16 bands × 6 bits — ~65% band-level recall
+    * for cos≈0.4 neighbors at a ~25% candidate rate, tuned for top-5
+    * quality on the fixture.
     */
   def knnLshPortable(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
@@ -1700,70 +1348,8 @@ object Similarity {
     * instead of the k most similar (often near-duplicates of each
     * other), greedily pick argmax λ·rel(d,q) − (1−λ)·max_{s∈S} sim(d,s)
     * so each pick is relevant AND novel vs the already-selected set S.
-    *
-    * Scale shape: MMR always runs on SHORTLISTS — stage 1 is the e01
-    * broadcast-query scan cut to k·shortlistFactor by WindowGroupLimit;
-    * the greedy O(shortlist²·k) sweep then touches ≤ 20 rows per query
-    * inside one `flatMapGroups`, parallel across queries and constant
-    * in corpus size. Deterministic (fixed λ, id tie-breaks) but
-    * sequential-greedy ⇒ rows-only in the gate; pinned against a
-    * driver-side reference in spec.
-    */
-  def mmrTopK(corpus: DataFrame, queries: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              shortlistFactor: Int = 4, lambdaRel: Double = 0.5): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rel").desc, col("neighbor_id"))
-    val short = c.crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("rel", VectorFns.cosineSim(col("q_vec"), col("c_vec")))
-      .withColumn("r", row_number().over(w))
-      .filter(col("r") <= k * shortlistFactor)
-      .select(col("query_id"), col("neighbor_id"), col("rel"), col("c_vec"))
-      .as[(Long, Long, Double, Array[Float])]
-    short.groupByKey(_._1)
-      .flatMapGroups { (qid: Long, it: Iterator[(Long, Long, Double, Array[Float])]) =>
-        val cand = it.map { case (_, id, rel, v) => (id, rel, v) }.toArray
-          .sortBy { case (id, rel, _) => (-rel, id) }
-        val cos = VectorFns.cosineScalar _
-        val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        val used = scala.collection.mutable.Set.empty[Long]
-        while (selected.length < math.min(k, cand.length)) {
-          var bestId = -1L; var bestVec: Array[Float] = null
-          var bestScore = Double.NegativeInfinity
-          cand.foreach { case (id, rel, v) =>
-            if (!used.contains(id)) {
-              val maxSim = if (selected.isEmpty) 0.0
-                else selected.map(s => cos(s._2, v)).max
-              val score = lambdaRel * rel - (1 - lambdaRel) * maxSim
-              // deterministic: strictly-better wins; ties keep the
-              // earlier (higher-rel, lower-id) candidate
-              if (score > bestScore) { bestScore = score; bestId = id; bestVec = v }
-            }
-          }
-          used += bestId
-          selected += ((bestId, bestVec))
-          out += ((qid, selected.length.toLong, bestId))
-        }
-        out
-      }
-      .toDF("query_id", "rank", "neighbor_id")
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  def knnMmr(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    mmrTopK(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-  }
-
-  /** e11 (registered gate since r8): PORTABLE integer MMR — the same
-    * greedy λ=1/2 diversification with every SCORE an integer, so the
-    * pick sequence is engine-reproducible and the gate hash-checks:
+    * λ=1/2 with every SCORE an integer, so the pick sequence is
+    * engine-reproducible and the gate hash-checks:
     *
     *  - the shortlist stays the exact-cosine top-(k·factor) (the e01
     *    float ordering both engines already agree on, ties by id);
@@ -1776,9 +1362,10 @@ object Similarity {
     *    enters a comparison. Ties → higher rel, then lower id.
     *
     * The oracle unrolls the k greedy picks as CTEs (the Lloyd
-    * pattern); the float kernel ([[mmrTopK]]) stays the spec'd scale
-    * path. Same shape at scale: greedy touches ≤ k·factor rows per
-    * query inside one `flatMapGroups`, constant in corpus size.
+    * pattern). Scale shape: MMR always runs on SHORTLISTS — the greedy
+    * sweep touches ≤ k·factor rows per query inside one
+    * `flatMapGroups`, parallel across queries and constant in corpus
+    * size.
     */
   def mmrTopKPortable(corpus: DataFrame, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int,
@@ -2296,12 +1883,8 @@ object Similarity {
       .localCheckpoint(true)
     val total = exact.count()
     val methods: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-      // audit the REGISTERED (portable Rademacher) gate; the Gaussian
-      // kernel is spec'd separately in SimilaritySpec
       "e02_knn_lsh" -> (knnLshPortable _),
       "e04_knn_ivf" -> ((sp: SparkSession, d: String) => knnIvfPortable(sp, d)),
-      // the REGISTERED fixed-point gate; the float MLlib kernel's
-      // recall is pinned separately in SimilaritySpec
       "e06_knn_ivf_kmeans" -> (knnIvfKmeansFixedPoint _),
       "e07_knn_pq" -> (knnPqFixedPoint _),
       "e09_knn_int8" -> (knnInt8 _),

@@ -1,15 +1,29 @@
 package graft.tools
 
-import graft.Tables
-import graft.functions.{HashFns, TextFns}
-import graft.operators.Dedup
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Scratch profiling harness (not part of the driver contract). */
+/** Same-JVM timing harness over REGISTERED queries (not part of the
+  * driver contract). Every mode warms the named queries up at the
+  * smallest fixture (JIT/codegen), drops storage, then times them at
+  * `dir`:
+  *
+  *  - `q q1 q2 …` — bench-style, two timed reps;
+  *  - `jobs q1 q2 …` — one timed rep with a per-job wall-time listing;
+  *  - `propab key q1 q2 …` — interleaved A/B of `-Dkey=true` vs unset
+  *    (e.g. `graft.par.off`, `graft.spread.off`), 3 rounds;
+  *  - `confab k=v[;k=v…] q1 q2 …` — interleaved A/B of session-conf
+  *    overrides vs the defaults, 3 rounds.
+  *
+  * Usage: `DebugPerf <dir> <mode> <args…>`.
+  */
 object DebugPerf {
+  private val warmupDir = "/root/testdata/sf0.001"
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val mode = args.lift(1).getOrElse("")
+    require(Set("q", "jobs", "propab", "confab").contains(mode),
+      s"usage: DebugPerf <dir> (q|jobs|propab|confab) <args...>; got '$mode'")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
@@ -23,562 +37,114 @@ object DebugPerf {
       val t0 = System.nanoTime(); val r = f
       println(f"[perf] $label%-30s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
     }
+    def run(n: String): Long = graft.SparkEntry.queries(n)(spark, dir).count()
 
-    // ---- same-JVM spread A/B: heavy kernels over 1-partition vs spread
-    if (args.length > 1 && args(1) == "spreadab") {
-      val raw = spark.read.parquet(s"$dir/documents.parquet")
-      val spreadDf = raw.repartition(spark.sparkContext.defaultParallelism)
-      // warmup both shapes
-      Dedup.minHashLshPairsPortable(raw.limit(500), "doc_id", "text").count()
-      Dedup.minHashLshPairsPortable(spreadDf.limit(500), "doc_id", "text").count()
-      graft.Bench.dropAllStorage(spark)
-      (1 to 3).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        Seq("raw" -> raw, "spread" -> spreadDf).foreach { case (label, d) =>
-          time(s"d03 chain ($label)")(println("n=" +
-            Dedup.minHashLshPairsPortable(d, "doc_id", "text").count()))
-          graft.Bench.dropAllStorage(spark)
-          time(s"ngram chain ($label)")(println("n=" +
-            Dedup.ngramJaccardPairsPortable(d, "doc_id", "text").count()))
-          graft.Bench.dropAllStorage(spark)
-        }
-      }
-      spark.stop(); return
-    }
-
-    // ---- same-JVM anchor A/B: all-pairs stage 1-partition vs spread
-    if (args.length > 1 && args(1) == "anchorab") {
-      def anchor(spreadLeft: Boolean): Long = {
-        val sh = spark.read.parquet(s"$dir/documents.parquet")
-          .filter(col("doc_id") < 250)
-          .select(col("doc_id"),
-            graft.functions.HashFns.sortedShingleSet(
-              TextFns.normalizeText(col("text")), 5).as("sh"))
-          .localCheckpoint(true)
-        val left = if (spreadLeft)
-          sh.repartition(spark.sessionState.conf.numShufflePartitions) else sh
-        val a = left.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-        val b = sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-        val n = a.crossJoin(b).filter(col("doc_a") < col("doc_b"))
-          .withColumn("jaccard",
-            graft.functions.HashFns.jaccardSorted(col("sh_a"), col("sh_b")))
-          .filter(col("jaccard") >= 0.25).count()
-        graft.Bench.dropAllStorage(spark); n
-      }
-      anchor(false); anchor(true) // warmup both
-      (1 to 3).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        time("anchor raw   ")(println("n=" + anchor(false)))
-        time("anchor spread")(println("n=" + anchor(true)))
-      }
-      spark.stop(); return
-    }
-
-    // ---- pushdown-through-repartition probe ---------------------------
-    if (args.length > 1 && args(1) == "pushdown") {
-      val df = spark.read.parquet(s"$dir/documents.parquet")
-        .repartition(32)
-        .filter(col("doc_id") < 250)
-        .select(col("doc_id"))
-      println(df.queryExecution.executedPlan.toString)
-      spark.stop(); return
-    }
-
-    // ---- time named registered queries (bench-style, 2 reps) ---------
-    if (args.length > 1 && args(1) == "q") {
-      val names = args.drop(2).toSeq
-      // fail fast on a typo'd name: a silently skipped warmup would
-      // fold JIT/codegen cost into rep 1 and quietly undermine the
-      // same-JVM discipline this tool exists to enforce
+    // fail fast on a typo'd name: a silently skipped warmup would fold
+    // JIT/codegen cost into rep 1 and quietly undermine the same-JVM
+    // discipline this tool exists to enforce
+    def warmup(names: Seq[String]): Unit = {
       val unknown = names.filterNot(graft.SparkEntry.queries.contains)
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-      // untimed warmup at the smallest fixture (JIT/codegen), then two
-      // timed reps at `dir`, storage dropped between — Bench's recipe
       names.foreach { n =>
-        try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
+        try graft.SparkEntry.queries(n)(spark, warmupDir).count()
         catch { case t: Throwable =>
           println(s"[perf] WARNING: warmup of $n threw ${t.getClass.getSimpleName}" +
             s" (${t.getMessage}) — rep-1 timings will include JIT/codegen cost")
         }
       }
       graft.Bench.dropAllStorage(spark)
-      (1 to 2).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        names.foreach { n =>
-          time(n)(println("n=" + graft.SparkEntry.queries(n)(spark, dir).count()))
-          graft.Bench.dropAllStorage(spark)
-        }
-      }
-      spark.stop(); return
     }
 
-    // ---- per-JOB decomposition of named registered queries -------------
-    // Warms up at sf0.001, then runs ONE timed rep of each query at `dir`
-    // with a SparkListener recording every job's wall time + description
-    // — shows where a multi-job gate (index lifecycle, pipeline
-    // composites, drains) actually spends its seconds.
-    if (args.length > 1 && args(1) == "jobs") {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-      val names = args.drop(2).toSeq
-      val unknown = names.filterNot(graft.SparkEntry.queries.contains)
-      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-      val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = {
-          val desc = js.stageInfos.lastOption.map(si =>
-            s"${si.name.takeWhile(_ != '\n')} [${js.stageInfos.size}st/" +
-              s"${js.stageInfos.map(_.numTasks).sum}tk]").getOrElse("?")
-          starts.put(js.jobId, (System.nanoTime(), desc))
-        }
-        override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-          Option(starts.remove(je.jobId)).foreach { case (t0, desc) =>
-            rows.add((je.jobId, (System.nanoTime() - t0) / 1e9, desc))
-          }
-        }
-      })
-      names.foreach { n =>
-        try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-        catch { case _: Throwable => () }
-      }
-      graft.Bench.dropAllStorage(spark)
-      names.foreach { n =>
-        rows.clear()
-        time(n)(println("n=" + graft.SparkEntry.queries(n)(spark, dir).count()))
-        // listener events are async — let the queue drain
-        Thread.sleep(300)
-        import scala.jdk.CollectionConverters._
-        val all = rows.asScala.toSeq.sortBy(_._1)
-        val tot = all.map(_._2).sum
-        println(f"[perf]   ${all.size} jobs, sum ${tot}%.2f s")
-        all.foreach { case (id, dt, desc) =>
-          if (dt >= 0.02)
-            println(f"[perf]   job $id%4d ${dt}%6.2f s  ${desc.take(110)}")
-        }
-        graft.Bench.dropAllStorage(spark)
-      }
-      spark.stop(); return
-    }
-
-    // ---- same-JVM A/B: output-committer settings on write-heavy gates --
-    // Flips mapreduce.fileoutputcommitter.algorithm.version (1→2) and
-    // marksuccessfuljobs (true→false) in the context hadoopConfiguration
-    // between reps — interleaved, 3 rounds, so host drift cancels.
-    if (args.length > 1 && args(1) == "commitab") {
-      val names = args.drop(2).toSeq
-      val hc = spark.sparkContext.hadoopConfiguration
-      def setFast(on: Boolean): Unit = {
-        hc.set("mapreduce.fileoutputcommitter.algorithm.version", if (on) "2" else "1")
-        hc.set("mapreduce.fileoutputcommitter.marksuccessfuljobs", if (on) "false" else "true")
-      }
-      names.foreach { n =>
-        try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-        catch { case _: Throwable => () }
-      }
-      graft.Bench.dropAllStorage(spark)
-      (1 to 3).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        Seq(false, true).foreach { fast =>
-          setFast(fast)
-          names.foreach { n =>
-            time(s"$n fast=$fast")(println("n=" +
-              graft.SparkEntry.queries(n)(spark, dir).count()))
-            graft.Bench.dropAllStorage(spark)
-          }
-        }
-      }
-      setFast(false)
-      spark.stop(); return
-    }
-
-    // ---- same-JVM A/B: session-conf overrides over named queries -------
-    // args: confab k=v[;k=v...] q1 q2 ... — interleaves default vs
-    // overridden session conf, 3 rounds.
-    if (args.length > 1 && args(1) == "confab") {
-      val overrides = args(2).split(";").map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }.toSeq
-      val names = args.drop(3).toSeq
-      val defaults = overrides.map { case (k, _) =>
-        (k, try Some(spark.conf.get(k)) catch { case _: Throwable => None })
-      }
-      def setAll(on: Boolean): Unit =
-        if (on) overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-        else defaults.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None)    => spark.conf.unset(k)
-        }
-      names.foreach { n =>
-        try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-        catch { case _: Throwable => () }
-      }
-      graft.Bench.dropAllStorage(spark)
+    // interleaved A/B: each round times every query with `set(false)`
+    // then `set(true)`, storage dropped between runs, so host drift
+    // cancels across the 3 rounds
+    def ab(names: Seq[String], label: Boolean => String)(set: Boolean => Unit): Unit = {
+      warmup(names)
       (1 to 3).foreach { rep =>
         println(s"[perf] --- rep $rep ---")
         Seq(false, true).foreach { on =>
-          setAll(on)
+          set(on)
           names.foreach { n =>
-            time(s"$n conf=$on")(println("n=" +
-              graft.SparkEntry.queries(n)(spark, dir).count()))
+            time(s"$n ${label(on)}")(println("n=" + run(n)))
             graft.Bench.dropAllStorage(spark)
           }
         }
       }
-      setAll(false)
-      spark.stop(); return
+      set(false)
     }
 
-    // ---- same-JVM A/B: a SYSTEM PROPERTY toggled over named queries ----
-    // args: propab key q1 q2 ... — interleaves prop unset vs prop=true.
-    if (args.length > 1 && args(1) == "propab") {
-      val key = args(2)
-      val names = args.drop(3).toSeq
-      names.foreach { n =>
-        try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-        catch { case _: Throwable => () }
-      }
-      graft.Bench.dropAllStorage(spark)
-      (1 to 3).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        Seq(true, false).foreach { propOn =>
-          if (propOn) System.setProperty(key, "true") else System.clearProperty(key)
+    mode match {
+      case "q" =>
+        val names = args.drop(2).toSeq
+        warmup(names)
+        (1 to 2).foreach { rep =>
+          println(s"[perf] --- rep $rep ---")
           names.foreach { n =>
-            time(s"$n $key=$propOn")(println("n=" +
-              graft.SparkEntry.queries(n)(spark, dir).count()))
+            time(n)(println("n=" + run(n)))
             graft.Bench.dropAllStorage(spark)
           }
         }
-      }
-      System.clearProperty(key)
-      spark.stop(); return
-    }
 
-    // ---- same-JVM A/B: Spread.narrow ON vs OFF over named queries ------
-    // Toggles -Dgraft.spread.off between interleaved reps, so every
-    // kernel-spread site is A/B'd through the REGISTERED entries.
-    if (args.length > 1 && args(1) == "spreadq") {
-      val names = args.drop(2).toSeq
-      val unknown = names.filterNot(graft.SparkEntry.queries.contains)
-      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-      names.foreach { n =>
-        try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-        catch { case _: Throwable => () }
-      }
-      graft.Bench.dropAllStorage(spark)
-      (1 to 3).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        Seq("true", "false").foreach { off =>
-          System.setProperty("graft.spread.off", off)
-          names.foreach { n =>
-            time(s"$n spread=${off == "false"}")(println("n=" +
-              graft.SparkEntry.queries(n)(spark, dir).count()))
-            graft.Bench.dropAllStorage(spark)
+      // per-JOB decomposition: ONE timed rep of each query with a
+      // SparkListener recording every job's wall time + description —
+      // shows where a multi-job gate (index lifecycle, pipeline
+      // composites, drains) actually spends its seconds
+      case "jobs" =>
+        import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+        val names = args.drop(2).toSeq
+        val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+        val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
+        spark.sparkContext.addSparkListener(new SparkListener {
+          override def onJobStart(js: SparkListenerJobStart): Unit = {
+            val desc = js.stageInfos.lastOption.map(si =>
+              s"${si.name.takeWhile(_ != '\n')} [${js.stageInfos.size}st/" +
+                s"${js.stageInfos.map(_.numTasks).sum}tk]").getOrElse("?")
+            starts.put(js.jobId, (System.nanoTime(), desc))
+          }
+          override def onJobEnd(je: SparkListenerJobEnd): Unit = {
+            Option(starts.remove(je.jobId)).foreach { case (t0, desc) =>
+              rows.add((je.jobId, (System.nanoTime() - t0) / 1e9, desc))
+            }
+          }
+        })
+        warmup(names)
+        names.foreach { n =>
+          rows.clear()
+          time(n)(println("n=" + run(n)))
+          // listener events are async — let the queue drain
+          Thread.sleep(300)
+          import scala.jdk.CollectionConverters._
+          val all = rows.asScala.toSeq.sortBy(_._1)
+          val tot = all.map(_._2).sum
+          println(f"[perf]   ${all.size} jobs, sum ${tot}%.2f s")
+          all.foreach { case (id, dt, desc) =>
+            if (dt >= 0.02)
+              println(f"[perf]   job $id%4d ${dt}%6.2f s  ${desc.take(110)}")
+          }
+          graft.Bench.dropAllStorage(spark)
+        }
+
+      case "propab" =>
+        val key = args(2)
+        ab(args.drop(3).toSeq, on => s"$key=$on") { on =>
+          if (on) System.setProperty(key, "true") else System.clearProperty(key)
+        }
+
+      case "confab" =>
+        val overrides = args(2).split(";").map { kv =>
+          val Array(k, v) = kv.split("=", 2); (k, v)
+        }.toSeq
+        val defaults = overrides.map { case (k, _) =>
+          (k, try Some(spark.conf.get(k)) catch { case _: Throwable => None })
+        }
+        ab(args.drop(3).toSeq, on => s"conf=$on") { on =>
+          if (on) overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+          else defaults.foreach {
+            case (k, Some(v)) => spark.conf.set(k, v)
+            case (k, None)    => spark.conf.unset(k)
           }
         }
-      }
-      System.clearProperty("graft.spread.off")
-      spark.stop(); return
     }
-
-    // ---- same-JVM A/B: single-task vs spread LSH hash+sign of a delta --
-    // The lifecycle/drain batch path materializes lshHashedPortable(batch)
-    // via localCheckpoint; the fixture's single-row-group parquet makes
-    // that a ONE-task stage. Times raw vs repartition(defaultParallelism)
-    // input, interleaved.
-    if (args.length > 1 && args(1) == "hashspread") {
-      val delta = graft.Tables.documents(spark, dir)
-        .filter(col("doc_id") >= graft.operators.Dedup.incrementalSplit)
-      val spreadDelta = delta.repartition(spark.sparkContext.defaultParallelism)
-      def hashOf(d: org.apache.spark.sql.DataFrame): Long = {
-        val h = graft.operators.Dedup.lshHashedPortableDebug(d).localCheckpoint(true)
-        val n = h.count(); graft.Bench.dropAllStorage(spark); n
-      }
-      hashOf(delta); hashOf(spreadDelta) // warmup both shapes
-      (1 to 3).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        time("hash raw   ")(println("n=" + hashOf(delta)))
-        time("hash spread")(println("n=" + hashOf(spreadDelta)))
-      }
-      spark.stop(); return
-    }
-
-    // ---- d28 stage decomposition (16×2 geometry) -----------------------
-    // Times the alt-geometry chain stage by stage over `dir` (use the
-    // ScaleStress 10× corpus): hash/sign, banded enumeration+filter,
-    // + pair dedup, full chain. Deltas between the counts isolate the
-    // bottleneck (enumeration CPU vs dedup shuffle vs verify joins).
-    if (args.length > 1 && args(1) == "d28stages") {
-      val docs = graft.Tables.documents(spark, dir)
-      (1 to 2).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        val hashed = time("hash+sig (persist)") {
-          val h = graft.operators.Dedup.lshHashedPortableDebug(docs).persist()
-          h.count(); h
-        }
-        val banded = graft.operators.Dedup.portableBanded(hashed, 16, 2)
-        time("enum+minMatch filter")(println("n=" +
-          graft.operators.Dedup.guardedBandedSelfJoin(banded, 10000)
-            .filter(graft.functions.HashFns.signatureMatchCount(
-              col("sig_a"), col("sig_b")) >= 13).count()))
-        time("enum only (no filter)")(println("n=" +
-          graft.operators.Dedup.guardedBandedSelfJoin(banded, 10000).count()))
-        time("+ dedup")(println("n=" +
-          graft.operators.Dedup.guardedBandedSelfJoin(banded, 10000)
-            .filter(graft.functions.HashFns.signatureMatchCount(
-              col("sig_a"), col("sig_b")) >= 13)
-            .select(col("doc_a"), col("doc_b"))
-            .dropDuplicates("doc_a", "doc_b").count()))
-        graft.Bench.dropAllStorage(spark)
-      }
-      spark.stop(); return
-    }
-
-    // ---- same-JVM A/B over the portable-chain variants:
-    //  "plain"   = exact count prefilter + plain merge verify (pre-r13)
-    //  "early"   = exact count prefilter + thresholded merge verify
-    //              (the SHIPPED r13 chain shape — ~10% at both
-    //              geometries, counts identical)
-    //  "atleast" = early-exit matchAtLeast prefilter + thresholded
-    //              verify (BUILT AND REJECTED r13: the data-dependent
-    //              branches defeat the JIT on the branch-light count
-    //              loop at 600M-pair enumeration volume — 16-band read
-    //              25.0s min vs plain 22.5s)
-    //  "bytes"   = two-stage byte prefilter (BUILT AND REJECTED r13:
-    //              false byte-equalities admit the near-threshold bulk
-    //              into the dedup + hs verify join at 16×2 density —
-    //              40.4s min vs plain 22.5s)
-    if (args.length > 1 && args(1) == "d28ab") {
-      val docs = graft.Tables.documents(spark, dir)
-      def chain(bands: Int, variant: String): Long = {
-        val rows = 32 / bands
-        val hashed = graft.operators.Dedup.lshHashedPortableDebug(docs).persist()
-        val candidates = (if (variant == "bytes")
-          graft.operators.Dedup.guardedBandedSelfJoin(
-              graft.operators.Dedup.portableBandedBytes(hashed, bands, rows), 10000)
-            .filter(graft.functions.HashFns.signatureMatchCountBytes(
-              col("sigb_a"), col("sigb_b")) >= 13)
-        else if (variant == "atleast")
-          graft.operators.Dedup.guardedBandedSelfJoin(
-              graft.operators.Dedup.portableBanded(hashed, bands, rows), 10000)
-            .filter(graft.functions.HashFns.signatureMatchAtLeast(
-              col("sig_a"), col("sig_b"), 13))
-        else
-          graft.operators.Dedup.guardedBandedSelfJoin(
-              graft.operators.Dedup.portableBanded(hashed, bands, rows), 10000)
-            .filter(graft.functions.HashFns.signatureMatchCount(
-              col("sig_a"), col("sig_b")) >= 13))
-          .select(col("doc_a"), col("doc_b"))
-          .dropDuplicates("doc_a", "doc_b")
-        val joined = candidates
-          .join(hashed.select(col("id").as("doc_a"), col("sig").as("sig_a"),
-            col("hs").as("hs_a")), "doc_a")
-          .join(hashed.select(col("id").as("doc_b"), col("sig").as("sig_b"),
-            col("hs").as("hs_b")), "doc_b")
-        val gated = if (variant == "bytes")
-          joined.filter(graft.functions.HashFns.signatureMatchCount(
-            col("sig_a"), col("sig_b")) >= 13)
-          else joined
-        val verified = gated
-          .withColumn("jaccard",
-            if (variant == "plain")
-              graft.functions.HashFns.jaccardSortedLong(col("hs_a"), col("hs_b"))
-            else graft.functions.HashFns.jaccardSortedLongAtLeast(
-              col("hs_a"), col("hs_b"), 0.6))
-          .filter(col("jaccard") >= 0.6)
-          .count()
-        hashed.unpersist()
-        graft.Bench.dropAllStorage(spark)
-        verified
-      }
-      val variants = Seq("plain", "early", "atleast", "bytes")
-      Seq(16, 8).foreach(b => variants.foreach(v => chain(b, v))) // warmup
-      (1 to 3).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        Seq(16, 8).foreach { b =>
-          variants.foreach { v =>
-            time(s"bands=$b $v")(println("n=" + chain(b, v)))
-          }
-        }
-      }
-      spark.stop(); return
-    }
-
-    // ---- d28 geometry adjudication: per-geometry enumeration volume
-    // and anchor recall. At fixed 32 hashes and τ=0.6 the only
-    // geometries are the divisor tilings; this prints, for each, the
-    // in-bucket pair space (Σ C(bucket,2) — what the self-join must
-    // enumerate) and the end-to-end anchor recall vs exact ≥0.6, the
-    // two axes of the recall/volume trade.
-    if (args.length > 1 && args(1) == "d28geom") {
-      val docs = graft.Tables.documents(spark, dir)
-      val geoms = Seq(32 -> 1, 16 -> 2, 8 -> 4, 4 -> 8)
-      val hashed = graft.operators.Dedup.lshHashedPortableDebug(docs).persist()
-      hashed.count()
-      geoms.foreach { case (b, r) =>
-        time(f"bands=$b%2d enum volume") {
-          val v = graft.operators.Dedup.portableBanded(hashed, b, r)
-            .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("sz"))
-            .agg(sum(expr("sz * (sz - 1) / 2")).cast("long")).head.getLong(0)
-          println(s"in-bucket pairs=$v")
-        }
-      }
-      hashed.unpersist()
-      val exact = graft.operators.Dedup.jaccardExactPairs(spark, dir)
-        .filter(col("jaccard") >= 0.6)
-        .select(col("doc_a"), col("doc_b")).localCheckpoint(true)
-      val total = exact.count()
-      val sliced = docs.filter(col("doc_id") < 250)
-        .select(col("doc_id"), col("text")).localCheckpoint(true)
-      geoms.foreach { case (b, _) =>
-        val hits = exact.join(
-          graft.operators.Dedup.minHashLshPairsPortable(sliced, "doc_id",
-              "text", bands = b)
-            .select(col("doc_a"), col("doc_b")),
-          Seq("doc_a", "doc_b")).count()
-        // no dropAllStorage here: it would evict the exact/sliced
-        // checkpoint blocks the next iteration still reads
-        println(s"[perf] bands=$b anchor recall = $hits/$total")
-      }
-      spark.stop(); return
-    }
-
-    // ---- price p01's single eager sizing probe ------------------------
-    // The p01 composition runs exactly ONE guardedBandedSelfJoin (the
-    // d03 chain inside curate), hence ONE eager hotAgg.isEmpty probe.
-    // This isolates its cost: one banded explode+agg pass over the
-    // chain's persisted signature frame.
-    if (args.length > 1 && args(1) == "p01probe") {
-      val docs = graft.Tables.documents(spark, dir)
-      (1 to 2).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        val hashed = time("hash corpus (the chain's persisted sig frame)") {
-          val h = graft.operators.Dedup.lshHashedPortableDebug(docs).persist()
-          h.count(); h
-        }
-        val banded = graft.operators.Dedup.portableBanded(hashed, 8, 4)
-        time("sizing probe (hotAgg.isEmpty over cached input)")(println("empty=" +
-          banded.groupBy(col("band"), col("bkey"))
-            .agg(count(lit(1)).as("bsz"))
-            .filter(col("bsz") > 10000).isEmpty))
-        graft.Bench.dropAllStorage(spark)
-      }
-      spark.stop(); return
-    }
-
-    // ---- two-sided guard decomposition -------------------------------
-    if (args.length > 1 && args(1) == "p06guard") {
-      // expects a GuardStress outDir as args(0) with lsh_idx built
-      val out = args(0)
-      val idxDir = s"$out/lsh_idx"
-      val docs = spark.read.parquet(s"$out/documents.parquet")
-      val nMax = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
-      val delta = docs.filter(col("doc_id") >= nMax - 500)
-      (1 to 2).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        val hashed = time("hash delta")(
-          graft.operators.Dedup.lshHashedPortableDebug(delta).localCheckpoint(true))
-        val newBands = graft.operators.Dedup.lshBandedOfDebug(hashed)
-        val idxBands = spark.read.parquet(
-          graft.util.GenManifest.tablePath(spark, idxDir, "bands")).drop("batch")
-        val idxSizes = spark.read.parquet(
-          graft.util.GenManifest.tablePath(spark, idxDir, "sizes"))
-        time("cross guarded count")(println("n=" +
-          graft.operators.Dedup.guardedBandedJoinDebug(newBands, idxBands, 10000, Some(idxSizes)).count()))
-        time("cross plain count")(println("n=" +
-          graft.operators.Dedup.guardedBandedJoinDebug(newBands, idxBands, Int.MaxValue, Some(idxSizes)).count()))
-        graft.Bench.dropAllStorage(spark)
-      }
-      spark.stop(); return
-    }
-
-    // ---- d26 decomposition -------------------------------------------
-    if (args.length > 1 && args(1) == "d26") {
-      (1 to 2).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        val exact = time("d26 exact anchor")(
-          Dedup.jaccardExactPairs(spark, dir)
-            .filter(col("jaccard") >= 0.6)
-            .select(col("doc_a"), col("doc_b")).localCheckpoint(true))
-        time("d26 exact count")(println("n=" + exact.count()))
-        val sliced = time("d26 slice checkpoint")(
-          Tables.documents(spark, dir).filter(col("doc_id") < 250)
-            .select(col("doc_id"), col("text")).localCheckpoint(true))
-        time("d26 d03 slice")(println("n=" +
-          Dedup.minHashLshPairsPortable(sliced, "doc_id", "text").count()))
-        time("d26 d04 slice")(println("n=" +
-          Dedup.simHashPairsPortable(sliced, "doc_id", "text").count()))
-        time("d26 d05 slice")(println("n=" +
-          Dedup.ngramJaccardPairsPortable(sliced, "doc_id", "text").count()))
-        graft.Bench.dropAllStorage(spark)
-      }
-      spark.stop(); return
-    }
-
-    // ---- q82 decomposition -------------------------------------------
-    if (args.length > 1 && args(1) == "q82") {
-      (1 to 2).foreach { rep =>
-        println(s"[perf] --- rep $rep ---")
-        val o = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
-        val l = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-        val directed = l.join(o, l("l_orderkey") === o("o_orderkey"))
-          .select(col("o_custkey").as("src"), (col("l_suppkey") + 1000000L).as("dst"))
-          .distinct()
-        time("q82 distinct edges")(println("edges=" + directed.count()))
-        val edges = directed.union(directed.select(col("dst").as("src"), col("src").as("dst")))
-        val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-        val cEdges = time("q82 cEdges checkpoint")(
-          edges.join(deg, edges("src") === deg("node"))
-            .select(col("src"), col("dst"), col("outdeg")).localCheckpoint())
-        val nodes = time("q82 nodes checkpoint")(deg.select(col("node")).localCheckpoint())
-        var ranks = nodes.withColumn("r", lit(graft.operators.Graph.Scale))
-        for (i <- 1 to 3) {
-          val contrib = cEdges
-            .join(broadcast(ranks.withColumnRenamed("node", "rnode")),
-              col("src") === col("rnode"))
-            .select(col("dst").as("node"), expr("r div outdeg").as("c"))
-            .groupBy("node").agg(sum(col("c")).as("inflow"))
-          ranks = nodes.join(contrib, Seq("node"), "left")
-            .select(col("node"), (lit(graft.operators.Graph.Teleport) +
-              expr("(85L * coalesce(inflow, 0L)) div 100L")).as("r"))
-          time(s"q82 sweep $i")(ranks.count())
-        }
-        time("q82 final topk")(
-          ranks.orderBy(col("r").desc, col("node")).limit(20).count())
-        graft.Bench.dropAllStorage(spark)
-      }
-      spark.stop(); return
-    }
-
-    // ---- d03 decomposition -------------------------------------------
-    val base = Tables.documents(spark, dir)
-      .select(col("doc_id").as("id"), TextFns.normalizeText(col("text")).as("text_norm"))
-    val sig = base.select(col("id"),
-      HashFns.minhashSig(col("text_norm"), 5, 32).as("sig")).persist()
-    time("d03 signatures")(sig.count())
-    val cands = Dedup.lshCandidatesRaw(sig, 8, 4)
-    time("d03 raw candidates")(println("cands=" + cands.count()))
-    val prefiltered = cands
-      .join(sig.select(col("id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-      .join(sig.select(col("id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-      .withColumn("est", HashFns.signatureMatchFraction(col("sig_a"), col("sig_b")))
-      .filter(col("est") >= 0.4)
-      .select(col("doc_a"), col("doc_b"))
-    time("d03 prefilter")(println("prefiltered=" + prefiltered.count()))
-    val shingled = base.select(col("id"),
-      HashFns.sortedShingleSet(col("text_norm"), 5).as("sh"))
-    time("d03 shingle sets only")(shingled.count())
-    val verified = prefiltered
-      .join(shingled.select(col("id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(shingled.select(col("id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("jaccard", HashFns.jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= 0.6)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .dropDuplicates("doc_a", "doc_b")
-    time("d03 verify join")(println("pairs=" + verified.count()))
-    sig.unpersist()
-    time("d03 shipped x3")((1 to 3).foreach(_ =>
-      Dedup.minHashDedup(spark, dir).count()))
-
     spark.stop()
   }
 }

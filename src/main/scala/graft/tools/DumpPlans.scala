@@ -206,7 +206,7 @@ object DumpPlans {
     // anti-join) stays visible.
     val planVariants: Map[String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame] = Map(
-      "d03_minhash_lsh" -> ((s, d) => graft.operators.Dedup.minHashLshPairs(
+      "d03_minhash_lsh" -> ((s, d) => graft.operators.Dedup.minHashLshPairsPortable(
         graft.Tables.documents(s, d), "doc_id", "text", materialize = false)),
       "d07_curation_pipeline" -> (graft.jobs.CurationJob.curateExactPlan _),
       "d11_curation_lsh" -> (graft.jobs.CurationJob.curatePlan _),

@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * blanket `repartition` was A/B'd and REJECTED in r12 for the lazy
   * LSH chains (they are shuffle/enumeration-bound, and tiny composition
   * stages pay 32-way scheduling); what DOES win — measured same-JVM in
-  * r14 (`DebugPerf hashspread`: 0.96 s → 0.58 s on the sf0.1 delta
+  * r14 (0.96 s → 0.58 s on the sf0.1 delta
   * hash) — is spreading exactly the stages that MATERIALIZE a heavy
   * per-row kernel (localCheckpoint of signatures, the trained-replace
   * projection feeding an aggregate).

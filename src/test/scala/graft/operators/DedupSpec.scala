@@ -23,11 +23,12 @@ class DedupSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   test("exact dedup groups the punctuation-variant duplicates") {
-    val pairs = Dedup.minHashLshPairs(planted, "doc_id", "text", threshold = 0.6)
-      .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((0L, 1L)), s"missing exact-dup pair, got $pairs")
-    assert(pairs.contains((2L, 3L)), s"missing near-dup pair, got $pairs")
-    assert(!pairs.exists(p => p._1 >= 4L), s"false positives: $pairs")
+    // the d01 gate over the planted corpus: 0/1 differ only in case and
+    // punctuation (one group, keeper 0); the 2/3 near-dup is NOT exact
+    val dir = graft.util.Scratch.dir(spark, "exact_dedup_spec", "planted").toString
+    planted.write.parquet(s"$dir/documents.parquet")
+    val groups = Dedup.exactDedup(spark, dir).as[(Long, Long)].collect().toSeq
+    assert(groups == Seq((0L, 2L)) ++ (2L to 9L).map(id => (id, 1L)), s"got $groups")
   }
 
   test("portable minhash LSH (the d03 gate) finds the planted dups, no false positives") {
@@ -39,10 +40,15 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash flags the near-dup pair within hamming budget") {
-    val pairs = Dedup.simHashPairs(planted, "doc_id", "text", maxHamming = 10)
-      .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((0L, 1L)))
-    assert(pairs.contains((2L, 3L)))
+    // the simhash64 SQL-surface kernel over normalized tokens: both
+    // planted pairs sit within a 10-bit budget
+    import graft.functions.{HashFns, TextFns}
+    val sig = planted.select($"doc_id",
+        HashFns.simhash(TextFns.tokens(TextFns.normalizeText($"text"))).as("sig"))
+      .as[(Long, Long)].collect().toMap
+    def hamming(a: Long, b: Long) = java.lang.Long.bitCount(sig(a) ^ sig(b))
+    assert(hamming(0L, 1L) <= 10, s"(0,1) at ${hamming(0L, 1L)} bits")
+    assert(hamming(2L, 3L) <= 10, s"(2,3) at ${hamming(2L, 3L)} bits")
   }
 
   test("portable simhash (the d04 gate) flags the planted dups within hamming budget") {
@@ -70,14 +76,6 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.exists(p => Set(4L, 5L, 6L, 7L, 8L, 9L).contains(p._1)), s"false positives: $pairs")
   }
 
-  test("word-ngram jaccard finds near dups, not unrelated docs") {
-    val pairs = Dedup.ngramJaccardPairs(planted, "doc_id", "text", n = 3, threshold = 0.4)
-      .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((0L, 1L)))
-    assert(pairs.contains((2L, 3L)))
-    assert(!pairs.exists(p => p._1 >= 4L))
-  }
-
   test("portable embedding near-dup (the d06 gate) finds planted almost-parallel vectors") {
     val rnd = new scala.util.Random(23)
     def v(): Array[Float] = Array.fill(64)(rnd.nextFloat() * 2 - 1)
@@ -94,6 +92,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("embedding near-dup finds planted almost-parallel vectors") {
+    // the d06 kernel at a non-default width (32 dims)
     val rnd = new scala.util.Random(11)
     def v(): Array[Float] = Array.fill(32)(rnd.nextFloat() * 2 - 1)
     val base = v()
@@ -102,22 +101,10 @@ class DedupSpec extends SparkSpec {
       (2L until 40L).map(i => (i, v().toSeq))
     val emb = rows.toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast(ArrayType(FloatType)).as("embedding"))
-    val pairs = Dedup.embeddingNearDupPairs(emb, "vec_id", "embedding",
+    val pairs = Dedup.embeddingNearDupPairsPortable(emb, "vec_id", "embedding",
       dim = 32, threshold = 0.95)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((0L, 1L)), s"got $pairs")
-  }
-
-  test("bucket-collect candidate generation agrees with the band self-join") {
-    import graft.functions.{HashFns, TextFns}
-    val sig = graft.Tables.documents(spark, sf)
-      .select($"doc_id".as("id"),
-        HashFns.minhashSig(TextFns.normalizeText($"text"), 5, 32).as("sig"))
-    val a = Dedup.lshCandidates(sig, 8, 4)
-      .as[(Long, Long)].collect().toSet
-    val b = Dedup.lshCandidatesViaBuckets(sig, 8, 4)
-      .as[(Long, Long)].collect().toSet
-    assert(a == b && a.nonEmpty)
   }
 
   test("dupClusters collapses transitive chains to one cluster root") {
@@ -167,7 +154,7 @@ class DedupSpec extends SparkSpec {
     val exact = Dedup.jaccardExactPairs(spark, sf, maxId = 300L, threshold = 0.6)
       .select($"doc_a", $"doc_b", $"jaccard")
       .as[(Long, Long, Double)].collect().map(t => (t._1, t._2) -> t._3).toMap
-    val lsh = Dedup.minHashLshPairs(
+    val lsh = Dedup.minHashLshPairsPortable(
         graft.Tables.documents(spark, sf).filter($"doc_id" < 300), "doc_id", "text",
         threshold = 0.6)
       .select($"doc_a", $"doc_b", $"jaccard")
@@ -267,7 +254,7 @@ class DedupSpec extends SparkSpec {
     import org.apache.spark.sql.types.{ArrayType, FloatType}
     // 10 well-separated base directions + near-copies (tiny deterministic
     // noise → cos ≈ 1 to their base); nCells = 1 removes the clustering
-    // variable so the sweep itself is what's under test
+    // variable so the integer sweep itself is what's under test
     val rnd = new scala.util.Random(11)
     val bases = Array.fill(10)(Array.fill(32)(rnd.nextFloat() * 2 - 1))
     val rows: Seq[(Long, Seq[Float])] =
@@ -279,19 +266,23 @@ class DedupSpec extends SparkSpec {
       }.toSeq
     val df = rows.toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast(ArrayType(FloatType)).as("embedding"))
-    val kept = Dedup.semanticDedupKeep(df, "vec_id", "embedding",
-        threshold = 0.95, nCells = 1, trainFraction = 1.0)
+    val tau = (0.95 * (1L << 40)).toLong // integer image of cos ≥ 0.95
+    val kept = Dedup.semanticDedupPortable(df, "vec_id", "embedding",
+        tauInt = tau, nCells = 1)
       .select($"vec_id").as[Long].collect().toSet
-    // brute-force reference: same greedy, driver side
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      val d = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
-      val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
-      val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
-      if (na == 0 || nb == 0) 0.0 else d / (na * nb)
+    // brute-force reference: the same greedy, driver side, over the
+    // kernel's quantization contract (sequential double norm,
+    // float-cast normalized components, floor(x·2^20), integer dots)
+    def qn(v: Seq[Float]): Array[Long] = {
+      val n = math.sqrt(v.map(x => x.toDouble * x.toDouble).sum)
+      v.map(x => math.floor((x.toDouble / n).toFloat.toDouble * 1048576L).toLong).toArray
     }
-    val expected = rows.sortBy(_._1).foldLeft(Vector.empty[(Long, Seq[Float])]) {
+    def idot(a: Array[Long], b: Array[Long]): Long =
+      a.zip(b).map { case (x, y) => x * y }.sum
+    val expected = rows.sortBy(_._1).foldLeft(Vector.empty[(Long, Array[Long])]) {
       case (acc, (id, v)) =>
-        if (acc.exists { case (_, kv) => cos(kv, v) >= 0.95 }) acc else acc :+ ((id, v))
+        val q = qn(v)
+        if (acc.exists { case (_, kq) => idot(kq, q) >= tau }) acc else acc :+ ((id, q))
     }.map(_._1).toSet
     assert(kept == expected)
     // every base survives, every near-copy is pruned
@@ -299,14 +290,12 @@ class DedupSpec extends SparkSpec {
     assert(kept.size == 10)
   }
 
-  test("d17 tolerates zero-norm vectors in the corpus (training filters them)") {
+  test("d17 tolerates zero-norm vectors in the corpus") {
     import org.apache.spark.sql.types.{ArrayType, FloatType}
-    // cosine distance is undefined for a zero vector: MLlib KMeans with
-    // distanceMeasure=cosine THROWS if one lands in the training sample.
-    // trainFraction=1.0 forces it in — the filter must keep the fit
-    // alive; the sweep side (cosineScalar → 0) then keeps the zero
-    // vector as its own representative.
-    val rnd = new scala.util.Random(23)
+    // a zero vector has no direction: integer Lloyd trains over it like
+    // any other row, normalization passes it through raw (the oracles'
+    // zero-norm guard), and its integer dot to every vector is 0 — so
+    // the sweep keeps it as its own representative
     val rows: Seq[(Long, Seq[Float])] =
       (0 until 30).map { i =>
         val base = Array.fill(16)(0f)
@@ -315,8 +304,7 @@ class DedupSpec extends SparkSpec {
       } :+ ((99L, Seq.fill(16)(0f)))
     val df = rows.toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast(ArrayType(FloatType)).as("embedding"))
-    val kept = Dedup.semanticDedupKeep(df, "vec_id", "embedding",
-        threshold = 0.95, nCells = 2, trainFraction = 1.0)
+    val kept = Dedup.semanticDedupPortable(df, "vec_id", "embedding", nCells = 2)
       .select($"vec_id").as[Long].collect().toSet
     assert(kept.contains(99L)) // zero vector survives (similarity 0 to everything)
     assert(kept.nonEmpty && kept.size < rows.size) // and the sweep still prunes
@@ -396,21 +384,6 @@ class DedupSpec extends SparkSpec {
         .as("chunk"))
       .select($"chunk").distinct().count()
     assert(keptTotal == distinctChunks)
-  }
-
-  test("d17 on the fixture: kept-set invariant holds within every cell") {
-    val emb = graft.Tables.embeddings(spark, sf)
-    val kept = Dedup.semanticDedupKeep(emb, "vec_id", "embedding")
-    // no two SURVIVORS of the same cell may be >= threshold-similar —
-    // the defining postcondition of the greedy sweep
-    val k = kept.join(emb.select($"vec_id", $"embedding"), "vec_id")
-    val a = k.select($"cell", $"vec_id".as("id_a"), $"embedding".as("v_a"))
-    val b = k.select($"cell", $"vec_id".as("id_b"), $"embedding".as("v_b"))
-    val close = a.join(b, "cell").filter($"id_a" < $"id_b")
-      .filter(graft.functions.VectorFns.cosineSim($"v_a", $"v_b") >= 0.4)
-    assert(close.count() == 0L)
-    // and the sweep actually prunes something on the fixture
-    assert(kept.count() < emb.count())
   }
 
   test("d17 portable: deterministic; integer sweep sound AND complete within every cell") {

@@ -45,20 +45,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("e15 IVF+PQ: deterministic, ranks dense, no self-neighbors") {
-    val a = Similarity.knnIvfPq(spark, sf).as[(Long, Long, Long, Double)].collect().toSeq
-    val b = Similarity.knnIvfPq(spark, sf).as[(Long, Long, Long, Double)].collect().toSeq
-    assert(a == b, "seeded build must be run-to-run deterministic")
-    assert(a.nonEmpty)
-    assert(a.forall { case (q, _, n, _) => q != n })
-    a.groupBy(_._1).foreach { case (_, rs) =>
-      assert(rs.map(_._2).sorted == (1L to rs.length.toLong))
-      // exact re-rank: cosines non-increasing down the rank order
-      val byRank = rs.sortBy(_._2).map(_._4)
-      assert(byRank.zip(byRank.drop(1)).forall { case (x, y) => x >= y })
-    }
-  }
-
   test("e10 filtered ANN: neighbors all satisfy the predicate; filter pushed to scan") {
     val emb = Tables.embeddings(spark, sf)
     val got = Similarity.knnFiltered(spark, sf)
@@ -90,26 +76,6 @@ class SimilaritySpec extends SparkSpec {
         .take(5).zipWithIndex.map { case ((n, _), i) => (q, (i + 1).toLong, n) }
     }.toSeq.sortBy(t => (t._1, t._2))
     assert(got.toSeq.sortBy(t => (t._1, t._2)) == exp)
-  }
-
-  test("e16 filtered IVF: predicate-sound neighbors, >=40% recall vs the e10 exact baseline") {
-    val emb = Tables.embeddings(spark, sf)
-    val got = Similarity.knnFilteredIvf(spark, sf)
-      .select($"query_id", $"rank", $"neighbor_id")
-      .as[(Long, Long, Long)].collect()
-    assert(got.nonEmpty)
-    // predicate soundness: every neighbor is from the filtered slice
-    val label3 = emb.filter($"label" === 3).select($"vec_id").as[Long].collect().toSet
-    assert(got.forall(r => label3.contains(r._3)))
-    got.groupBy(_._1).foreach { case (_, rows) =>
-      assert(rows.map(_._2).sorted.toSeq == (1L to rows.length))
-    }
-    // recall vs the exact filtered baseline (e10)
-    val exact = Similarity.knnFiltered(spark, sf)
-      .as[(Long, Long, Long)].collect().map(r => (r._1, r._3)).toSet
-    val approx = got.map(r => (r._1, r._3)).toSet
-    val recall = exact.intersect(approx).size.toDouble / exact.size
-    assert(recall >= 0.4, s"filtered-IVF recall $recall")
   }
 
   test("e16 fixed-point filtered IVF: deterministic, predicate-sound, >=40% recall vs e10") {
@@ -212,84 +178,6 @@ class SimilaritySpec extends SparkSpec {
     val approx = got.map(r => (r._1, r._3)).toSet
     val recall = exact.intersect(approx).size.toDouble / exact.size
     assert(recall >= 0.3, s"recall=$recall under forced splits")
-  }
-
-  test("e13 persisted index: build+append+load == in-memory engine with same frozen centroids") {
-    val emb = Tables.embeddings(spark, sf)
-    val queries = emb.filter($"vec_id" < 10)
-    // the gate path: build on base, incremental append of delta, query loaded
-    val loaded = Similarity.knnPersisted(spark, sf)
-      .collect().map(_.toSeq).toSeq
-    // reference: the SAME frozen centroids (read back from the index the
-    // gate just wrote), full corpus assigned in ONE in-memory pass — no
-    // filesystem in the loop. Equality proves (a) persist/load fidelity
-    // and (b) increment ≡ rebuild for frozen-centroid assignment.
-    val idxDir = graft.util.Scratch.resolve(spark, "e13_idx", sf).toString
-    val cents = Similarity.loadCentroids(spark, idxDir)
-    val fresh = Similarity.ivfTopKWithCentroids(emb, queries,
-      "vec_id", "embedding", k = 5, cents, nProbe = 4)
-      .collect().map(_.toSeq).toSeq
-    assert(loaded == fresh)
-    // the delta really was appended (not rebuilt): assignment rows cover
-    // ALL 500 ids, and the delta slice is non-empty past the split
-    val assigned = spark.read.parquet(s"$idxDir/assignments")
-    assert(assigned.count() == emb.count())
-    assert(assigned.filter($"neighbor_id" >= Similarity.indexBaseSplit).count() > 0)
-    // quality floor: loaded-index recall vs brute force
-    val exact = Similarity.knnBruteForce(spark, sf)
-      .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.knnPersisted(spark, sf)
-      .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
-    val recall = exact.intersect(approx).size.toDouble / exact.size
-    assert(recall >= 0.4, s"persisted-index recall=$recall")
-  }
-
-  test("e11 MMR: matches a driver-side greedy reference; first pick = top relevance") {
-    def cos(a: Seq[Float], b: Seq[Float]): Double = {
-      val d = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
-      val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
-      val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
-      if (na == 0 || nb == 0) 0.0 else d / (na * nb)
-    }
-    val all = Tables.embeddings(spark, sf)
-      .select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect()
-    val got = Similarity.knnMmr(spark, sf)
-      .as[(Long, Long, Long)].collect().toSeq.sortBy(t => (t._1, t._2))
-    // reference: same shortlist (top-20 by rel, id tie-break), same greedy
-    val exp = all.filter(_._1 < 10).flatMap { case (qid, qv) =>
-      val short = all.filter(_._1 != qid)
-        .map { case (id, v) => (id, cos(qv, v), v) }
-        .sortBy { case (id, rel, _) => (-rel, id) }.take(20)
-      val sel = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Float])]
-      while (sel.length < 5) {
-        val pick = short.filter(c => !sel.exists(_._1 == c._1)).maxBy { case (id, rel, v) =>
-          val maxSim = if (sel.isEmpty) 0.0 else sel.map(s => cos(s._2, v)).max
-          // maxBy keeps the FIRST max (candidates pre-sorted by -rel, id),
-          // matching the operator's strictly-better-wins tie policy
-          0.5 * rel - 0.5 * maxSim
-        }
-        sel += ((pick._1, pick._3))
-      }
-      sel.zipWithIndex.map { case ((id, _), i) => (qid, (i + 1).toLong, id) }
-    }.toSeq.sortBy(t => (t._1, t._2))
-    assert(got == exp)
-    // rank 1 is always the plain most-relevant neighbor (maxSim=0 at start)
-    val top1 = Similarity.knnBruteForce(spark, sf)
-      .filter($"rank" === 1L).select($"query_id", $"neighbor_id")
-      .as[(Long, Long)].collect().toMap
-    got.filter(_._2 == 1L).foreach { case (q, _, n) => assert(top1(q) == n) }
-    // diversity: mean pairwise sim of the MMR set never exceeds the top-k set's
-    val vecs = all.toMap
-    def meanPairSim(ids: Seq[Long]): Double = {
-      val ps = for (a <- ids; b <- ids if a < b) yield cos(vecs(a), vecs(b))
-      ps.sum / ps.length
-    }
-    val topk = Similarity.knnBruteForce(spark, sf)
-      .select($"query_id", $"neighbor_id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    got.groupBy(_._1).foreach { case (q, rows) =>
-      assert(meanPairSim(rows.map(_._3)) <= meanPairSim(topk(q)) + 1e-12, s"query $q")
-    }
   }
 
   test("e17 portable kNN join: deterministic, never self, dense ranks, >=40% recall vs exact") {
@@ -424,7 +312,7 @@ class SimilaritySpec extends SparkSpec {
   test("LSH ANN achieves >=40% top-5 recall vs brute force on the fixture") {
     val brute = Similarity.knnBruteForce(spark, sf)
       .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
-    val lsh = Similarity.knnLsh(spark, sf)
+    val lsh = Similarity.knnLshPortable(spark, sf)
       .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
     val recall = brute.intersect(lsh).size.toDouble / brute.size
     assert(recall >= 0.4, s"recall=$recall")
@@ -433,95 +321,49 @@ class SimilaritySpec extends SparkSpec {
   test("IVF ANN achieves >=40% top-5 recall; cells partition the corpus") {
     val brute = Similarity.knnBruteForce(spark, sf)
       .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.knnIvf(spark, sf)
+    val ivf = Similarity.knnIvfPortable(spark, sf)
       .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
     val recall = brute.intersect(ivf).size.toDouble / brute.size
     assert(recall >= 0.4, s"recall=$recall")
-  }
-
-  test("KMeans-trained IVF achieves >=40% top-5 recall vs brute force") {
-    val brute = Similarity.knnBruteForce(spark, sf)
-      .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.knnIvfKmeans(spark, sf)
-      .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
-    val recall = brute.intersect(ivf).size.toDouble / brute.size
-    assert(recall >= 0.4, s"recall=$recall")
-  }
-
-  test("PQ ANN: >=40% top-5 recall, deterministic, codes stay in range") {
-    val brute = Similarity.knnBruteForce(spark, sf)
-      .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
-    val pq1 = Similarity.knnPq(spark, sf)
-      .select($"query_id", $"neighbor_id").as[(Long, Long)].collect()
-    val recall = brute.intersect(pq1.toSet).size.toDouble / brute.size
-    assert(recall >= 0.4, s"recall=$recall")
-    val pq2 = Similarity.knnPq(spark, sf)
-      .select($"query_id", $"neighbor_id").as[(Long, Long)].collect()
-    assert(pq1.toSeq == pq2.toSeq, "PQ pipeline must be deterministic")
-    // encode kernel: m code BYTES (the 32× payload claim), each within
-    // the codebook
-    val emb = graft.Tables.embeddings(spark, sf)
-    val sample = emb.limit(200).select($"embedding")
-      .collect().map(_.getSeq[Float](0).toArray)
-    val cb = graft.functions.Pq.train(sample, m = 8, k = 16)
-    val codes = emb.select(
-      graft.functions.Pq.encodeCol($"embedding", cb).as("code"))
-      .as[Array[Byte]].collect()
-    assert(codes.forall(c => c.length == 8 && c.forall(x => x >= 0 && x < 16)))
-    // the table-lookup fast path scores exactly like the direct ADC
-    val pairs = emb.limit(20)
-      .select($"embedding",
-        graft.functions.Pq.encodeCol($"embedding", cb).as("code"))
-      .collect()
-    pairs.foreach { r =>
-      val v = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        r.getSeq[Float](0).toArray[Float].map(x => x: Any))
-      val code = r.getAs[Array[Byte]](1)
-      val direct = graft.functions.Pq.adcDist(v, code, cb)
-      val viaTable = graft.functions.Pq.adcLookup(
-        graft.functions.Pq.adcTable(v, cb), code, 16)
-      assert(math.abs(direct - viaTable) < 1e-12, s"$direct vs $viaTable")
-    }
   }
 
   test("PQ codebooks beyond 128 centers survive the signed-byte boundary") {
     // codes above 127 are negative as JVM bytes: the & 0xFF mask in
-    // adcDist/adcLookup is what makes the documented k <= 256 true
-    val emb = graft.Tables.embeddings(spark, sf)
-    val sample = emb.limit(400).select($"embedding")
-      .collect().map(_.getSeq[Float](0).toArray)
-    val cb = graft.functions.Pq.train(sample, m = 8, k = 200, iters = 2)
-    assert(cb(0).length == 200)
-    val pairs = emb.limit(50)
-      .select($"embedding",
-        graft.functions.Pq.encodeCol($"embedding", cb).as("code"))
-      .collect()
-    assert(pairs.exists(_.getAs[Array[Byte]](1).exists(_ < 0)),
-      "fixture must actually exercise codes > 127")
-    pairs.foreach { r =>
-      val vec = r.getSeq[Float](0).toArray
-      val v = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        vec.map(x => x: Any))
-      val code = r.getAs[Array[Byte]](1)
-      // exact reference: sum over subspaces of ||v_j - C_j[code_j]||^2
-      val sub = vec.length / 8
-      val exact = (0 until 8).map { j =>
+    // adcLookupI64 is what makes the documented k <= 256 true. Exact
+    // integer reference: sum over subspaces of ||v_j - C_j[code_j]||^2
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val m = 8
+    val k = 200
+    val vecs = Similarity.quantizedNormalized(Tables.embeddings(spark, sf),
+        "vec_id", "embedding", "vec_id")
+      .orderBy($"vec_id").select($"qn").limit(400)
+      .collect().map(_.getSeq[Long](0).toArray)
+    val cb = graft.functions.Pq.trainFixedPoint(vecs, m = m, k = k, iters = 2)
+    assert(cb.forall(_.length == k))
+    // seeds are the first k sample rows, so the rows past 128 exercise
+    // the high codes
+    val codes = vecs.map(v => graft.functions.Pq.encodeI64(
+      new GenericArrayData(v.map(x => x: Any)), cb))
+    assert(codes.forall(c => c.length == m && c.forall(b => (b & 0xFF) < k)),
+      "codes index inside the codebook")
+    assert(codes.exists(_.exists(_ < 0)), "fixture must actually exercise codes > 127")
+    val sub = vecs.head.length / m
+    vecs.zip(codes).foreach { case (v, code) =>
+      val exact = (0 until m).map { j =>
         val cen = cb(j)(code(j) & 0xFF)
         (0 until sub).map { i =>
-          val d = vec(j * sub + i).toDouble - cen(i).toDouble; d * d
+          BigInt(v(j * sub + i) - cen(i)).pow(2)
         }.sum
       }.sum
-      val direct = graft.functions.Pq.adcDist(v, code, cb)
-      val viaTable = graft.functions.Pq.adcLookup(
-        graft.functions.Pq.adcTable(v, cb), code, 200)
-      assert(math.abs(direct - exact) < 1e-9, s"$direct vs $exact")
-      assert(math.abs(viaTable - exact) < 1e-9, s"$viaTable vs $exact")
+      val table = graft.functions.Pq.adcTableI64(
+        new GenericArrayData(v.map(x => x: Any)), cb)
+      val viaTable = graft.functions.Pq.adcLookupI64(table, code, k)
+      assert(BigInt(viaTable) == exact, s"$viaTable vs $exact")
     }
   }
-
   test("LSH candidates are a strict subset: no query returns itself, ranks dense") {
-    val rows = Similarity.knnLsh(spark, sf)
-      .select($"query_id", $"rank", $"neighbor_id").as[(Long, Long, Long)].collect()
+    val rows = Similarity.knnLshPortable(spark, sf)
+      .as[(Long, Long, Long)].collect()
     assert(rows.forall { case (q, _, n) => q != n })
     rows.groupBy(_._1).foreach { case (_, rs) =>
       assert(rs.map(_._2).sorted.toSeq == (1L to rs.length.toLong))
@@ -640,6 +482,13 @@ class SimilaritySpec extends SparkSpec {
       trainOn = Some(emb.filter($"vec_id" < Similarity.indexBaseSplit)))
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == fresh)
+    // the delta really was appended (not rebuilt): the live assignment
+    // rows cover every id, and the delta slice past the split is there
+    val idxDir = graft.util.Scratch.resolve(spark, "e13fp_idx", sf).toString
+    val assigned = spark.read.parquet(
+      graft.util.GenManifest.tablePath(spark, idxDir, "assignments"))
+    assert(assigned.count() == emb.count())
+    assert(assigned.filter($"neighbor_id" >= Similarity.indexBaseSplit).count() > 0)
     // quality floor vs exact, so the base-trained cells stay usable
     val brute = Similarity.knnBruteForce(spark, sf)
       .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
