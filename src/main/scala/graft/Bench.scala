@@ -19,17 +19,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = util.GraftSession()
     // SPARK_GRAFT_ONLY: comma-separated subset for local iteration —
     // the driver and pre-snapshot gate always run the full map
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -97,7 +87,7 @@ object Bench {
       val t0 = System.nanoTime()
       // bit_xor, not sum: xxhash64 spans the full Long range and a sum
       // overflows under ANSI mode (Spark 4 default) — XOR cannot
-      spark.range(0, 50000000L, 1, cpus.toInt)
+      spark.range(0, 50000000L, 1, spark.sparkContext.defaultParallelism)
         .selectExpr("bit_xor(xxhash64(id))").collect()
       (System.nanoTime() - t0) / 1e9
     }.min

@@ -284,11 +284,15 @@ object TextAnalysis {
            | i -> cast(conv(substr(md5(cast(substr(nt, i, $k) as binary)), 1, 15), 16, 10) as bigint))""".stripMargin)))
       // window starts 1..max(ng-w+1, 1); slice() clips at the array
       // end, so the ng<=w degenerate case reduces to one global min —
-      // the same rule as the rolling-hash kernel
+      // the same rule as the rolling-hash kernel. The bound reads
+      // size(hs) (= ng here) on purpose: it is the second reference to
+      // hs, so CollapseProject keeps hs one computed column instead of
+      // inlining the md5 transform into the lambda, which re-hashed the
+      // whole document at every window position (O(ng²) per doc).
       .withColumn("sel", coalesce(
         when(col("ng") >= 1, expr(
           s"""array_sort(array_distinct(transform(
-             | sequence(1, greatest(ng - ${w - 1}, 1)),
+             | sequence(1, greatest(size(hs) - ${w - 1}, 1)),
              | p -> array_min(slice(hs, p, $w)))))""".stripMargin)),
         expr("cast(array() as array<bigint>)")))
       .select(col("doc_id"),

@@ -35,11 +35,8 @@ object Offres {
       StructField("code", StringType),
       StructField("libelle", StringType)))))))
 
-  /** Tech ROME codes (`csv-tech.conf:15-17`) and data ROME codes
-    * (`csv-tech-data.conf:12`).
-    */
+  /** Tech ROME codes (`csv-tech.conf:15-17`). */
   val techRomeCodes: Seq[String] = Seq("M1801", "M1802", "M1803", "M1805", "M1806")
-  val dataRomeCodes: Seq[String] = Seq("M1403")
 
   /** Parse raw JSON offre documents (PERMISSIVE): rows that fail to
     * parse or lack an id go to the dead-letter frame (S7) with the raw

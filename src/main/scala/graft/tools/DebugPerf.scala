@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 
 /** Same-JVM timing harness over REGISTERED queries (not part of the
   * driver contract). Every mode warms the named queries up at the
@@ -24,14 +24,7 @@ object DebugPerf {
     val mode = args.lift(1).getOrElse("")
     require(Set("q", "jobs", "propab", "confab").contains(mode),
       s"usage: DebugPerf <dir> (q|jobs|propab|confab) <args...>; got '$mode'")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -34,18 +34,9 @@ object DumpExchangeBudget {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1)
       else "src/test/resources/exchange_budget.txt"
-    // conf MUST mirror TestSpark's session exactly (incl. the DEFAULT
-    // broadcast threshold): the budget is only meaningful under the
-    // same planner inputs the spec replans with
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the budget only holds under the planner inputs the spec plans
+    // with: TestSpark's session, the same factory at the same 8 cores
+    val spark = GraftSession(8)
     val lines = graft.SparkEntry.queries.keys.toSeq.sorted.map { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       val n = shuffleCount(initial(df.queryExecution.executedPlan))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 
 /** Regenerates the m-family golden-literal oracle rows:
   * `runMain graft.tools.DumpMediaDigests [gate] [outFile]`
@@ -13,12 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object DumpMediaDigests {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val gate = args.headOption.getOrElse("m09")
     val mm = graft.operators.Multimodal
     val tuples = (gate match {

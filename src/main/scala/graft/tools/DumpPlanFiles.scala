@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Per-query plan dumps for the optimization-round evidence trail:
@@ -26,17 +26,7 @@ object DumpPlanFiles {
     if (args.length > 4) args(4).split(",").foreach { kv =>
       val Array(k, v) = kv.split("=", 2); System.setProperty(k, v)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)

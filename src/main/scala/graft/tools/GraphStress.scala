@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.{Bench, SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness for the GRAPH/MINING kernels (q82 PageRank,
@@ -27,17 +27,8 @@ object GraphStress {
     val factor = if (args.length > 0) args(0).toInt else 10
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_graph10"
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    val cpus = spark.sparkContext.defaultParallelism
 
     Files.createDirectories(Paths.get(outDir))
     // key offset per copy: far above any sf0.1 orderkey/custkey/
@@ -50,7 +41,7 @@ object GraphStress {
         o.withColumn("o_orderkey", col("o_orderkey") + lit(i * off))
           .withColumn("o_custkey", col("o_custkey") + lit(i * off))
       }.reduce(_.unionByName(_))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
 
       val l = Tables.lineitem(spark, base)
@@ -59,7 +50,7 @@ object GraphStress {
           .withColumn("l_partkey", col("l_partkey") + lit(i * off))
           .withColumn("l_suppkey", col("l_suppkey") + lit(i * off))
       }.reduce(_.unionByName(_))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
 
       Tables.names.filterNot(n => n == "orders" || n == "lineitem")

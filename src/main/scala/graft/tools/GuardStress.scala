@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.operators.{Dedup, Multimodal}
+import graft.util.GraftSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fires the hot-bucket guard AT THE SCALE IT WAS BUILT FOR — the
@@ -65,24 +66,16 @@ object GuardStress {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 15000
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_guardstress"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // 1m, not the suite's 64m: at 100 TB no banded side fits a
-      // broadcast, so the representative plan for the candidate joins
-      // is the SHUFFLED one — under 64m the harness-scale banded frames
-      // (~160 MB est / 20k docs) would broadcast and the A/B would
-      // measure stream-partitioning, not the join-key skew the guard
-      // exists for. The guard's own hot-key table stays broadcast (an
-      // explicit broadcast() of ~bands rows, threshold-independent).
-      .config("spark.sql.autoBroadcastJoinThreshold", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    val cpus = spark.sparkContext.defaultParallelism
+    // 1m, not the factory's 64m: at 100 TB no banded side fits a
+    // broadcast, so the representative plan for the candidate joins
+    // is the SHUFFLED one — under 64m the harness-scale banded frames
+    // (~160 MB est / 20k docs) would broadcast and the A/B would
+    // measure stream-partitioning, not the join-key skew the guard
+    // exists for. The guard's own hot-key table stays broadcast (an
+    // explicit broadcast() of ~bands rows, threshold-independent).
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1m")
     import spark.implicits._
     val extremes = new TaskExtremes
     spark.sparkContext.addSparkListener(extremes)
@@ -125,7 +118,7 @@ object GuardStress {
       // batch legs: a multi-file dir, read as `cpus` partitions (how a
       // 100 TB table arrives — single-file would serialize every
       // map-side stage of the registered chains)
-      corpus.repartition(cpus.toInt)
+      corpus.repartition(cpus)
         .write.mode("overwrite").parquet(docsPath)
       // streaming leg: the corpus lands as `cpus` FILES named
       // documents-NNNNN.parquet (all matched by s19's glob) — a real
@@ -135,7 +128,7 @@ object GuardStress {
       // the per-batch chain into one task — a fixture artifact the
       // round-12 PLANS.md table had to adjudicate in prose.)
       val tmp = s"$outDir/_docs_tmp"
-      corpus.repartition(cpus.toInt).write.mode("overwrite").parquet(tmp)
+      corpus.repartition(cpus).write.mode("overwrite").parquet(tmp)
       import scala.jdk.CollectionConverters._
       // wipe any stale layout first (e.g. the r12 single documents
       // .parquet file) — the glob matches BOTH layouts, so leftovers
@@ -263,7 +256,7 @@ object GuardStress {
       val bigDocs = spark.range(big).select(
           col("id").as("doc_id"),
           concat(lit(body), lit(" v"), col("id")).as("text"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
       Dedup.portableBanded(
         bigDocs.select(col("doc_id").as("id"),
             graft.functions.HashFns.sortedPortableShingleHashSet(

@@ -4,7 +4,8 @@ import java.nio.file.Files
 
 import graft.Tables
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** N-cycle MIXED-lifecycle probe for the persisted LSH index — the
@@ -46,14 +47,7 @@ object IndexLifecycle {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val n = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-index-lifecycle")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import spark.implicits._
 
     val docs = Tables.documents(spark, sfDir)

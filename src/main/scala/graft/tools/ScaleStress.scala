@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.{Bench, SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness for the fixture-bound dedup/ANN/text paths:
@@ -29,17 +29,8 @@ object ScaleStress {
     val factor = if (args.length > 0) args(0).toInt else 10
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_scale10"
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    val cpus = spark.sparkContext.defaultParallelism
 
     Files.createDirectories(Paths.get(outDir))
     // id offset per copy keeps ids disjoint AND keeps the bounded
@@ -59,7 +50,7 @@ object ScaleStress {
           .withColumn("n_chars", length(col("text")).cast("long"))
           .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
       }.reduce(_.unionByName(_))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
 
       val emb = Tables.embeddings(spark, base)
@@ -72,7 +63,7 @@ object ScaleStress {
             .as("embedding"),
           col("label"))
       }.reduce(_.unionByName(_))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
 
       Tables.names.filterNot(n => n == "documents" || n == "embeddings")

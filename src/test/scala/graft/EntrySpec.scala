@@ -13,10 +13,9 @@ class EntrySpec extends SparkSpec {
   }
 
   test("every registered query runs and returns rows on sf0.001") {
-    val empty = SparkEntry.queries.flatMap { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      if (n == 0) Some(name) else None
-    }
+    val failed = QueryMapRun.results.collect { case (name, Left(err)) => s"$name: $err" }
+    assert(failed.isEmpty, s"failed queries:\n${failed.mkString("\n")}")
+    val empty = QueryMapRun.results.collect { case (name, Right(r)) if r.rows == 0 => name }
     assert(empty.isEmpty, s"empty results: $empty")
   }
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
 /** Consolidated plan audit: walks the INITIAL physical plan of EVERY
@@ -18,30 +17,15 @@ import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledHashJ
   *     legally build/broadcast for that type are checked, FullOuter
   *     is exempt (no broadcastable side).
   *
-  * Runs each query function at sf0.001 (streaming entries drain a real
-  * micro-batch run; their audited plan is the post-drain batch plan —
-  * the stream side's state plans are pinned in `StreamsSpec`).
+  * Reads the plans of `QueryMapRun`'s one sf0.001 pass over the map.
   */
 class PlanAuditSpec extends SparkSpec {
-
-  private def initial(p: SparkPlan): SparkPlan = p match {
-    case a: AdaptiveSparkPlanExec => a.initialPlan
-    case other => other
-  }
 
   private def sizeOf(p: SparkPlan): Option[BigInt] =
     p.logicalLink.map(_.stats.sizeInBytes)
 
-  /** One plan pass shared by both audits — each registered query
-    * function runs ONCE at sf0.001 (streaming entries drain a real
-    * micro-batch run), its initial physical plan kept for inspection.
-    */
-  private lazy val initialPlans: Seq[(String, Either[String, SparkPlan])] =
-    SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      name -> (try Right(initial(
-        SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan))
-      catch { case e: Throwable => Left(e.getMessage) })
-    }
+  private def initialPlans: Seq[(String, Either[String, SparkPlan])] =
+    QueryMapRun.results.map { case (name, r) => name -> r.map(_.plan) }
 
   test("every registered plan: no CartesianProduct; small join sides broadcast") {
     val threshold = BigInt(spark.sessionState.conf.autoBroadcastJoinThreshold)
@@ -121,7 +105,7 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     def shuffles(df: org.apache.spark.sql.DataFrame): Int =
       graft.tools.DumpExchangeBudget.shuffleCount(
-        initial(df.queryExecution.executedPlan))
+        graft.tools.DumpExchangeBudget.initial(df.queryExecution.executedPlan))
     // cold density (every bucket ≤ maxBucket): the guard's r12 fast
     // path must return the PLAIN join plan — zero guard stages. The
     // sizing runs as a separate bounded driver pull, not in the plan.

@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
   * system property. Only the two same-JVM kill switches the `DebugPerf
   * propab` harness toggles (`graft.par.off` in `util/Par.scala`,
   * `graft.spread.off` in `util/Spread.scala`) and the tools may read
-  * one.
+  * one. Likewise only `util/GraftSession` builds a session.
   */
 class SysPropSwitchSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
@@ -19,21 +19,36 @@ class SysPropSwitchSpec extends AnyFunSuite {
   private val read =
     """(sys\.props|System\.getPropert|getBoolean|getInteger|getLong)\S*\(\s*"graft\.""".r
 
-  test("no graft.* system property is read outside Par, Spread and tools") {
+  /** `file:line: text` of every line matching `pattern` in a main
+    * source file whose root-relative path passes `where`.
+    */
+  private def matches(pattern: scala.util.matching.Regex,
+                      where: String => Boolean): Seq[String] = {
     assert(Files.isDirectory(root), s"run from the repository root: $root missing")
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
     def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
-    val offenders = for {
-      p <- files
+    for {
+      p <- Files.walk(root).iterator().asScala.toSeq
+      if p.toString.endsWith(".scala")
       r = rel(p)
-      if !allowed(r) && !r.startsWith("tools/")
+      if where(r)
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      if read.findFirstIn(line).isDefined
+      if pattern.findFirstIn(line).isDefined
     } yield s"$r:${i + 1}: ${line.trim}"
+  }
+
+  test("no graft.* system property is read outside Par, Spread and tools") {
+    val offenders = matches(read, r => !allowed(r) && !r.startsWith("tools/"))
     assert(offenders.isEmpty, offenders.mkString("\n"))
     // the allowed readers are still there (the pattern is not stale)
     assert(allowed.forall(a =>
       read.findFirstIn(Files.readString(root.resolve(a))).isDefined))
+  }
+
+  test("SparkSession.builder appears only in util/GraftSession") {
+    val builder = """SparkSession\s*\.\s*builder""".r
+    val offenders = matches(builder, _ != "util/GraftSession.scala")
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // the factory itself still matches (the pattern is not stale)
+    assert(matches(builder, _ == "util/GraftSession.scala").nonEmpty)
   }
 }

@@ -8,7 +8,7 @@ class IngestionJobSpec extends SparkSpec {
   OffresApiRegistry.register("fake-job", FakeOffresApi)
 
   test("E1 end-to-end: probe → adaptive scan → dedup → overwrite → metrics reconcile") {
-    val out = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val out = tempDir("graft-ingest").toString
     val r = IngestionJob.run(spark, "fake-job", Seq("tokA", "tokB"), out)
     assert(r.totalExpected == 6200)
     assert(r.collected == 6200)
@@ -41,7 +41,7 @@ class IngestionJobSpec extends SparkSpec {
       }
     }
     OffresApiRegistry.register("saturated", SaturatedApi)
-    val out = java.nio.file.Files.createTempDirectory("graft-ovf").toString
+    val out = tempDir("graft-ovf").toString
     val r = IngestionJob.run(spark, "saturated", Seq("t"), out)
     assert(r.collected == 0 && !r.reconciled)
     val err = spark.read.parquet(s"$out/erreurs")

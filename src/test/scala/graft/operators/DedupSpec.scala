@@ -677,7 +677,7 @@ class DedupSpec extends SparkSpec {
     val body = "the same boilerplate legal disclaimer repeated on every page of this crawl shard " * 3
     val docs = (0 until 300).map(i => (i.toLong, body + ("x" * (i % 3))))
       .toDF("doc_id", "text")
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_twoguard_idx")
+    val idxDir = tempDir("graft_twoguard_idx")
     try {
       Dedup.buildLshIndex(docs.filter($"doc_id" < 200), "doc_id", "text",
         idxDir.toString)
@@ -692,7 +692,7 @@ class DedupSpec extends SparkSpec {
       assert(g1 == u1, "two-sided guard must not add, drop, or reorder pairs")
       // append delta1 (maintains bands + the size table), then detect a
       // second delta against the grown index — guarded ≡ unguarded again
-      val outDir = java.nio.file.Files.createTempDirectory("graft_twoguard_out")
+      val outDir = tempDir("graft_twoguard_out")
       try {
         Dedup.appendLshDetect(delta1, "doc_id", "text", idxDir.toString,
           outDir.toString)
@@ -728,8 +728,8 @@ class DedupSpec extends SparkSpec {
     val docs = (0 until 300).map { i =>
       (i.toLong, bodies(i % 100) + (if (i >= 200) " delta!" else ""))
     }.toDF("doc_id", "text")
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_lifecycle_spec")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_lifecycle_out")
+    val idxDir = tempDir("graft_lifecycle_spec")
+    val outDir = tempDir("graft_lifecycle_out")
     try {
       Dedup.buildLshIndex(docs.filter($"doc_id" < 100), "doc_id", "text",
         idxDir.toString)
@@ -818,8 +818,8 @@ class DedupSpec extends SparkSpec {
     val oldBody = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
     val newBody = "one two three four five six seven eight nine ten eleven twelve " * 4
     val history = Seq((1L, oldBody), (3L, newBody)).toDF("doc_id", "text")
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_versioned_idx")
-    val outDir = java.nio.file.Files.createTempDirectory("graft_versioned_out")
+    val idxDir = tempDir("graft_versioned_idx")
+    val outDir = tempDir("graft_versioned_out")
     try {
       Dedup.buildLshIndex(history, "doc_id", "text", idxDir.toString)
       Dedup.tombstoneLshDocs(Seq(1L).toDF("id"), idxDir.toString)
@@ -874,7 +874,7 @@ class DedupSpec extends SparkSpec {
     val docs = (0 until 180).map { i =>
       (i.toLong, bodies(i % 60) + (if (i >= 120) " delta!" else ""))
     }.toDF("doc_id", "text").localCheckpoint(true)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_reband_idx")
+    val idxDir = tempDir("graft_reband_idx")
     try {
       Dedup.buildLshIndex(docs.filter($"doc_id" < 120), "doc_id", "text",
         idxDir.toString)

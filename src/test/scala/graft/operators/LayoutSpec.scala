@@ -6,9 +6,19 @@ import org.apache.spark.sql.functions._
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Runs `f` with broadcast joins off, then puts the session's own
+    * threshold back (an unset would leave Spark's 10 MB default, not the
+    * session's, for every later spec).
+    */
+  private def withoutBroadcast[A](f: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try f finally spark.conf.set(key, prev)
+  }
+
   test("bucketed tables join without any Exchange (co-located sort-merge)") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
-    try {
+    try withoutBroadcast {
       Layout.writeBucketed(Tables.orders(spark, sf), "orders_b", "o_orderkey", 4)
       Layout.writeBucketed(
         Tables.lineitem(spark, sf).select($"l_orderkey", $"l_quantity"),
@@ -21,7 +31,6 @@ class LayoutSpec extends SparkSpec {
       assert(!plan.contains("Exchange"), plan) // the whole point of bucketing
       assert(joined.count() == Tables.lineitem(spark, sf).count())
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
     }
@@ -48,8 +57,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("q45 fixture join subtree is Exchange-free (co-located buckets)") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withoutBroadcast {
       Layout.writeBucketedFixtures(spark, sf)
       val bare = Layout.bucketedJoinBare(spark)
       bare.collect()
@@ -57,7 +65,7 @@ class LayoutSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"), plan)
       assert(!plan.contains("Exchange"), plan)
       assert(bare.count() == Tables.lineitem(spark, sf).count())
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("q46 z-order scan: both predicates pushed to the parquet scan") {
@@ -122,7 +130,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("date-partitioned layout prunes partitions at plan time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString + "/events"
+    val dir = tempDir("graft-part").toString + "/events"
     Layout.writeDatePartitioned(Tables.events(spark, sf), "ts", dir)
     val all = spark.read.parquet(dir)
     val dates = all.select($"p_date").distinct().count()
@@ -162,7 +170,7 @@ class LayoutSpec extends SparkSpec {
     // an embedded newline (would split one doc into two records) and a
     // null text (would null the concat and be dropped) must both abort
     // the write instead of silently round-tripping wrong data
-    val tmp = java.nio.file.Files.createTempDirectory("q61_guard").toString
+    val tmp = tempDir("q61_guard").toString
     val newlineDoc = Seq((1L, "ok"), (2L, "bad\nline")).toDF("doc_id", "text")
     val ex1 = intercept[Exception] { Layout.writeTextLines(newlineDoc, tmp) }
     assert(exceptionChain(ex1).exists(_.getMessage != null) &&

@@ -15,8 +15,9 @@ class TextAnalysisSpec extends SparkSpec {
       (3L, "join the parade"),                     // 1x join
       (4L, "nothing relevant whatsoever"),         // no hits → excluded
     ).toDF("doc_id", "text")
-    docs.write.mode("overwrite").parquet("/tmp/graft_textmatch_test/documents.parquet")
-    val out = TextAnalysis.textMatch(spark, "/tmp/graft_textmatch_test")
+    val dir = tempDir("graft_textmatch_test").toString
+    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val out = TextAnalysis.textMatch(spark, dir)
       .as[(Long, Long, Double)].collect()
 
     val ids = out.map(_._1).toSet
@@ -40,8 +41,9 @@ class TextAnalysisSpec extends SparkSpec {
       (4L, "join whatever else here"),            // pushes df(join) up
       (5L, "nothing matching at all"),
     ).toDF("doc_id", "text")
-    docs.write.mode("overwrite").parquet("/tmp/graft_bm25_test/documents.parquet")
-    val score = TextAnalysis.bm25Rank(spark, "/tmp/graft_bm25_test")
+    val dir = tempDir("graft_bm25_test").toString
+    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val score = TextAnalysis.bm25Rank(spark, dir)
       .as[(Long, Long, Double)].collect().map(t => t._1 -> t._3).toMap
 
     assert(!score.contains(5L), "doc with no query term must be excluded")
@@ -338,7 +340,7 @@ class TextAnalysisSpec extends SparkSpec {
       (2L, "brown quick fox"),                                   // wrong order
       (3L, "prefix quick brown fox suffix"),                     // 1 occurrence
     ).toDF("doc_id", "text")
-    val dirTmp = java.nio.file.Files.createTempDirectory("t27fix")
+    val dirTmp = tempDir("t27fix")
     planted.write.mode("overwrite")
       .parquet(dirTmp.resolve("documents.parquet").toString)
     val got = TextAnalysis.phraseSearch(spark, dirTmp.toString,
@@ -376,7 +378,7 @@ class TextAnalysisSpec extends SparkSpec {
       original.substring(0, cut) + " inserted brand new material here " +
         original.substring(cut)
     }
-    val dirTmp = java.nio.file.Files.createTempDirectory("t28fix")
+    val dirTmp = tempDir("t28fix")
     Seq((0L, original), (1L, edited)).toDF("doc_id", "text")
       .write.mode("overwrite")
       .parquet(dirTmp.resolve("documents.parquet").toString)
@@ -407,7 +409,7 @@ class TextAnalysisSpec extends SparkSpec {
       (18L, "single"),        // <2 tokens → zero bigrams, must still appear
       (19L, "a b"),           // cnt 5 → len(bin(5)) = 3 (the floor(log2)+1 path)
     ).toDF("doc_id", "text")
-    val dirTmp = java.nio.file.Files.createTempDirectory("t29fix")
+    val dirTmp = tempDir("t29fix")
     docs.write.mode("overwrite")
       .parquet(dirTmp.resolve("documents.parquet").toString)
     val out = TextAnalysis.bigramLmScore(spark, dirTmp.toString)
@@ -427,7 +429,7 @@ class TextAnalysisSpec extends SparkSpec {
     val corpus = (0L until 60L).map { id =>
       id -> Seq.fill(rnd.nextInt(8))(vocab(rnd.nextInt(vocab.length)))
     }
-    val dirTmp = java.nio.file.Files.createTempDirectory("t29prop")
+    val dirTmp = tempDir("t29prop")
     corpus.map { case (id, ts) => (id, ts.mkString(" ")) }
       .toDF("doc_id", "text").write.mode("overwrite")
       .parquet(dirTmp.resolve("documents.parquet").toString)
@@ -454,7 +456,7 @@ class TextAnalysisSpec extends SparkSpec {
     val text = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest") ++
       Seq.fill(4)("été")).mkString(" ")
-    val dirTmp = java.nio.file.Files.createTempDirectory("t30fix")
+    val dirTmp = tempDir("t30fix")
     Seq((0L, text), (1L, "low low newest"))
       .toDF("doc_id", "text").write.mode("overwrite")
       .parquet(dirTmp.resolve("documents.parquet").toString)
@@ -542,7 +544,7 @@ class TextAnalysisSpec extends SparkSpec {
     val text = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest") ++
       Seq.fill(4)("été")).mkString(" ")
-    val dirTmp = java.nio.file.Files.createTempDirectory("t32fix")
+    val dirTmp = tempDir("t32fix")
     Seq((0L, text), (1L, "low low newest"))
       .toDF("doc_id", "text").write.mode("overwrite")
       .parquet(dirTmp.resolve("documents.parquet").toString)
@@ -608,7 +610,7 @@ class TextAnalysisSpec extends SparkSpec {
     val text = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest") ++
       Seq.fill(4)("été")).mkString(" ")
-    val dirTmp = java.nio.file.Files.createTempDirectory("t33fix")
+    val dirTmp = tempDir("t33fix")
     Seq((0L, text), (1L, "low low newest"))
       .toDF("doc_id", "text").write.mode("overwrite")
       .parquet(dirTmp.resolve("documents.parquet").toString)
@@ -674,7 +676,7 @@ class TextAnalysisSpec extends SparkSpec {
     // t35: the persisted artifact round-trips losslessly — the loaded
     // merge table equals the fresh one, and encoding from it equals
     // encoding from the in-memory trainer output
-    val idxDir = java.nio.file.Files.createTempDirectory("t35idx").toString
+    val idxDir = tempDir("t35idx").toString
     val persisted = TextAnalysis.bpeEncodePersisted(spark, sf, Some(idxDir))
       .as[(Long, Long)].collect().toSeq
     val loadedMerges = spark.read.parquet(s"$idxDir/merges.parquet")

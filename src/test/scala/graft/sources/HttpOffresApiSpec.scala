@@ -168,7 +168,7 @@ class HttpOffresApiSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("IngestionJob runs the full E1 lifecycle over HTTP: collect, dead-letter, reconcile") {
     rateLimited429.set(false) // re-arm: one page of this run gets throttled
-    val out = java.nio.file.Files.createTempDirectory("graft_ingest_http").toString
+    val out = tempDir("graft_ingest_http").toString
     val res = graft.jobs.IngestionJob.runWithOptions(spark, Map(
       "endpoint" -> base,
       "authUrl" -> s"$base/token",

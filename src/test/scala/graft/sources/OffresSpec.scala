@@ -61,7 +61,7 @@ class OffresSpec extends SparkSpec {
   }
 
   test("NDJSON roundtrip: bulk-format lines read back through the explicit schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graftjson").toString + "/offres"
+    val dir = tempDir("graftjson").toString + "/offres"
     val lines = Seq(goodJson,
       goodJson.replace(""""id":"42"""", """"id":"43""""))
     Seq(lines: _*).toDF("value").coalesce(1).write.text(dir)
@@ -93,7 +93,7 @@ class OffresSpec extends SparkSpec {
   }
 
   test("CSV sink: ordered fields, no header, comma sep (S11)") {
-    val dir = java.nio.file.Files.createTempDirectory("graftcsv").toString + "/out"
+    val dir = tempDir("graftcsv").toString + "/out"
     val (valid, _) = Offres.parseOffres(Seq(goodJson).toDF("json"))
     Offres.writeCsv(Offres.csvTechPipeline(valid), dir)
     val lines = spark.read.text(dir).as[String].collect()

@@ -23,7 +23,7 @@ class GenManifestSpec extends SparkSpec {
   }
 
   test("manifest round-trip: publish is atomic-rename, load resolves the highest gen") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_manifest_rt").toString
+    val dir = tempDir("graft_manifest_rt").toString
     try {
       assert(GenManifest.load(spark, dir).isEmpty)
       val m1 = IndexManifest(1L, 0L, Map("bands" -> "8", "rows" -> "4"),
@@ -40,7 +40,7 @@ class GenManifestSpec extends SparkSpec {
 
   test("takedowns publish atomically: each record is a fresh ledger generation behind a manifest flip") {
     val docs = corpus(90)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_ledger_atomic").toString
+    val idxDir = tempDir("graft_ledger_atomic").toString
     try {
       Dedup.buildLshIndex(docs, "doc_id", "text", idxDir)
       val m0 = GenManifest.required(spark, idxDir)
@@ -63,7 +63,7 @@ class GenManifestSpec extends SparkSpec {
 
   test("compaction publishes old-or-new: a pre-publish reader keeps a complete generation") {
     val docs = corpus(120)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_manifest_gc").toString
+    val idxDir = tempDir("graft_manifest_gc").toString
     try {
       Dedup.buildLshIndex(docs.filter($"doc_id" < 80), "doc_id", "text", idxDir)
       val m0 = GenManifest.required(spark, idxDir)
@@ -94,7 +94,7 @@ class GenManifestSpec extends SparkSpec {
 
   test("reader interleaved with live compactions never observes a missing or mixed index") {
     val docs = corpus(150).localCheckpoint(true)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_manifest_race").toString
+    val idxDir = tempDir("graft_manifest_race").toString
     try {
       Dedup.buildLshIndex(docs.filter($"doc_id" < 100), "doc_id", "text", idxDir)
       val delta = docs.filter($"doc_id" >= 100).localCheckpoint(true)

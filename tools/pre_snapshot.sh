@@ -48,7 +48,7 @@ cp /tmp/pre_snapshot_verify/correctness_self.json "CORRECTNESS_SELF_${ROUND}.jso
   || fail "correctness self-artifact missing"
 
 echo "== stage 4/4: Bench @ sf0.1 (per-query map must cover every registered query) ==" | tee -a "$LOG"
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   sbt -batch "runMain graft.Bench" >> "$LOG" 2>&1 || fail "graft.Bench"
 TOTAL_LINE=$(grep -o '{"metric":"total".*}' "$LOG" | tail -1)
 NFAILED=$(printf '%s' "$TOTAL_LINE" | grep -o '"nfailed":[0-9]*' | cut -d: -f2)
