@@ -480,44 +480,31 @@ object Dedup {
     * (band, bkey, bsz) — the bucket-size table the ingest guard reads
     * as a LOOKUP (maintained incrementally by [[appendLshDetect]]), so
     * per-batch hot-key detection never re-aggregates the historical
-    * bands. All parquet, each table in a GENERATION directory named by
-    * one atomically-published manifest ([[graft.util.GenManifest]]) —
-    * loadable by any later session (the e13 property, for text), and
-    * never observable half-written. Building into a reused dir starts a
-    * fresh generation: prior tables (including any tombstone ledger)
-    * drop out of the new manifest and are reclaimed by generation GC.
+    * bands. All parquet, written as one fresh generation
+    * ([[graft.util.GenManifest.writeGeneration]]) — loadable by any
+    * later session (the e13 property, for text), and never observable
+    * half-written. Building into a reused dir starts a fresh
+    * generation: prior tables (including any tombstone ledger) drop out
+    * of the new manifest and are reclaimed by generation GC.
     */
   def buildLshIndex(docs: DataFrame, idCol: String, textCol: String,
                     indexDir: String): Unit = {
     val spark = docs.sparkSession
-    val gen = GenManifest.load(spark, indexDir).map(_.gen + 1).getOrElse(1L)
-    val tables = Seq("hashes", "bands", "sizes")
-      .map(t => t -> GenManifest.genDirName(t, gen)).toMap
     val hashed = lshHashedPortable(docs, idCol, textCol)
       .withColumn("batch", lit(0L))
       .localCheckpoint(true)
     // hashes, bands and sizes all project off the checkpointed hashed
-    // frame into disjoint directories — written CONCURRENTLY (guide
-    // §2.6: the serial order paid one full driver gap per table;
-    // overlapped, each write's tasks back-fill the others' tails).
-    // Sizes aggregate the banding PROJECTION — bit-identical to
+    // frame. Sizes aggregate the banding PROJECTION — bit-identical to
     // aggregating the written band files, since the projection is a
     // deterministic function of the checkpointed hashes
-    graft.util.Par.all(
-      () => hashed.write.mode("overwrite")
-        .parquet(s"$indexDir/${tables("hashes")}"),
-      () => lshBandedOf(hashed)
-        .write.mode("overwrite").parquet(s"$indexDir/${tables("bands")}"),
-      () => lshBandedOf(hashed)
-        .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz"))
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/${tables("sizes")}"))
-    GenManifest.publish(spark, indexDir, graft.util.IndexManifest(
-      gen, watermark = 0L,
+    GenManifest.writeGeneration(spark, indexDir, GenManifest.load(spark, indexDir),
+      Seq("hashes" -> (() => hashed),
+          "bands" -> (() => lshBandedOf(hashed)),
+          "sizes" -> (() => lshBandedOf(hashed)
+            .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz")))),
       meta = Map("bands" -> lshBands.toString,
                  "rows" -> (lshNumHashes / lshBands).toString),
-      tables = tables))
-    GenManifest.gcGenerations(spark, indexDir)
+      fresh = true)
   }
 
   /** The index's bucket sizes, summed over the append-only partials
@@ -548,55 +535,49 @@ object Dedup {
     * self-join when both share a batch — so the drained set is the
     * closed-form "all portable-LSH pairs with at least one delta
     * member", which is what the DuckDB oracle recomputes.
+    *
+    * The index tables grow through
+    * [[graft.util.GenManifest.appendBatch]]; detection runs inside its
+    * callback, so it probes the live directories before they grow.
     */
   def appendLshDetect(batch: DataFrame, idCol: String, textCol: String,
-                      indexDir: String, outDir: String): Unit = {
-    val spark = batch.sparkSession
-    val m = GenManifest.required(spark, indexDir)
-    // every append is one VERSION: its rows carry batch = watermark+1,
-    // so a tombstone recorded at wm hides exactly the rows that existed
-    // when the takedown ran — rows a LATER append writes for the same
-    // id are visible with no resurrect bookkeeping (the sink's
-    // delete-then-upsert rule falls out of version comparison), a
-    // re-ingest with CHANGED text no longer unhides the old text's
-    // rows, and the append path never touches the tombstone table at
-    // all (the r13 design rewrote it per batch)
-    val batchNo = m.watermark + 1
-    val (bands, rows) = lshGeometry(m)
-    // NOT spread (r14 A/B, twice): unlike the probe-only
-    // [[detectDeltaPairs]], the hashed frame here feeds the THREE
-    // index-table appends and a cheap 8×4 probe — a naive 32-way spread
-    // lost 1.8 s on d29 (write fan-out), and even with the writes
-    // coalesced back to one file the spread still measured d29 6.10 s
-    // raw vs 7.39 s min-of-3 (the exchange + 32-way scheduling of every
-    // downstream detect stage outweighs the hash win at append-batch
-    // probe cost); s13/s19 were neutral both ways
-    val hashed = lshHashedPortable(batch, idCol, textCol)
-      .withColumn("batch", lit(batchNo))
-      .localCheckpoint(true)
-    detectLshPairs(hashed, indexDir)
-      .write.mode("append").parquet(outDir)
-    val newBands = lshBandedOfGeom(hashed, bands, rows)
-    // the three index-table appends all project/aggregate off the
-    // checkpointed hashed frame into disjoint directories — run
-    // CONCURRENTLY (guide §2.6) AFTER the detect write above joined
-    // (detect scans the same live directories these appends grow; the
-    // detect-THEN-append ordering is the correctness contract). The
-    // size partial is the batch's OWN bucket counts — readers sum
-    // partials ([[lshIndexSizes]]); maintenance is one batch-sized agg
-    // + append, never a rewrite of the key universe
-    graft.util.Par.all(
-      () => hashed.write.mode("append")
-        .parquet(m.tableDir(indexDir, "hashes")),
-      () => newBands.write.mode("append")
-        .parquet(m.tableDir(indexDir, "bands")),
-      () => newBands.groupBy(col("band"), col("bkey"))
-        .agg(count(lit(1)).as("bsz"))
-        .write.mode("append").parquet(m.tableDir(indexDir, "sizes")))
-    // watermark bump — same table generations, one atomic publish
-    GenManifest.publish(spark, indexDir,
-      m.copy(gen = m.gen + 1, watermark = batchNo))
-  }
+                      indexDir: String, outDir: String): Unit =
+    GenManifest.appendBatch(batch.sparkSession, indexDir) { (m, batchNo) =>
+      // every append is one VERSION: its rows carry batch = watermark+1,
+      // so a tombstone recorded at wm hides exactly the rows that existed
+      // when the takedown ran — rows a LATER append writes for the same
+      // id are visible with no resurrect bookkeeping (the sink's
+      // delete-then-upsert rule falls out of version comparison), a
+      // re-ingest with CHANGED text no longer unhides the old text's
+      // rows, and the append path never touches the tombstone table at
+      // all (the r13 design rewrote it per batch)
+      val (bands, rows) = lshGeometry(m)
+      // NOT spread (r14 A/B, twice): unlike the probe-only
+      // [[detectDeltaPairs]], the hashed frame here feeds the THREE
+      // index-table appends and a cheap 8×4 probe — a naive 32-way spread
+      // lost 1.8 s on d29 (write fan-out), and even with the writes
+      // coalesced back to one file the spread still measured d29 6.10 s
+      // raw vs 7.39 s min-of-3 (the exchange + 32-way scheduling of every
+      // downstream detect stage outweighs the hash win at append-batch
+      // probe cost); s13/s19 were neutral both ways
+      val hashed = lshHashedPortable(batch, idCol, textCol)
+        .withColumn("batch", lit(batchNo))
+        .localCheckpoint(true)
+      detectLshPairs(hashed, indexDir, m)
+        .write.mode("append").parquet(outDir)
+      val newBands = lshBandedOfGeom(hashed, bands, rows)
+      // the three index-table appends all project/aggregate off the
+      // checkpointed hashed frame and start only AFTER the detect write
+      // above joined (detect scans the same live directories these
+      // appends grow; the detect-THEN-append ordering is the correctness
+      // contract). The size partial is the batch's OWN bucket counts —
+      // readers sum partials ([[lshIndexSizes]]); maintenance is one
+      // batch-sized agg + append, never a rewrite of the key universe
+      Seq("hashes" -> hashed,
+          "bands" -> newBands,
+          "sizes" -> newBands.groupBy(col("band"), col("bkey"))
+            .agg(count(lit(1)).as("bsz")))
+    }
 
   /** Retire docs from the persisted index — the takedown/GDPR path the
     * reference's `_id`-keyed store implies (replacement-by-id,
@@ -633,17 +614,11 @@ object Dedup {
     * thresholds reflect live rows, not retired ones), and the tombstone
     * ledger drops out of the new generation.
     *
-    * Write discipline: all three compacted tables are fully written as
-    * a NEW GENERATION first (reads and writes never share a path), then
-    * published by ONE atomic manifest rename
-    * ([[graft.util.GenManifest.publish]]) — a reader mid-compaction
-    * resolves the complete old generation, a crash before publish
-    * leaves the old manifest live and the half-written generation
-    * unreferenced (reclaimed by the next run's GC). The previous
-    * generation is retained through one maintenance cycle (GC keeps the
-    * newest two manifests' directories), so in-flight readers finish
-    * against a complete snapshot. Detection output is invariant under
-    * compaction: rows are preserved except hidden ones, and bucket
+    * Write discipline: the three compacted tables are one new
+    * generation ([[graft.util.GenManifest.writeGeneration]] — old-or-new
+    * for readers, crash-safe, one cycle of reader grace). Detection
+    * output is invariant under compaction: rows are preserved except
+    * hidden ones, and bucket
     * sizes only feed the guard's split factor, which is
     * semantics-preserving for any g (spec-pinned parity, and the
     * registered d29 gate hash-checks a build→append→compact→append
@@ -652,9 +627,6 @@ object Dedup {
   def compactLshIndex(spark: SparkSession, indexDir: String,
                       targetFiles: Int = 32): Unit = {
     val m = GenManifest.required(spark, indexDir)
-    val gen = m.gen + 1
-    val next = Seq("hashes", "bands", "sizes")
-      .map(t => t -> GenManifest.genDirName(t, gen)).toMap
     // not materialized: the ledger agg is read twice (two visibility
     // joins) but it is a tiny parquet scan + agg — cheaper to re-run
     // than to hold checkpoint blocks through the maintenance pass
@@ -662,27 +634,18 @@ object Dedup {
     def live(table: String): DataFrame =
       graft.util.Tombstones.visible(
         spark.read.parquet(m.tableDir(indexDir, table)), "id", tomb)
-    // the visibility-filtered rewrites read and write disjoint paths —
-    // overlapped (guide §2.6), they share the maintenance window's idle
-    // cores instead of each paying its own driver gap. Sizes are
-    // recomputed from the LIVE bands (the same visibility join the
-    // bands rewrite runs — exact, one extra broadcast-anti pass at
-    // maintenance time): one agg buys every subsequent probe a
-    // single-partial lookup with live counts
-    graft.util.Par.all(
-      () => live("hashes").coalesce(targetFiles)
-        .write.mode("overwrite").parquet(s"$indexDir/${next("hashes")}"),
-      () => live("bands").coalesce(targetFiles)
-        .write.mode("overwrite").parquet(s"$indexDir/${next("bands")}"),
-      () => live("bands")
-        .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz"))
-        .coalesce(math.max(1, targetFiles / 4))
-        .write.mode("overwrite")
-        .parquet(s"$indexDir/${next("sizes")}"))
-    // one atomic publish: new generations live, tombstone ledger folded
-    GenManifest.publish(spark, indexDir,
-      m.copy(gen = gen, tables = next))
-    GenManifest.gcGenerations(spark, indexDir)
+    // Sizes are recomputed from the LIVE bands (the same visibility
+    // join the bands rewrite runs — exact, one extra broadcast-anti
+    // pass at maintenance time): one agg buys every subsequent probe a
+    // single-partial lookup with live counts. The ledger is folded:
+    // it drops out of the new manifest
+    GenManifest.writeGeneration(spark, indexDir, Some(m),
+      Seq("hashes" -> (() => live("hashes").coalesce(targetFiles)),
+          "bands" -> (() => live("bands").coalesce(targetFiles)),
+          "sizes" -> (() => live("bands")
+            .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz"))
+            .coalesce(math.max(1, targetFiles / 4)))),
+      drop = Set(graft.util.Tombstones.table))
   }
 
   /** RE-BAND the persisted index to a new (bands × rows) geometry from
@@ -695,7 +658,8 @@ object Dedup {
     * Rebuilds `bands` and `sizes` as a new generation at the new
     * geometry — `hashes` (and the tombstone ledger, whose visibility
     * semantics are geometry-independent) carry over untouched — and
-    * publishes geometry + tables in one atomic manifest flip; every
+    * publishes geometry + tables as one new generation
+    * ([[graft.util.GenManifest.writeGeneration]]); every
     * subsequent probe ([[detectLshPairs]]) bands its batch at the
     * manifest's geometry. The registered d31 gate hash-checks a
     * build@8×4 → reband@16×2 → probe cycle against the d28 closed-form
@@ -707,43 +671,19 @@ object Dedup {
     require(bands * rows == lshNumHashes,
       s"band geometry must tile the $lshNumHashes hashes: $bands x $rows")
     val m = GenManifest.required(spark, indexDir)
-    val gen = m.gen + 1
-    val bandsDir = GenManifest.genDirName("bands", gen)
-    val sizesDir = GenManifest.genDirName("sizes", gen)
     val rebanded = lshBandedOfGeom(
       spark.read.parquet(m.tableDir(indexDir, "hashes")), bands, rows)
     // both new-generation tables derive from the persisted hashes (the
     // sizes lane re-scans + re-bands — a cheap projection of a table
-    // already on local disk) and write disjoint directories: overlapped
-    // like the build/compact lanes
-    graft.util.Par.all(
-      () => rebanded.coalesce(targetFiles)
-        .write.mode("overwrite").parquet(s"$indexDir/$bandsDir"),
-      () => rebanded
-        .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz"))
-        .coalesce(math.max(1, targetFiles / 4))
-        .write.mode("overwrite").parquet(s"$indexDir/$sizesDir"))
-    GenManifest.publish(spark, indexDir, m.copy(
-      gen = gen,
-      meta = m.meta ++ Map("bands" -> bands.toString, "rows" -> rows.toString),
-      tables = m.tables ++ Map("bands" -> bandsDir, "sizes" -> sizesDir)))
-    GenManifest.gcGenerations(spark, indexDir)
+    // already on local disk)
+    GenManifest.writeGeneration(spark, indexDir, Some(m),
+      Seq("bands" -> (() => rebanded.coalesce(targetFiles)),
+          "sizes" -> (() => rebanded
+            .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("bsz"))
+            .coalesce(math.max(1, targetFiles / 4)))),
+      meta = Map("bands" -> bands.toString, "rows" -> rows.toString))
   }
 
-  /** The detection half of one ingest step, shared by the streaming
-    * drain (s19) and the batch incremental-refresh capstone (p06):
-    * near-dup pairs between a pre-hashed batch (id, hs, sig) and the
-    * persisted index, PLUS within the batch itself. Both collision
-    * joins run behind the hot-bucket guard — batch × index through the
-    * two-sided [[guardedBandedJoin]] with the index's PERSISTED size
-    * table as the right-side lookup (per-batch guard cost scales with
-    * the batch, not the corpus), batch × batch through
-    * [[guardedBandedSelfJoin]] — so a degenerate band key in the
-    * historical corpus (the boilerplate-shard 100 TB case) splits into
-    * bounded cells instead of one O(bucket²) task. Pairs are unchanged
-    * (the guards are semantics-preserving), so the s19 oracle holds
-    * verbatim.
-    */
   /** [[detectLshPairs]] over raw documents — shingle/sign the delta,
     * then detect against the persisted index (p06's batch entry; the
     * streaming path hashes per micro-batch in [[appendLshDetect]]).
@@ -760,7 +700,7 @@ object Dedup {
     val input =
       if (m.metaInt("rows") <= 2) graft.util.Spread.narrow(docs) else docs
     detectLshPairs(lshHashedPortable(input, idCol, textCol).localCheckpoint(true),
-      indexDir, maxBucket)
+      indexDir, m, maxBucket)
   }
 
   /** Second slice point for the d29 lifecycle gate: delta₁ = [split,
@@ -854,10 +794,24 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
+  /** The detection half of one ingest step, shared by the streaming
+    * drain (s19) and the batch incremental-refresh capstone (p06):
+    * near-dup pairs between a pre-hashed batch (id, hs, sig) and the
+    * persisted index as of manifest `m`, PLUS within the batch itself.
+    * Both collision joins run behind the hot-bucket guard — batch ×
+    * index through the two-sided [[guardedBandedJoin]] with the index's
+    * PERSISTED size table as the right-side lookup (per-batch guard
+    * cost scales with the batch, not the corpus), batch × batch through
+    * [[guardedBandedSelfJoin]] — so a degenerate band key in the
+    * historical corpus (the boilerplate-shard 100 TB case) splits into
+    * bounded cells instead of one O(bucket²) task. Pairs are unchanged
+    * (the guards are semantics-preserving), so the s19 oracle holds
+    * verbatim.
+    */
   private[graft] def detectLshPairs(hashed: DataFrame, indexDir: String,
+                                    m: graft.util.IndexManifest,
                                     maxBucket: Int = 10000): DataFrame = {
     val spark = hashed.sparkSession
-    val m = GenManifest.required(spark, indexDir)
     val (gb, gr) = lshGeometry(m)
     // band the batch at the INDEX's manifest geometry (a re-banded
     // index probes at its migrated shape); the batch side carries no

@@ -396,68 +396,58 @@ object Similarity {
   //   chain restricted to base-slice training; s13's streaming
   //   maintenance drives the same index. —
 
-  /** Write one complete IVF generation (train + assign `corpus`) under
-    * `indexDir` at generation `gen`, returning the table→directory map
-    * to publish — the shared body of [[buildIvfIndexFixedPoint]] and
-    * [[retrainIvfIndexFixedPoint]] (build ≡ retrain by construction).
+  /** Train + assign `corpus` as one fresh IVF generation
+    * ([[graft.util.GenManifest.writeGeneration]]) — the shared body of
+    * [[buildIvfIndexFixedPoint]] and [[retrainIvfIndexFixedPoint]]
+    * (build ≡ retrain by construction).
     */
   private def writeIvfGeneration(corpus: DataFrame, idCol: String,
-                                 vecCol: String, indexDir: String, gen: Long,
-                                 nCells: Int, iters: Int): Map[String, String] = {
+                                 vecCol: String, indexDir: String,
+                                 live: Option[graft.util.IndexManifest],
+                                 nCells: Int, iters: Int): Unit = {
     val spark = corpus.sparkSession
-    val tables = Seq("qcentroids", "assignments")
-      .map(t => t -> GenManifest.genDirName(t, gen)).toMap
     val trainSet = quantized(corpus, idCol, vecCol).persist()
     val cents = trainCentroidsFixedPoint(trainSet, idCol, nCells, iters)
     trainSet.unpersist()
     import spark.implicits._
-    // both tables derive from the trained `cents` array into disjoint
-    // directories — written concurrently (guide §2.6): the tiny
+    // both tables derive from the trained `cents` array: the tiny
     // centroid write rides inside the assignment write's window
-    graft.util.Par.all(
-      () => cents.zipWithIndex.toSeq
-        .map { case (c, i) => (i + 1, c.toSeq) }
-        .toDF("cell", "qcentroid")
-        .coalesce(1) // nCells rows — one tiny footer
-        .write.mode("overwrite").parquet(s"$indexDir/${tables("qcentroids")}"),
-      () => assignCellsFixedPoint(corpus, idCol, vecCol, cents)
-        .withColumn("batch", lit(0L))
-        .write.mode("overwrite").parquet(s"$indexDir/${tables("assignments")}"))
-    tables
+    GenManifest.writeGeneration(spark, indexDir, live,
+      Seq("qcentroids" -> (() => cents.zipWithIndex.toSeq
+            .map { case (c, i) => (i + 1, c.toSeq) }
+            .toDF("cell", "qcentroid")
+            .coalesce(1)), // nCells rows — one tiny footer
+          "assignments" -> (() => assignCellsFixedPoint(corpus, idCol, vecCol, cents)
+            .withColumn("batch", lit(0L)))),
+      fresh = true)
   }
 
   def buildIvfIndexFixedPoint(corpus: DataFrame, idCol: String, vecCol: String,
                               indexDir: String, nCells: Int = ivfKmeansCells,
-                              iters: Int = ivfKmeansIters): Unit = {
-    val spark = corpus.sparkSession
-    val gen = GenManifest.load(spark, indexDir).map(_.gen + 1).getOrElse(1L)
-    val tables = writeIvfGeneration(corpus, idCol, vecCol, indexDir, gen,
-      nCells, iters)
-    GenManifest.publish(spark, indexDir, graft.util.IndexManifest(
-      gen, watermark = 0L, meta = Map.empty, tables = tables))
-    GenManifest.gcGenerations(spark, indexDir)
-  }
+                              iters: Int = ivfKmeansIters): Unit =
+    writeIvfGeneration(corpus, idCol, vecCol, indexDir,
+      GenManifest.load(corpus.sparkSession, indexDir), nCells, iters)
 
-  /** Frozen-centroid append: assigns `rows` with the live centroids and
-    * appends to the live assignments generation, stamping the rows with
-    * batch = watermark+1 (the version a later takedown hides up to) and
-    * publishing the watermark bump atomically.
+  /** Frozen-centroid append ([[graft.util.GenManifest.appendBatch]]):
+    * assigns `rows` with the live centroids and appends to the live
+    * assignments generation, stamping the rows with batch =
+    * watermark+1 (the version a later takedown hides up to).
     */
   def appendIvfIndexFixedPoint(rows: DataFrame, idCol: String, vecCol: String,
-                               indexDir: String): Unit = {
-    val spark = rows.sparkSession
-    val m = GenManifest.required(spark, indexDir)
-    val batchNo = m.watermark + 1
-    assignCellsFixedPoint(rows, idCol, vecCol, loadQCentroids(spark, indexDir))
-      .withColumn("batch", lit(batchNo))
-      .write.mode("append").parquet(m.tableDir(indexDir, "assignments"))
-    GenManifest.publish(spark, indexDir,
-      m.copy(gen = m.gen + 1, watermark = batchNo))
-  }
+                               indexDir: String): Unit =
+    GenManifest.appendBatch(rows.sparkSession, indexDir) { (m, batchNo) =>
+      Seq("assignments" -> assignCellsFixedPoint(rows, idCol, vecCol,
+          loadQCentroids(rows.sparkSession, indexDir, m))
+        .withColumn("batch", lit(batchNo)))
+    }
 
-  private[graft] def loadQCentroids(spark: SparkSession,
-                                    indexDir: String): Array[Array[Long]] =
-    spark.read.parquet(GenManifest.tablePath(spark, indexDir, "qcentroids"))
+  /** The centroids of the generation manifest `m` names — the same
+    * manifest the caller reads the inverted lists from, so a retrain
+    * publishing in between can never pair new centroids with old lists.
+    */
+  private[graft] def loadQCentroids(spark: SparkSession, indexDir: String,
+                                    m: graft.util.IndexManifest): Array[Array[Long]] =
+    spark.read.parquet(m.tableDir(indexDir, "qcentroids"))
       .collect()
       .sortBy(_.getInt(0))
       .map(_.getSeq[Long](1).toArray)
@@ -479,7 +469,7 @@ object Similarity {
                               queries: DataFrame, idCol: String, vecCol: String,
                               k: Int, nProbe: Int = ivfKmeansProbe): DataFrame = {
     val m = GenManifest.required(spark, indexDir)
-    val cents = loadQCentroids(spark, indexDir)
+    val cents = loadQCentroids(spark, indexDir, m)
     // a retired vector must stop surfacing from the moment of the
     // takedown, not the next retrain: visibility-filter the inverted
     // lists at probe time (broadcast of the tiny ledger agg; identity
@@ -913,25 +903,21 @@ object Similarity {
     * the hidden rows physically folded out and the ledger dropped,
     * WITHOUT touching the centroids (no retraining — frozen-centroid
     * assignment rows are preserved verbatim, so queries are invariant
-    * except for retired candidates). Published by one atomic manifest
-    * flip like [[graft.operators.Dedup.compactLshIndex]]. The e24 gate
+    * except for retired candidates). One new generation
+    * ([[graft.util.GenManifest.writeGeneration]]) like
+    * [[graft.operators.Dedup.compactLshIndex]]. The e24 gate
     * hash-checks a build→append→tombstone→COMPACT→append→tombstone→
     * query cycle against the e13 chain minus the retired candidates.
     */
   def compactIvfIndexFixedPoint(spark: SparkSession, indexDir: String,
                                 targetFiles: Int = 32): Unit = {
     val m = GenManifest.required(spark, indexDir)
-    val gen = m.gen + 1
-    val asgDir = GenManifest.genDirName("assignments", gen)
-    graft.util.Tombstones.visible(
-        spark.read.parquet(m.tableDir(indexDir, "assignments")),
-        "neighbor_id", graft.util.Tombstones.aggOf(spark, indexDir, m))
-      .coalesce(targetFiles)
-      .write.mode("overwrite").parquet(s"$indexDir/$asgDir")
-    GenManifest.publish(spark, indexDir, m.copy(gen = gen,
-      tables = (m.tables - graft.util.Tombstones.table) ++
-        Map("assignments" -> asgDir)))
-    GenManifest.gcGenerations(spark, indexDir)
+    GenManifest.writeGeneration(spark, indexDir, Some(m),
+      Seq("assignments" -> (() => graft.util.Tombstones.visible(
+          spark.read.parquet(m.tableDir(indexDir, "assignments")),
+          "neighbor_id", graft.util.Tombstones.aggOf(spark, indexDir, m))
+        .coalesce(targetFiles))),
+      drop = Set(graft.util.Tombstones.table))
   }
 
   /** Second slice point for the e24 compaction gate: delta₁ =
@@ -982,12 +968,10 @@ object Similarity {
     * e21 occupancy/drift audit exists to trigger (frozen-centroid
     * appends never rebalance; when drift or skew crosses the line, the
     * deployment re-trains on the corpus it actually serves). Centroids
-    * re-train and every row re-assigns, written as a complete NEW
-    * GENERATION and published by ONE atomic manifest rename — a reader
+    * re-train and every row re-assigns as one fresh generation at
+    * watermark 0 ([[graft.util.GenManifest.writeGeneration]]: a reader
     * mid-retrain resolves the complete old index, a crash before
-    * publish leaves the old manifest live (the
-    * [[graft.operators.Dedup.compactLshIndex]] protocol; the previous
-    * generation survives one maintenance cycle for in-flight readers).
+    * publish leaves the old manifest live).
     * Tombstones FOLD here (the d30 move): ids whose every index row is
     * hidden — retired and never re-ingested — drop out of the training
     * and assignment corpus physically, and the ledger drops out of the
@@ -1019,12 +1003,7 @@ object Similarity {
       corpus.join(broadcast(retired.select(col("id").as(idCol))),
         Seq(idCol), "left_anti")
     }
-    val gen = m.gen + 1
-    val tables = writeIvfGeneration(live, idCol, vecCol, indexDir, gen,
-      nCells, iters)
-    GenManifest.publish(spark, indexDir, graft.util.IndexManifest(
-      gen, watermark = 0L, meta = Map.empty, tables = tables))
-    GenManifest.gcGenerations(spark, indexDir)
+    writeIvfGeneration(live, idCol, vecCol, indexDir, Some(m), nCells, iters)
   }
 
   /** e22: the IVF index LIFECYCLE closed — build the frozen index on

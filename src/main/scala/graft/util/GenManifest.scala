@@ -46,12 +46,13 @@ final case class IndexManifest(gen: Long, watermark: Long,
   *    missing table. A crash before publish leaves the old manifest
   *    live and the half-written generation unreferenced (reclaimed by
   *    the next [[gcGenerations]]);
-  *  - [[gcGenerations]] (run by maintenance ops after publishing)
-  *    deletes generation directories referenced by NEITHER of the
-  *    newest two manifests — so a reader that resolved just before a
-  *    publish keeps a complete readable generation through one full
-  *    maintenance cycle (the documented reader-grace contract; a
-  *    lease-based protocol would extend it, out of scope here).
+  *  - [[gcGenerations]] runs after EVERY generation write (build,
+  *    compact, re-band, retrain and takedown alike) and deletes
+  *    generation directories referenced by NEITHER of the newest two
+  *    manifests — so a reader that resolved just before a publish keeps
+  *    a complete readable generation through one full maintenance cycle
+  *    (the documented reader-grace contract; a lease-based protocol
+  *    would extend it, out of scope here).
   *
   * Appends do not create generations — they add parquet part-files to
   * the live directories and publish a watermark bump; the manifest
@@ -59,6 +60,12 @@ final case class IndexManifest(gen: Long, watermark: Long,
   * on every publish (their table references collapse to at most two
   * distinct generations, so pruning never strands a reader the
   * gc-grace contract protects).
+  *
+  * The protocol has exactly two entry points, and every persisted-index
+  * operation goes through one of them: [[writeGeneration]] (build,
+  * compact, re-band, retrain, takedown) and [[appendBatch]] (append).
+  * Publishing, GC and directory naming are private to this package, so
+  * no operation can hand-roll its own sequence.
   */
 object GenManifest {
 
@@ -68,7 +75,7 @@ object GenManifest {
     */
   val manifestKeep = 8
 
-  def genDirName(table: String, gen: Long): String = f"${table}_g$gen%06d"
+  private[util] def genDirName(table: String, gen: Long): String = f"${table}_g$gen%06d"
 
   private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
@@ -134,7 +141,7 @@ object GenManifest {
     * generation is ever silently dropped. Prunes manifest files beyond
     * the newest [[manifestKeep]].
     */
-  def publish(spark: SparkSession, indexDir: String, m: IndexManifest): Unit = {
+  private[util] def publish(spark: SparkSession, indexDir: String, m: IndexManifest): Unit = {
     val (fs, root) = fsOf(spark, indexDir)
     if (!fs.exists(root)) fs.mkdirs(root)
     val target = new Path(root, f"$Prefix${m.gen}%012d")
@@ -163,12 +170,12 @@ object GenManifest {
   }
 
   /** Delete generation directories referenced by NEITHER of the newest
-    * `keep` manifests — run by maintenance ops AFTER publishing, so the
+    * `keep` manifests — run by [[writeGeneration]] AFTER publishing, so the
     * previous generation stays readable through one maintenance cycle
     * (the reader-grace contract). Only `*_g<digits>` directories are
     * candidates: foreign files under the index root are never touched.
     */
-  def gcGenerations(spark: SparkSession, indexDir: String, keep: Int = 2): Unit = {
+  private[util] def gcGenerations(spark: SparkSession, indexDir: String, keep: Int = 2): Unit = {
     val (fs, root) = fsOf(spark, indexDir)
     if (!fs.exists(root)) return
     val recent = manifestFiles(fs, root).takeRight(keep)
@@ -182,6 +189,64 @@ object GenManifest {
       if (st.isDirectory && genDir.matches(n) && !live.contains(n))
         fs.delete(st.getPath, true)
     }
+  }
+
+  /** NEW GENERATION: write every `tables` frame into its own
+    * `<table>_g<gen+1>` directory, then publish ONE manifest naming them
+    * and collect stale generations. The frames are built and written
+    * CONCURRENTLY through [[Par.all]] (guide §2.6: serial writes pay one
+    * driver gap per table; overlapped, each write's tasks back-fill the
+    * others' tails, and the driver-side work of building a frame, such
+    * as a parquet read's schema job, overlaps too), so they must not
+    * read each other's output. Reads and writes
+    * never share a path: a reader mid-write resolves the complete old
+    * generation; a failure in any lane propagates before the publish,
+    * leaving the old manifest live and the half-written directories
+    * unreferenced until the next call's GC. The previous generation
+    * survives one more call (the reader grace of [[gcGenerations]]).
+    *
+    * `live` is the manifest the caller resolved its inputs from (None:
+    * never published). The new manifest keeps `live`'s watermark, meta
+    * and tables, merges `meta`, drops `drop` and names the written
+    * tables — or, when `fresh` (build, retrain), is a new index at
+    * watermark 0 holding only the written tables and `meta`.
+    */
+  def writeGeneration(spark: SparkSession, indexDir: String,
+                      live: Option[IndexManifest],
+                      tables: Seq[(String, () => DataFrame)],
+                      meta: Map[String, String] = Map.empty,
+                      drop: Set[String] = Set.empty,
+                      fresh: Boolean = false): Unit = {
+    require(fresh || live.isDefined,
+      s"no index manifest under $indexDir — build the index first")
+    val gen = live.fold(1L)(_.gen + 1)
+    val dirs = tables.map { case (t, _) => t -> genDirName(t, gen) }.toMap
+    Par.all(tables.map { case (t, df) =>
+      () => df().write.mode("overwrite").parquet(s"$indexDir/${dirs(t)}")
+    }: _*)
+    publish(spark, indexDir,
+      if (fresh) IndexManifest(gen, watermark = 0L, meta, dirs)
+      else live.get.copy(gen = gen, meta = live.get.meta ++ meta,
+        tables = live.get.tables -- drop ++ dirs))
+    gcGenerations(spark, indexDir)
+  }
+
+  /** APPEND BATCH: resolve the live manifest, hand it to `tables` with
+    * the batch number (watermark + 1 — the version its rows carry and a
+    * later takedown hides up to), append the returned frames to the
+    * live table directories concurrently through [[Par.all]], then
+    * publish the watermark bump. No generation is created and nothing
+    * is collected. `tables` runs before any append, so a probe it makes
+    * against the live directories never sees this batch's rows.
+    */
+  def appendBatch(spark: SparkSession, indexDir: String)(
+      tables: (IndexManifest, Long) => Seq[(String, DataFrame)]): Unit = {
+    val m = required(spark, indexDir)
+    val batch = m.watermark + 1
+    Par.all(tables(m, batch).map { case (t, df) =>
+      () => df.write.mode("append").parquet(m.tableDir(indexDir, t))
+    }: _*)
+    publish(spark, indexDir, m.copy(gen = m.gen + 1, watermark = batch))
   }
 }
 
@@ -225,15 +290,14 @@ object Tombstones {
     }
 
   /** Record a takedown of `ids` (first column) at the CURRENT
-    * watermark. The ledger goes through the SAME atomic protocol as
-    * every other table — the new ledger generation (previous entries ∪
-    * the new ones) is fully written first, then one manifest flip
-    * publishes it: a reader mid-takedown sees the complete previous
-    * ledger, never a half-committed file set (a plain parquet append
-    * into the live directory would be the one state change outside the
-    * old-or-new guarantee). The rewrite is bounded by the ledger —
-    * takedown events, not data — by contract. Retirement is immediate
-    * on publish — readers hide the rows at probe time; physical
+    * watermark: the ledger (previous entries ∪ the new ones) is written
+    * as a new generation ([[GenManifest.writeGeneration]]), so a reader
+    * mid-takedown sees the complete previous ledger, never a
+    * half-committed file set (a plain parquet append into the live
+    * directory would be the one state change outside the old-or-new
+    * guarantee). The rewrite is bounded by the ledger — takedown
+    * events, not data — by contract. Retirement is immediate on
+    * publish — readers hide the rows at probe time; physical
     * reclamation happens at the next compaction/retrain.
     */
   def record(ids: DataFrame, indexDir: String): Unit = {
@@ -241,13 +305,7 @@ object Tombstones {
     val m = GenManifest.required(spark, indexDir)
     val newRows = ids.select(col(ids.columns.head).as("id"))
       .withColumn("wm", org.apache.spark.sql.functions.lit(m.watermark))
-    val ledger = m.tables.get(table)
-      .map(d => spark.read.parquet(s"$indexDir/$d").unionByName(newRows))
-      .getOrElse(newRows)
-    val gen = m.gen + 1
-    val d = GenManifest.genDirName(table, gen)
-    ledger.write.mode("overwrite").parquet(s"$indexDir/$d")
-    GenManifest.publish(spark, indexDir,
-      m.copy(gen = gen, tables = m.tables ++ Map(table -> d)))
+    val ledger = aggOf(spark, indexDir, m).fold(newRows)(_.unionByName(newRows))
+    GenManifest.writeGeneration(spark, indexDir, Some(m), Seq(table -> (() => ledger)))
   }
 }

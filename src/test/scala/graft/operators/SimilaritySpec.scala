@@ -568,7 +568,9 @@ class SimilaritySpec extends SparkSpec {
     Similarity.appendIvfIndexFixedPoint(
       emb.filter($"vec_id" >= Similarity.indexBaseSplit),
       "vec_id", "embedding", idxDir)
-    val centsBefore = Similarity.loadQCentroids(spark, idxDir).map(_.toSeq).toSeq
+    def centroids(): Seq[Seq[Long]] = Similarity.loadQCentroids(spark, idxDir,
+      graft.util.GenManifest.required(spark, idxDir)).map(_.toSeq).toSeq
+    val centsBefore = centroids()
     val queries = emb.filter($"vec_id" < 10)
     def answers(): Seq[(Long, Long, Long)] =
       Similarity.queryIvfIndexFixedPoint(spark, idxDir, queries,
@@ -584,7 +586,7 @@ class SimilaritySpec extends SparkSpec {
     assert(answers() == before, "tombstone-free compaction must not change answers")
     assert(asgFiles() == 1 && asgFiles() < filesBefore,
       s"compaction must collapse the file sets: $filesBefore -> ${asgFiles()}")
-    assert(Similarity.loadQCentroids(spark, idxDir).map(_.toSeq).toSeq == centsBefore,
+    assert(centroids() == centsBefore,
       "compaction must not touch the centroids")
     // with a tombstone: the fold removes exactly the retired candidate
     val victim = before.head._3

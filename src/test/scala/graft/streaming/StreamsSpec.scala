@@ -353,7 +353,8 @@ class StreamsSpec extends SparkSpec {
     // the drained stream's index must answer queries exactly like an
     // in-memory full-corpus assignment with the SAME frozen centroids
     val idxDir = graft.util.Scratch.resolve(spark, "s13_idx", sf).toString
-    val cents = Similarity.loadQCentroids(spark, idxDir)
+    val cents = Similarity.loadQCentroids(spark, idxDir,
+      graft.util.GenManifest.required(spark, idxDir))
     val fresh = Similarity.ivfTopKWithQCentroids(emb,
       emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5, cents)
       .collect().map(_.toSeq).toSeq

@@ -1,7 +1,7 @@
 package graft.util
 
 import graft.SparkSpec
-import graft.operators.Dedup
+import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
 
 /** The atomic-publication contract of [[GenManifest]]: a reader
@@ -92,6 +92,41 @@ class GenManifestSpec extends SparkSpec {
     } finally Scratch.rmTree(java.nio.file.Paths.get(idxDir))
   }
 
+  /** Run `write(1..cycles)` while a reader thread loops `probe`; every
+    * probe must pass `check` and none may throw (no missing table, no
+    * half-written generation). Between writes, wait until the reader
+    * completes two more probes — so any iteration in flight at the NEXT
+    * publish+GC started after the previous cycle finished, i.e. no
+    * reader is ever more than one generation stale (the documented
+    * grace: GC keeps the newest two manifests' directories).
+    */
+  private def withInterleavedReader[T](cycles: Int, probe: () => T)(
+      check: T => Unit)(write: Int => Unit): Unit = {
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reader = new Thread(() => {
+      try {
+        while (!stop.get()) {
+          check(probe())
+          reads.incrementAndGet()
+        }
+      } catch { case t: Throwable => failure.set(t) }
+    }, "graft-manifest-race-reader")
+    reader.start()
+    try (1 to cycles).foreach { i =>
+      val before = reads.get()
+      write(i)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (reads.get() < before + 2 && failure.get() == null &&
+             System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      stop.set(true); reader.join(120000)
+    }
+    if (failure.get() != null) throw failure.get()
+    assert(reads.get() > 0, "reader must have probed at least once")
+  }
+
   test("reader interleaved with live compactions never observes a missing or mixed index") {
     val docs = corpus(150).localCheckpoint(true)
     val idxDir = tempDir("graft_manifest_race").toString
@@ -101,40 +136,88 @@ class GenManifestSpec extends SparkSpec {
       val expected = Dedup.detectDeltaPairs(delta, "doc_id", "text", idxDir)
         .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
       assert(expected.nonEmpty, "fixture must detect cross-split pairs")
-      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      val reads = new java.util.concurrent.atomic.AtomicInteger(0)
-      // reader thread: re-resolve + probe in a loop while the writer
-      // compacts underneath it — every probe must return exactly the
-      // invariant pair set (compaction is detection-invariant), and
-      // none may throw (no missing table, no half-written generation)
-      val reader = new Thread(() => {
-        try {
-          while (!stop.get()) {
-            val got = Dedup.detectDeltaPairs(delta, "doc_id", "text", idxDir)
-              .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-            assert(got == expected, s"mid-compaction probe diverged: $got")
-            reads.incrementAndGet()
-          }
-        } catch { case t: Throwable => failure.set(t) }
-      }, "graft-manifest-race-reader")
-      reader.start()
-      // between compactions, wait until the reader completes two more
-      // probes — so any iteration in flight at the NEXT publish+GC
-      // started after the previous cycle finished, i.e. no reader is
-      // ever more than one generation stale (the documented grace:
-      // GC keeps the newest two manifests' directories)
-      try (1 to 3).foreach { _ =>
-        val before = reads.get()
-        Dedup.compactLshIndex(spark, idxDir, targetFiles = 2)
-        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-        while (reads.get() < before + 2 && failure.get() == null &&
-               System.nanoTime() < deadline) Thread.sleep(20)
-      } finally {
-        stop.set(true); reader.join(120000)
+      // every probe must return exactly the invariant pair set
+      // (compaction is detection-invariant)
+      withInterleavedReader(3, () =>
+        Dedup.detectDeltaPairs(delta, "doc_id", "text", idxDir)
+          .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet) { got =>
+        assert(got == expected, s"mid-compaction probe diverged: $got")
+      } { _ => Dedup.compactLshIndex(spark, idxDir, targetFiles = 2) }
+    } finally Scratch.rmTree(java.nio.file.Paths.get(idxDir))
+  }
+
+  test("IVF reader interleaved with live retrains pairs centroids and lists of one generation") {
+    val emb = graft.Tables.embeddings(spark, sf).localCheckpoint(true)
+    // two corpora whose indexes answer differently: a probe that paired
+    // one generation's centroids with the other's inverted lists would
+    // match neither single-generation answer
+    val corpora = Seq(emb, emb.filter($"vec_id" % 3 =!= 0).localCheckpoint(true))
+    val queries = emb.filter($"vec_id" < 10).localCheckpoint(true)
+    val idxDir = tempDir("graft_manifest_ivf_race").toString
+    def answer(): Seq[(Long, Long, Long)] =
+      Similarity.queryIvfIndexFixedPoint(spark, idxDir, queries,
+        "vec_id", "embedding", k = 5).as[(Long, Long, Long)].collect().toSeq
+    def retrain(i: Int): Unit = Similarity.retrainIvfIndexFixedPoint(
+      corpora(i % 2), "vec_id", "embedding", idxDir)
+    try {
+      Similarity.buildIvfIndexFixedPoint(corpora(1), "vec_id", "embedding", idxDir)
+      val expected = (0 to 1).map { i => retrain(i); answer() }
+      assert(expected(0) != expected(1), "the two corpora must answer differently")
+      withInterleavedReader(4, () => answer()) { got =>
+        assert(expected.contains(got), s"mid-retrain probe matches neither generation: $got")
+      } { i => retrain(i - 1) }
+    } finally Scratch.rmTree(java.nio.file.Paths.get(idxDir))
+  }
+
+  test("takedowns collect stale ledger generations: three takedowns leave at most two on disk") {
+    val idxDir = tempDir("graft_ledger_gc").toString
+    try {
+      Dedup.buildLshIndex(corpus(30), "doc_id", "text", idxDir)
+      (1L to 3L).foreach(id => Dedup.tombstoneLshDocs(Seq(id).toDF("id"), idxDir))
+      val ledgers = new java.io.File(idxDir).listFiles().map(_.getName)
+        .filter(_.matches("tombstones_g\\d{6,}"))
+      assert(ledgers.length <= 2,
+        s"takedowns must GC superseded ledger generations: ${ledgers.sorted.mkString(", ")}")
+    } finally Scratch.rmTree(java.nio.file.Paths.get(idxDir))
+  }
+
+  test("a failed lane leaves the old manifest live; the next generation write collects its orphans") {
+    val docs = corpus(120).localCheckpoint(true)
+    val idxDir = tempDir("graft_manifest_crash").toString
+    try {
+      Dedup.buildLshIndex(docs.filter($"doc_id" < 80), "doc_id", "text", idxDir)
+      val delta = docs.filter($"doc_id" >= 80)
+      def probe(): Set[(Long, Long)] =
+        Dedup.detectDeltaPairs(delta, "doc_id", "text", idxDir)
+          .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
+      val m0 = GenManifest.required(spark, idxDir)
+      val before = probe()
+      // a re-band whose bands lane throws while it executes; the sizes
+      // lane completes, leaving a written but unpublished directory
+      val bands = spark.read.parquet(m0.tableDir(idxDir, "bands"))
+      val boom = intercept[Exception] {
+        GenManifest.writeGeneration(spark, idxDir, Some(m0),
+          Seq("sizes" -> (() => spark.read.parquet(m0.tableDir(idxDir, "sizes"))),
+              "bands" -> (() => bands.withColumn("band", coalesce(
+                raise_error(lit("injected lane failure")).cast("int"), $"band")))),
+          meta = Map("bands" -> "16", "rows" -> "2"))
       }
-      if (failure.get() != null) throw failure.get()
-      assert(reads.get() > 0, "reader must have probed at least once")
+      assert(Iterator.iterate[Throwable](boom)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("injected lane failure")),
+        s"the lane's own failure must propagate: $boom")
+      assert(GenManifest.load(spark, idxDir).contains(m0), "a failed write must not publish")
+      assert(probe() == before, "readers must keep the pre-operation answer")
+      // the next successful generation write (a takedown) GCs the
+      // unpublished directories: every generation directory left on
+      // disk is named by one of the newest two manifests
+      Dedup.tombstoneLshDocs(Seq(0L).toDF("id"), idxDir)
+      val m1 = GenManifest.required(spark, idxDir)
+      assert(m1.gen == m0.gen + 1)
+      val named = (m0.tables.values ++ m1.tables.values).toSet
+      val onDisk = new java.io.File(idxDir).listFiles()
+        .filter(f => f.isDirectory && f.getName.matches(".*_g\\d{6,}")).map(_.getName).toSet
+      assert(onDisk.subsetOf(named), s"orphaned generations: ${onDisk -- named}")
+      assert(!onDisk.contains(f"sizes_g${m0.gen + 1}%06d"), "the failed lane's output must be GC'd")
     } finally Scratch.rmTree(java.nio.file.Paths.get(idxDir))
   }
 }
