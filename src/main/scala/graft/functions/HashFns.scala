@@ -204,41 +204,6 @@ object HashFns {
     GraftColumnBridge.column(SortedJaccard(GraftColumnBridge.expression(a),
                                            GraftColumnBridge.expression(b)))
 
-  /** Fraction of matching MinHash signature components — the cheap
-    * jaccard estimator used to prefilter LSH candidates. One primitive
-    * loop over the two long arrays (the `aggregate(zip_with(...))`
-    * formulation runs a lambda per component per row).
-    */
-  def sigMatchFrac(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    if (n == 0) return 0.0
-    var same = 0
-    var i = 0
-    while (i < n) {
-      if (a.getLong(i) == b.getLong(i)) same += 1
-      i += 1
-    }
-    same.toDouble / n
-  }
-
-  case class SigMatchFrac(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "sig_match_frac"
-    override def nullSafeEval(a: Any, b: Any): Any =
-      sigMatchFrac(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"graft.functions.HashFns.sigMatchFrac($a, $b)")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  def signatureMatchFraction(a: Column, b: Column): Column =
-    GraftColumnBridge.column(SigMatchFrac(GraftColumnBridge.expression(a),
-                                          GraftColumnBridge.expression(b)))
-
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken's
     * public MOSS algorithm): Rabin-Karp ROLLING hash over byte k-grams
     * (O(1) per position — one multiply, one subtract, one add), then

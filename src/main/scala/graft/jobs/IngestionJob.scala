@@ -20,36 +20,16 @@ object IngestionJob {
   case class Result(totalExpected: Long, collected: Long, erreurs: Long,
                     reconciled: Boolean)
 
-  /** Registry-mode entry (in-JVM API fakes / `local[*]`). */
-  def run(spark: SparkSession, apiKey: String, tokens: Seq[String],
-          outDir: String): Result =
-    runWithOptions(spark,
-      Map("api" -> apiKey, "tokens" -> tokens.mkString(",")), outDir)
-
-  /** Options-mode entry — the same job over any client the source can
-    * resolve, notably the production HTTP client (`endpoint` +
-    * `authUrl`/`secrets`): the reference's `__main__` run, network and
-    * all.
+  /** The reference's `__main__` run, network and all, over the
+    * source's options (`endpoint`, `authUrl`, `secrets`, optionally
+    * `maxPerFilter`/`pageSize`).
     */
   def runWithOptions(spark: SparkSession, options: Map[String, String],
                      outDir: String): Result = {
     val startS = System.currentTimeMillis() / 1000
     val lower = options.map { case (k, v) => k.toLowerCase -> v }
-    // HTTP-mode planning probes authenticate with the first credential
-    // slot, exactly like OffresScan.planInputPartitions — whether the
-    // credentials come from the OAuth flow or pre-issued tokens
-    val planOpts = lower.get("endpoint") match {
-      case Some(_) =>
-        val planTok = (lower.get("authurl"), lower.get("secrets")) match {
-          case (Some(url), Some(s)) =>
-            Some(OffresApiResolver.tokenProvider(url, s).token(0))
-          case _ => lower.get("tokens").map(_.split(",").head)
-        }
-        planTok.map(t => lower + ("planningtoken" -> t)).getOrElse(lower)
-      case None => lower
-    }
-    val api = OffresApiResolver.resolve(planOpts)
-    val sourceKey = OffresApiResolver.sourceKey(lower)
+    val api = OffresApiResolver.resolve(lower)
+    val sourceKey = lower("endpoint")
     // discard overflow records leaked by a previously failed/aborted run
     // for this source — this run's erreurs must reflect THIS run
     graft.sources.OverflowLog.drain(sourceKey)

@@ -52,12 +52,13 @@ object AdaptivePlanner {
     * a count probe (A1/A2). `departements` maps departement code → its
     * region code (the nested d['region']['code'] of the référentiel);
     * `metiers` is the ROME code list.
-    */
-  /** `base` carries externally-pushed predicates (e.g. a romeCode
-    * equality from DSv2 filter pushdown) into every probed filter. When
-    * `base.codeRome` is already set, the departement×métier level is
-    * skipped (the métier dimension is spent) and saturated departements
-    * overflow directly.
+    *
+    * `base` carries externally-pushed predicates (DSv2 filter pushdown)
+    * into every probed filter. When `base.departement` is set the plan
+    * starts at the departement level (`regions` and `departements` are
+    * not used). When `base.codeRome` is set the departement×métier level
+    * is skipped (the métier dimension is spent) and saturated
+    * departements overflow directly.
     */
   def plan(count: FetchFilter => Long,
            regions: Seq[String],
@@ -69,30 +70,34 @@ object AdaptivePlanner {
     val parts = Seq.newBuilder[FetchPartition]
     val over = Seq.newBuilder[Overflow]
 
-    regions.foreach { r =>
-      val fr = base.copy(region = Some(r), departement = None)
-      val totalR = count(fr)
-      if (totalR <= 0) () // skip empty
-      else if (totalR <= maxPerFilter) parts ++= pages(fr, totalR, pageSize)
+    def departement(d: String): Unit = {
+      val fd = base.copy(region = None, departement = Some(d))
+      val totalD = count(fd)
+      if (totalD <= 0) ()
+      else if (totalD <= maxPerFilter) parts ++= pages(fd, totalD, pageSize)
+      else if (base.codeRome.isDefined) over += Overflow(fd, totalD)
       else {
-        // J1: departements of this region (the departement⋈region equi-join)
-        departements.collect { case (d, reg) if reg == r => d }.toSeq.sorted.foreach { d =>
-          val fd = base.copy(region = None, departement = Some(d))
-          val totalD = count(fd)
-          if (totalD <= 0) ()
-          else if (totalD <= maxPerFilter) parts ++= pages(fd, totalD, pageSize)
-          else if (base.codeRome.isDefined) over += Overflow(fd, totalD)
-          else {
-            // J2: departement × métier matrix
-            metiers.foreach { m =>
-              val fm = FetchFilter(departement = Some(d), codeRome = Some(m))
-              val totalM = count(fm)
-              if (totalM <= 0) ()
-              else if (totalM <= maxPerFilter) parts ++= pages(fm, totalM, pageSize)
-              else over += Overflow(fm, totalM) // skip-and-log, never silent
-            }
-          }
+        // J2: departement × métier matrix
+        metiers.foreach { m =>
+          val fm = FetchFilter(departement = Some(d), codeRome = Some(m))
+          val totalM = count(fm)
+          if (totalM <= 0) ()
+          else if (totalM <= maxPerFilter) parts ++= pages(fm, totalM, pageSize)
+          else over += Overflow(fm, totalM) // skip-and-log, never silent
         }
+      }
+    }
+
+    base.departement match {
+      case Some(d) => departement(d)
+      case None => regions.foreach { r =>
+        val fr = base.copy(region = Some(r))
+        val totalR = count(fr)
+        if (totalR <= 0) () // skip empty
+        else if (totalR <= maxPerFilter) parts ++= pages(fr, totalR, pageSize)
+        // J1: departements of this region (the departement⋈region equi-join)
+        else departements.collect { case (d, reg) if reg == r => d }.toSeq.sorted
+          .foreach(departement)
       }
     }
     Plan(parts.result(), over.result())

@@ -9,9 +9,10 @@ import java.util.concurrent.ConcurrentHashMap
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.sources.AdaptivePlanner.{FetchFilter, PageRange}
 
-/** Production [[OffresApi]] over `java.net.http` (JDK built-in — zero
-  * new dependencies). Speaks the reference client's protocol
-  * (`ingestion-francetravail/ingestion-elasticsearch.py:66-130`):
+/** The France Travail offres API client, over `java.net.http` (JDK
+  * built-in — zero new dependencies), and the only way
+  * [[OffresSource]] reaches the API. Speaks the reference client's
+  * protocol (`ingestion-francetravail/ingestion-elasticsearch.py:66-130`):
   *
   *  - `GET {endpoint}/offres/search?range=a-b[&region&departement&codeROME]`
   *    with `Authorization: Bearer <token>`; results in the `resultats`
@@ -19,39 +20,25 @@ import graft.sources.AdaptivePlanner.{FetchFilter, PageRange}
   *    (parse at `ingestion-elasticsearch.py:62-63,95-97`);
   *  - 200/206 = page OK, 204 = empty result set
   *    (`ingestion-elasticsearch.py:85-98`);
-  *  - 429 → honor `Retry-After` seconds (`ingestion-elasticsearch.py:79-83`).
-  *    [[fetch]] THROWS [[RateLimitedException]] — the partition reader
-  *    owns task-side backoff; [[count]]/[[referentiel]] (driver-side
-  *    planning, no reader above them) sleep-retry internally;
+  *  - 429 → sleep `Retry-After` and retry, inside the one request path
+  *    [[count]], [[fetch]] and [[referentiel]] share
+  *    (`ingestion-elasticsearch.py:79-83`); after ten throttled answers
+  *    to one request it throws [[RateLimitedException]];
   *  - OAuth2 client-credentials POST → `access_token`/`expires_in`
   *    (`ingestion-elasticsearch.py:10-25`) via [[HttpOffresApi.authenticate]].
   *
-  * Instances are constructed executor-side from plain string options
-  * (endpoint + an optional planning token) — the class carries only
-  * strings; the HttpClient/ObjectMapper are `@transient lazy`, rebuilt
-  * per JVM. Unexpected HTTP statuses throw: Spark task retry is the
-  * outer guard, and the ingestion job's dead-letter capture records the
+  * [[count]] and [[referentiel]] authenticate with the token
+  * `planningToken` supplies per request; [[fetch]] takes its page's
+  * token. Unexpected HTTP statuses throw: Spark task retry is the outer
+  * guard, and the ingestion job's dead-letter capture records the
   * failure (S7).
   */
-class HttpOffresApi(endpoint: String,
-                    planningTokenSupplier: () => Option[String] = () => None)
-    extends OffresApi {
+class HttpOffresApi(endpoint: String, planningToken: () => Option[String]) {
 
-  /** Driver-side probe token, fetched per probe from the supplier the
-    * resolver bound at construction: rotation-aware in auth mode (the
-    * supplier consults the expiry-aware [[TokenProvider]]), constant in
-    * static-token mode. Instances are cached per (endpoint,
-    * credentials), so two scans planning concurrently with different
-    * credentials never see each other's token, and a token ROTATION
-    * reuses the same instance/HttpClient instead of leaking one per
-    * TTL.
-    */
-  private def planningToken: Option[String] = planningTokenSupplier()
-
-  @transient private lazy val client: HttpClient = HttpClient.newBuilder()
+  private val client: HttpClient = HttpClient.newBuilder()
     .connectTimeout(Duration.ofSeconds(10))
     .build()
-  @transient private lazy val mapper = new ObjectMapper()
+  private val mapper = new ObjectMapper()
 
   private def enc(s: String) = URLEncoder.encode(s, StandardCharsets.UTF_8)
 
@@ -101,24 +88,24 @@ class HttpOffresApi(endpoint: String,
     h.get.split('/').last.trim.toLong
   }
 
-  /** Driver-side probes sleep-retry on 429 themselves (bounded): there
-    * is no partition reader above planning to own the backoff.
+  /** GET `uri`, sleeping `Retry-After` on each 429 (bounded): the one
+    * rate-limit loop every request goes through.
     */
-  private def getWithPlanningBackoff(uri: URI): HttpResponse[String] = {
-    var attempts = 0
-    while (true) {
-      val res = get(uri, planningToken)
-      if (res.statusCode() != 429) return res
-      if (attempts >= 10)
-        throw new RuntimeException(s"still rate-limited after $attempts retries: $uri")
-      attempts += 1
+  private def getWithBackoff(uri: URI, token: Option[String]): HttpResponse[String] = {
+    var res = get(uri, token)
+    var retries = 0
+    while (res.statusCode() == 429) {
+      if (retries >= HttpOffresApi.MaxRetries) throw new RateLimitedException(retryAfterMs(res))
+      retries += 1
       Thread.sleep(retryAfterMs(res))
+      res = get(uri, token)
     }
-    throw new IllegalStateException("unreachable")
+    res
   }
 
-  override def count(filter: FetchFilter): Long = {
-    val res = getWithPlanningBackoff(searchUri(filter, "0-0"))
+  /** Count probe for a filter (A1/A2; `Content-Range` total). */
+  def count(filter: FetchFilter): Long = {
+    val res = getWithBackoff(searchUri(filter, "0-0"), planningToken())
     res.statusCode() match {
       case 204 => 0L
       case 200 | 206 => parseTotal(res)
@@ -127,10 +114,10 @@ class HttpOffresApi(endpoint: String,
     }
   }
 
-  override def fetch(filter: FetchFilter, range: PageRange, token: String): Seq[String] = {
-    val res = get(searchUri(filter, s"${range.start}-${range.end}"), Some(token))
+  /** One page of `filter`'s results, as raw JSON documents. */
+  def fetch(filter: FetchFilter, range: PageRange, token: String): Seq[String] = {
+    val res = getWithBackoff(searchUri(filter, s"${range.start}-${range.end}"), Some(token))
     res.statusCode() match {
-      case 429 => throw new RateLimitedException(retryAfterMs(res))
       case 204 => Seq.empty
       case 200 | 206 =>
         val root = mapper.readTree(res.body())
@@ -142,8 +129,9 @@ class HttpOffresApi(endpoint: String,
     }
   }
 
-  override def referentiel(name: String): Seq[String] = {
-    val res = getWithPlanningBackoff(URI.create(s"$endpoint/referentiel/$name"))
+  /** Référentiel dimension fetch (S2): regions/departements/metiers. */
+  def referentiel(name: String): Seq[String] = {
+    val res = getWithBackoff(URI.create(s"$endpoint/referentiel/$name"), planningToken())
     if (res.statusCode() != 200)
       throw new RuntimeException(s"referentiel $name failed: HTTP ${res.statusCode()}")
     val arr = mapper.readTree(res.body())
@@ -152,6 +140,9 @@ class HttpOffresApi(endpoint: String,
 }
 
 object HttpOffresApi {
+  /** Throttled answers one request sleeps through before it gives up. */
+  private val MaxRetries = 10
+
   /** OAuth2 client-credentials flow (`ingestion-elasticsearch.py:10-25`):
     * form POST → `(access_token, ttlMs)`. Plugged into [[TokenProvider]]
     * for expiry-aware caching and re-auth.
@@ -179,62 +170,58 @@ object HttpOffresApi {
   }
 }
 
-/** Resolves the [[OffresApi]] for a serialized option map, on driver or
-  * executor: an `endpoint` option builds (and per-JVM-caches) an
-  * [[HttpOffresApi]]; otherwise `api` looks up the in-JVM registry
-  * (tests). Keys are expected lowercase (Spark's
-  * CaseInsensitiveStringMap normalizes them).
+/** Builds, once per JVM, the client and the credential slots for a
+  * lower-cased option map, on the driver for planning and on each
+  * executor for page fetches: nothing but the plain string options
+  * crosses the boundary. The source needs `endpoint`, `authUrl` and
+  * `secrets`; a map without all three fails here, at planning, naming
+  * what is missing, instead of planning a scan whose every request
+  * gets a 401.
   */
 object OffresApiResolver {
-  // keyed by (endpoint, CREDENTIALS — not the rotating token):
-  // concurrent plans with different credentials get distinct instances
-  // instead of racing on one mutable token, while token rotations
-  // within one credential set reuse the cached instance/HttpClient
-  // (entries are bounded by |endpoints| × |credential sets|, which is
-  // static for a deployment). Executor-side fetch paths carry no
-  // planning option at all, so they share the ("endpoint", "") client;
-  // the bearer token is passed per fetch call.
-  private val cache = new ConcurrentHashMap[String, HttpOffresApi]()
+  // keyed by (endpoint, credentials): concurrent plans with different
+  // credentials get distinct clients, while token rotations within one
+  // credential set reuse the cached client (the planning token is read
+  // per probe from the expiry-aware provider)
+  private val clients = new ConcurrentHashMap[String, HttpOffresApi]()
 
-  /** Per-JVM token providers for executor-side re-auth, keyed by
-    * (authUrl, secrets): a partition reader outliving the token TTL
-    * re-authenticates through the expiry-aware [[TokenProvider]]
-    * instead of failing on a frozen token.
+  /** Per-JVM token providers keyed by (authUrl, secrets): a partition
+    * reader outliving the token TTL re-authenticates through the
+    * expiry-aware [[TokenProvider]] instead of failing on a frozen
+    * token.
     */
   private val providers = new ConcurrentHashMap[String, TokenProvider]()
 
-  def tokenProvider(authUrl: String, secrets: String): TokenProvider =
+  private def required(opts: Map[String, String], key: String): String =
+    opts.getOrElse(key.toLowerCase, {
+      val missing = Seq("endpoint", "authUrl", "secrets").filterNot(k => opts.contains(k.toLowerCase))
+      throw new IllegalArgumentException(
+        s"OffresSource is missing the option(s) ${missing.mkString(", ")}: it needs " +
+          "'endpoint' (the API base URL), 'authUrl' (the OAuth2 token URL) and " +
+          "'secrets' (key:secret pairs separated by ',')")
+    })
+
+  /** The credential slots of `secrets` (`k1:s1,k2:s2`), one token each. */
+  def tokenProvider(opts: Map[String, String]): TokenProvider = {
+    val authUrl = required(opts, "authUrl")
+    val secrets = required(opts, "secrets")
     providers.computeIfAbsent(s"$authUrl|$secrets", _ => {
-      val creds = secrets.split(",").toSeq.map { p =>
-        val Array(k, sec) = p.split(":", 2); (k, sec)
+      val creds = secrets.split(",").toSeq.zipWithIndex.map { case (p, i) =>
+        p.split(":", 2) match {
+          case Array(k, sec) => (k, sec)
+          // the entry itself is not echoed: it may be a bare secret
+          case _ => throw new IllegalArgumentException(
+            s"option 'secrets' must be key:secret pairs separated by ','; entry ${i + 1} has no ':'")
+        }
       }
       new TokenProvider(creds, (k, sec) => HttpOffresApi.authenticate(authUrl, k, sec))
     })
+  }
 
-  def resolve(opts: Map[String, String]): OffresApi =
-    opts.get("endpoint") match {
-      case Some(ep) =>
-        // auth mode: key by the (stable) secrets, supply the CURRENT
-        // token per probe via the expiry-aware provider. Static mode:
-        // the token string is the credential — it never rotates.
-        val (credsKey, supplier): (String, () => Option[String]) =
-          (opts.get("authurl"), opts.get("secrets")) match {
-            case (Some(url), Some(s)) =>
-              (s"auth|$url|$s", () => Some(tokenProvider(url, s).token(0)))
-            case _ =>
-              val tok = opts.get("planningtoken")
-              (s"static|${tok.getOrElse("")}", () => tok)
-          }
-        cache.computeIfAbsent(s"$ep|$credsKey", _ => new HttpOffresApi(ep, supplier))
-      case None =>
-        OffresApiRegistry.get(opts.getOrElse("api",
-          throw new IllegalArgumentException(
-            "OffresSource needs an 'endpoint' (HTTP) or 'api' (registry) option")))
-    }
-
-  /** The stable key overflow records are logged under for this source
-    * configuration (endpoint in HTTP mode, registry key otherwise).
-    */
-  def sourceKey(opts: Map[String, String]): String =
-    opts.getOrElse("endpoint", opts.getOrElse("api", "unknown"))
+  def resolve(opts: Map[String, String]): HttpOffresApi = {
+    val endpoint = required(opts, "endpoint")
+    val provider = tokenProvider(opts)
+    clients.computeIfAbsent(s"$endpoint|${opts("authurl")}|${opts("secrets")}",
+      _ => new HttpOffresApi(endpoint, () => Some(provider.token(0))))
+  }
 }

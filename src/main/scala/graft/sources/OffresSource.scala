@@ -15,48 +15,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 adaptive REST-search source (SURVEY §2.1 S1-S5, §4).
-  *
-  * Re-expresses the reference ingester (`ingestion-elasticsearch.py`) as
-  * a Spark source:
-  *  - planning (driver side): count-probe → recursive region →
-  *    departement → departement×métier split → one `InputPartition` per
-  *    page range ([[AdaptivePlanner]]); overflowed leaves are recorded,
-  *    not silently dropped;
-  *  - execution (task side): each [[OffresPartitionReader]] pulls its
-  *    page with its round-robin-assigned credential (S1/F13) and
-  *    sleep-retries on rate limiting (S5); Spark task retry is the
-  *    outer guard;
-  *  - pushdown: `SupportsPushDownFilters` maps equality/IN predicates on
-  *    region/departement/romeCode into the fetch filter (P4 — the
-  *    reference pushes them into the query URL);
-  *    `SupportsPushDownRequiredColumns` prunes the projected schema (P1,
-  *    the `_source` list).
-  *
-  * The API client is resolved per side by [[OffresApiResolver]]: an
-  * `endpoint` option constructs a real [[HttpOffresApi]]
-  * (`java.net.http`) from plain string options — on the driver for
-  * planning probes, independently on each executor for page fetches
-  * (nothing non-serializable crosses the boundary); an `api` option
-  * instead looks up the in-JVM [[OffresApiRegistry]] (test fakes,
-  * `local[*]`). Credentials: pre-issued `tokens`, or `authUrl` +
-  * `secrets` for the full OAuth2 client-credentials flow through
-  * [[TokenProvider]].
-  *
-  * Usage: `spark.read.format("graft.sources.OffresSource")
-  *   .option("endpoint", "https://api...").option("authUrl", "https://...")
-  *   .option("secrets", "key1:secret1,key2:secret2").load()`
-  * (or `.option("api", key).option("tokens", "t1,t2")` for the registry).
-  */
-trait OffresApi extends Serializable {
-  /** Count probe for a filter (A1/A2; `Content-Range` total). */
-  def count(filter: FetchFilter): Long
-  /** Fetch one page; may throw [[RateLimitedException]] (HTTP 429). */
-  def fetch(filter: FetchFilter, range: PageRange, token: String): Seq[String]
-  /** Référentiel dimension fetch (S2): regions/departements/metiers. */
-  def referentiel(name: String): Seq[String]
-}
-
 /** HTTP 429 with Retry-After. */
 class RateLimitedException(val retryAfterMs: Long)
   extends RuntimeException(s"rate limited, retry after ${retryAfterMs}ms")
@@ -94,23 +52,15 @@ class TokenProvider(credentials: Seq[(String, String)],
   def tokens: Seq[String] = credentials.indices.map(token)
 }
 
-object OffresApiRegistry {
-  private val apis = new ConcurrentHashMap[String, OffresApi]()
-  def register(key: String, api: OffresApi): Unit = apis.put(key, api)
-  def get(key: String): OffresApi =
-    Option(apis.get(key)).getOrElse(
-      throw new IllegalArgumentException(s"no OffresApi registered under '$key'"))
-}
-
 /** Driver-side record of plan leaves that could not be fully fetched
   * (the reference's skip-and-log overflow,
   * `ingestion-elasticsearch.py:209-211`). Consumers ([[graft.jobs.IngestionJob]])
-  * drain this per api key into the dead-letter table so the loss is a
+  * drain this per endpoint into the dead-letter table so the loss is a
   * row in `erreurs`, not just a log line.
   */
 object OverflowLog {
-  // set-valued: Spark may call planInputPartitions more than once per
-  // query (planning + execution), so identical overflow records collapse
+  // set-valued: a scan plans once, but each query over the source plans
+  // its own scan, so the same overflow seen by two queries collapses
   private val log =
     new ConcurrentHashMap[String, ConcurrentHashMap[AdaptivePlanner.Overflow, Boolean]]()
   def record(apiKey: String, o: AdaptivePlanner.Overflow): Unit =
@@ -128,6 +78,36 @@ object OverflowLog {
   }
 }
 
+/** DataSource V2 adaptive REST-search source (SURVEY §2.1 S1-S5, §4).
+  *
+  * Re-expresses the reference ingester (`ingestion-elasticsearch.py`) as
+  * a Spark source:
+  *  - planning (driver side): count-probe → recursive region →
+  *    departement → departement×métier split → one `InputPartition` per
+  *    page range ([[AdaptivePlanner]]); overflowed leaves are recorded,
+  *    not silently dropped;
+  *  - execution (task side): each [[OffresPartitionReader]] pulls its
+  *    page with its round-robin-assigned credential slot (S1/F13);
+  *    [[HttpOffresApi]] sleep-retries on rate limiting (S5); Spark task
+  *    retry is the outer guard;
+  *  - pushdown: `SupportsPushDownFilters` maps equality/IN predicates on
+  *    region/departement/romeCode into the fetch filter (P4 — the
+  *    reference pushes them into the query URL);
+  *    `SupportsPushDownRequiredColumns` prunes the projected schema (P1,
+  *    the `_source` list).
+  *
+  * The source reaches the API only through [[HttpOffresApi]], which
+  * [[OffresApiResolver]] builds from the plain string options — on the
+  * driver for planning probes, independently on each executor for page
+  * fetches (nothing non-serializable crosses the boundary). Credentials
+  * go through the OAuth2 client-credentials flow of [[TokenProvider]].
+  * Options: `endpoint`, `authUrl` and `secrets` (required),
+  * `maxPerFilter` (default 3149) and `pageSize` (default 150).
+  *
+  * Usage: `spark.read.format("graft.sources.OffresSource")
+  *   .option("endpoint", "https://api...").option("authUrl", "https://...")
+  *   .option("secrets", "key1:secret1,key2:secret2").load()`
+  */
 class OffresSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     OffresSource.flatSchema
@@ -220,89 +200,54 @@ class OffresScan(options: CaseInsensitiveStringMap, schema: StructType,
     while (it.hasNext) { val e = it.next(); b += (e.getKey.toLowerCase -> e.getValue) }
     b.result()
   }
-  private def sourceKey = OffresApiResolver.sourceKey(optMap)
-
-  /** Credential slots (S1/F13): either pre-issued `tokens`, or the full
-    * OAuth2 flow — `authUrl` + `secrets` (`k1:s1,k2:s2`) authenticated
-    * through the per-JVM shared [[TokenProvider]] (expiry-aware: repeat
-    * plannings reuse unexpired tokens instead of re-running OAuth), one
-    * token per credential, assigned round-robin to partitions. Readers
-    * carry the SLOT, not just the token — an executor whose fetch
-    * outlives the token TTL re-authenticates its slot (see
-    * [[OffresPartitionReader.bearerToken]]).
-    */
-  private def tokens: Seq[String] =
-    (Option(options.get("authUrl")), Option(options.get("secrets"))) match {
-      case (Some(url), Some(s)) => OffresApiResolver.tokenProvider(url, s).tokens
-      case _ =>
-        Option(options.get("tokens")).map(_.split(",").toSeq).getOrElse(Seq("anonymous"))
-    }
   private def maxPerFilter = Option(options.get("maxPerFilter")).map(_.toInt).getOrElse(3149)
   private def pageSize = Option(options.get("pageSize")).map(_.toInt).getOrElse(150)
 
-  /** Driver-side adaptive planning: dims via référentiel (S2), then
-    * count-probe split. Pushed equality filters narrow the key space
-    * BEFORE probing — partition pruning at plan time (P4).
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  /** Driver-side adaptive planning, once per scan: Spark asks again from
+    * the copy of the scan node that `RemoveRedundantProjects` makes, and
+    * each count probe and référentiel call would otherwise go out twice.
+    * Dims via référentiel (S2), then count-probe split; pushed equality
+    * filters narrow the key space BEFORE probing — partition pruning at
+    * plan time (P4). Partitions get the credential slots (S1/F13)
+    * round-robin; every slot authenticates here, so bad credentials
+    * fail the plan. Readers carry the SLOT, not a token — an executor
+    * whose fetch outlives the token TTL re-authenticates its slot.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
-    // HTTP mode probes (count/referentiel) authenticate with the first
-    // credential slot; registry mode ignores the extra option
-    val toks = tokens
-    val planOpts =
-      if (optMap.contains("endpoint")) optMap + ("planningtoken" -> toks.head)
-      else optMap
-    val api = OffresApiResolver.resolve(planOpts)
+  private lazy val partitions: Array[InputPartition] = {
+    val api = OffresApiResolver.resolve(optMap)
+    val slots = OffresApiResolver.tokenProvider(optMap).tokens.size
     val mapper = new ObjectMapper()
     def codes(name: String): Seq[String] =
       api.referentiel(name).map(j => mapper.readTree(j).get("code").asText)
-    def departementRegion: Map[String, String] =
-      api.referentiel("departements").map { j =>
+
+    // each référentiel the plans need, fetched once: a pushed departement
+    // skips the region level, a pushed romeCode the métier level
+    val regions =
+      if (departementEq.isDefined) Nil else regionEq.map(Seq(_)).getOrElse(codes("regions"))
+    val departementRegion: Map[String, String] =
+      if (departementEq.isDefined) Map.empty
+      else api.referentiel("departements").map { j =>
         val n = mapper.readTree(j)
         n.get("code").asText -> n.get("region").get("code").asText
       }.toMap
+    val metiers = if (romeIn.isDefined) Nil else codes("metiers")
 
-    // pushed rome predicates fan the plan out per code (each becomes a
-    // `base` filter threaded through every probe); a pushed departement
-    // bypasses the region level entirely.
-    val romeBases: Seq[Option[String]] =
-      romeIn.map(_.map(Option(_))).getOrElse(Seq(None))
-    val plans: Seq[Plan] = romeBases.map { rome =>
-      val base = FetchFilter(codeRome = rome)
-      departementEq match {
-        case Some(d) =>
-          val f = base.copy(departement = Some(d))
-          val t = api.count(f)
-          if (t <= maxPerFilter) Plan(AdaptivePlanner.pages(f, t, pageSize), Seq.empty)
-          else if (rome.isDefined) Plan(Seq.empty, Seq(Overflow(f, t)))
-          else {
-            // saturated departement → métier split (same as the planner's
-            // innermost level, here reached directly via pushdown)
-            val parts = Seq.newBuilder[FetchPartition]
-            val over = Seq.newBuilder[Overflow]
-            codes("metiers").foreach { m =>
-              val fm = FetchFilter(departement = Some(d), codeRome = Some(m))
-              val tm = api.count(fm)
-              if (tm <= 0) ()
-              else if (tm <= maxPerFilter) parts ++= AdaptivePlanner.pages(fm, tm, pageSize)
-              else over += Overflow(fm, tm)
-            }
-            Plan(parts.result(), over.result())
-          }
-        case None =>
-          val regions = regionEq.map(Seq(_)).getOrElse(codes("regions"))
-          AdaptivePlanner.plan(api.count, regions, departementRegion,
-            codes("metiers"), maxPerFilter, pageSize, base)
-      }
+    // pushed rome predicates fan the plan out per code, each a `base`
+    // filter threaded through every probe
+    val plans = romeIn.map(_.map(Option(_))).getOrElse(Seq(None)).map { rome =>
+      AdaptivePlanner.plan(api.count, regions, departementRegion, metiers, maxPerFilter,
+        pageSize, FetchFilter(departement = departementEq, codeRome = rome))
     }
-    val plan = Plan(plans.flatMap(_.partitions), plans.flatMap(_.overflows))
-    plan.overflows.foreach { o =>
+    plans.flatMap(_.overflows).foreach { o =>
       // skip-and-log semantics (ingestion-elasticsearch.py:209-211):
       // recorded for dead-letter capture by the consumer + logged
-      OverflowLog.record(sourceKey, o)
+      OverflowLog.record(optMap("endpoint"), o)
       System.err.println(s"[offres-source] OVERFLOW not fully fetchable: $o")
     }
-    plan.partitions.zipWithIndex.map { case (p, i) =>
-      OffresInputPartition(p, toks(i % toks.size), i % toks.size): InputPartition
+    plans.flatMap(_.partitions).zipWithIndex.map { case (p, i) =>
+      OffresInputPartition(p, i % slots): InputPartition
     }.toArray
   }
 
@@ -310,8 +255,7 @@ class OffresScan(options: CaseInsensitiveStringMap, schema: StructType,
     new OffresReaderFactory(optMap, schema)
 }
 
-case class OffresInputPartition(part: FetchPartition, token: String,
-                                slot: Int = 0) extends InputPartition
+case class OffresInputPartition(part: FetchPartition, slot: Int) extends InputPartition
 
 class OffresReaderFactory(opts: Map[String, String], schema: StructType)
     extends PartitionReaderFactory {
@@ -320,9 +264,10 @@ class OffresReaderFactory(opts: Map[String, String], schema: StructType)
       partition.asInstanceOf[OffresInputPartition])
 }
 
-/** Task-side page reader: fetches its range with its token, retrying on
-  * rate-limit with the server-provided backoff (S5). JSON decoding via
-  * Jackson; missing fields become nulls (dead-lettered downstream).
+/** Task-side page reader: fetches its range with its credential slot's
+  * token from the per-JVM [[TokenProvider]], which re-authenticates
+  * when the cached token nears expiry (S1). JSON decoding via Jackson;
+  * missing fields become nulls (dead-lettered downstream).
   */
 class OffresPartitionReader(opts: Map[String, String], schema: StructType,
                             partition: OffresInputPartition)
@@ -331,39 +276,12 @@ class OffresPartitionReader(opts: Map[String, String], schema: StructType,
   private var rows: Iterator[String] = _
   private var current: InternalRow = _
 
-  /** Bearer token for this partition's credential slot. With
-    * `authUrl`/`secrets` in the options, the per-JVM [[TokenProvider]]
-    * re-authenticates executor-side when the cached token nears expiry
-    * — a fetch loop that outlives the token TTL keeps working (the S1
-    * expiry-aware claim, now on both sides of the boundary). Otherwise
-    * the planner-assigned token is used as-is.
-    */
-  private def bearerToken: String =
-    (opts.get("authurl"), opts.get("secrets")) match {
-      case (Some(url), Some(s)) =>
-        OffresApiResolver.tokenProvider(url, s).token(partition.slot)
-      case _ => partition.token
-    }
-
-  private def fetchWithBackoff(): Seq[String] = {
-    // executor-side construction from plain string options (HTTP mode)
-    // or shared-JVM registry lookup (tests / local[*])
-    val api = OffresApiResolver.resolve(opts)
-    var attempts = 0
-    while (true) {
-      try {
-        return api.fetch(partition.part.filter, partition.part.range, bearerToken)
-      } catch {
-        case e: RateLimitedException if attempts < 10 =>
-          attempts += 1
-          Thread.sleep(e.retryAfterMs)
-      }
-    }
-    Seq.empty // unreachable
-  }
-
   override def next(): Boolean = {
-    if (rows == null) rows = fetchWithBackoff().iterator
+    if (rows == null) {
+      val token = OffresApiResolver.tokenProvider(opts).token(partition.slot)
+      rows = OffresApiResolver.resolve(opts)
+        .fetch(partition.part.filter, partition.part.range, token).iterator
+    }
     if (!rows.hasNext) return false
     val node = mapper.readTree(rows.next())
     def str(field: String): UTF8String = {

@@ -1,48 +1,50 @@
 package graft.jobs
 
 import graft.SparkSpec
-import graft.sources.{FakeOffresApi, OffresApiRegistry, TokenProvider}
+import graft.sources.{OffresSourceSpec, StubOffre, StubOffresServer, TokenProvider}
 
 class IngestionJobSpec extends SparkSpec {
 
-  OffresApiRegistry.register("fake-job", FakeOffresApi)
+  /** Runs `body` against a stub serving `offers`, then stops it. */
+  private def withStub[T](offers: Seq[StubOffre])(body: StubOffresServer => T): T = {
+    val server = new StubOffresServer(offers, OffresSourceSpec.secrets)
+    try body(server) finally server.stop()
+  }
 
   test("E1 end-to-end: probe → adaptive scan → dedup → overwrite → metrics reconcile") {
     val out = tempDir("graft-ingest").toString
-    val r = IngestionJob.run(spark, "fake-job", Seq("tokA", "tokB"), out)
-    assert(r.totalExpected == 6200)
-    assert(r.collected == 6200)
-    assert(r.erreurs == 0)
-    assert(r.reconciled)
+    withStub(OffresSourceSpec.offers) { server =>
+      val opts = OffresSourceSpec.options(server)
+      val r = IngestionJob.runWithOptions(spark, opts + ("secrets" -> "k1:s-k1,k2:s-k2"), out)
+      assert(r.totalExpected == 6200)
+      assert(r.collected == 6200)
+      assert(r.erreurs == 0)
+      assert(r.reconciled)
 
-    // tables exist with the right shapes
-    assert(spark.read.parquet(s"$out/offres").count() == 6200)
-    val metrics = spark.read.parquet(s"$out/ingestion")
-    assert(metrics.columns.toSet.contains("duree_totale"))
-    assert(metrics.count() == 1)
+      // tables exist with the right shapes
+      assert(spark.read.parquet(s"$out/offres").count() == 6200)
+      val metrics = spark.read.parquet(s"$out/ingestion")
+      assert(metrics.columns.toSet.contains("duree_totale"))
+      assert(metrics.count() == 1)
 
-    // re-run = full refresh, not append (S8)
-    val r2 = IngestionJob.run(spark, "fake-job", Seq("tokA"), out)
-    assert(r2.collected == 6200)
-    assert(spark.read.parquet(s"$out/offres").count() == 6200)
-    assert(spark.read.parquet(s"$out/ingestion").count() == 2) // metrics append per run
+      // re-run = full refresh, not append (S8)
+      val r2 = IngestionJob.runWithOptions(spark, opts + ("secrets" -> "k1:s-k1"), out)
+      assert(r2.collected == 6200)
+      assert(spark.read.parquet(s"$out/offres").count() == 6200)
+      assert(spark.read.parquet(s"$out/ingestion").count() == 2) // metrics append per run
+    }
   }
 
   test("overflowed plan leaves land in the dead-letter table, not just a log line") {
-    object SaturatedApi extends graft.sources.OffresApi {
-      import graft.sources.AdaptivePlanner._
-      override def count(filter: FetchFilter): Long = 10000L // saturated everywhere
-      override def fetch(filter: FetchFilter, range: PageRange, token: String) = Seq.empty
-      override def referentiel(name: String): Seq[String] = name match {
-        case "regions" => Seq("""{"code":"R"}""")
-        case "departements" => Seq("""{"code":"D","region":{"code":"R"}}""")
-        case "metiers" => Seq("""{"code":"M"}""")
-        case _ => Seq.empty
-      }
-    }
-    OffresApiRegistry.register("saturated", SaturatedApi)
+    // one region, one departement, one métier, 20 offers over a cap of
+    // 10: saturated at every level, so the departement×métier leaf overflows
+    val saturated = (0 until 20).map(i =>
+      StubOffre(Some(i.toString), s"Offre $i", s"desc $i", "M", "R", "D"))
     val out = tempDir("graft-ovf").toString
-    val r = IngestionJob.run(spark, "saturated", Seq("t"), out)
+    val r = withStub(saturated) { server =>
+      IngestionJob.runWithOptions(spark,
+        OffresSourceSpec.options(server) + ("maxPerFilter" -> "10"), out)
+    }
     assert(r.collected == 0 && !r.reconciled)
     val err = spark.read.parquet(s"$out/erreurs")
     assert(err.filter(org.apache.spark.sql.functions.col("message")

@@ -56,6 +56,29 @@ class AdaptivePlannerSpec extends AnyFunSuite {
     assert(plan.overflows.nonEmpty)
   }
 
+  test("base departement (pushed) starts the plan at the departement level") {
+    var probed = List.empty[FetchFilter]
+    val counts: Map[FetchFilter, Long] = Map(
+      FetchFilter(departement = Some("D")) -> 9000L,
+      FetchFilter(departement = Some("D"), codeRome = Some("M1")) -> 3000L,
+      FetchFilter(departement = Some("D"), codeRome = Some("M2")) -> 6000L,
+      FetchFilter(departement = Some("D"), codeRome = Some("M9")) -> 200L)
+    val count: FetchFilter => Long = { f => probed ::= f; counts.getOrElse(f, 0L) }
+    val plan = AdaptivePlanner.plan(count, Seq("R"), Map("D" -> "R"), Seq("M1", "M2"),
+      base = FetchFilter(departement = Some("D")))
+    // no region probe; saturated departement → métier split as usual
+    assert(probed.forall(f => f.region.isEmpty && f.departement.contains("D")), probed)
+    assert(plan.totalPlanned == 3000)
+    assert(plan.overflows ==
+      Seq(Overflow(FetchFilter(departement = Some("D"), codeRome = Some("M2")), 6000L)))
+    // departement + rome base: one probe, paged directly
+    probed = Nil
+    val narrow = AdaptivePlanner.plan(count, Seq("R"), Map("D" -> "R"), Seq("M1", "M2"),
+      base = FetchFilter(departement = Some("D"), codeRome = Some("M9")))
+    assert(probed == List(FetchFilter(departement = Some("D"), codeRome = Some("M9"))))
+    assert(narrow.totalPlanned == 200 && narrow.overflows.isEmpty)
+  }
+
   test("count invariant: planned ranges reassemble the probed totals (S4/A3)") {
     val counts: Map[FetchFilter, Long] =
       Map(FetchFilter(region = Some("R")) -> 1234L)

@@ -3,7 +3,7 @@ package graft.sources
 import java.io.OutputStream
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -16,8 +16,6 @@ import org.scalatest.BeforeAndAfterAll
   * reading from a real (local) HTTP server that speaks the reference
   * protocol — OAuth2 token POST, `Content-Range` paged search, one 429
   * with `Retry-After` (`ingestion-elasticsearch.py:10-25,57-130`).
-  * Nothing in this spec touches [[OffresApiRegistry]]: every byte flows
-  * through `java.net.http`.
   */
 class HttpOffresApiSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
@@ -35,6 +33,8 @@ class HttpOffresApiSpec extends SparkSpec with BeforeAndAfterAll {
   private val retriedAfter429 = new AtomicInteger(0)
   private val authHeadersSeen = new ConcurrentHashMap[String, Boolean]()
   private val departementParamsSeen = new ConcurrentHashMap[String, Boolean]()
+  private val probeUris = new ConcurrentLinkedQueue[String]() // range=0-0 requests
+  private val pageUris = new ConcurrentLinkedQueue[String]()  // every other search
   private var server: HttpServer = _
   private var base: String = _
 
@@ -101,8 +101,12 @@ class HttpOffresApiSpec extends SparkSpec with BeforeAndAfterAll {
         p.get("codeROME").forall(_ == o.rome)).sortBy(_.id)
       val Array(a, b) = p("range").split("-").map(_.toInt)
       val isProbe = a == 0 && b == 0
+      (if (isProbe) probeUris else pageUris).add(ex.getRequestURI.toString)
+      // region THROTTLED is rate-limited forever
+      if (p.get("region").contains("THROTTLED")) {
+        respond(ex, 429, "", Map("Retry-After" -> "0"))
       // exactly one 429 on a real page fetch, then success on retry
-      if (!isProbe && rateLimited429.compareAndSet(false, true)) {
+      } else if (!isProbe && rateLimited429.compareAndSet(false, true)) {
         respond(ex, 429, "", Map("Retry-After" -> "1"))
       } else if (hits.isEmpty) {
         respond(ex, 204, "", Map("Content-Range" -> "offres 0-0/0"))
@@ -150,20 +154,46 @@ class HttpOffresApiSpec extends SparkSpec with BeforeAndAfterAll {
       s"adaptive split reached departement probes, saw ${departementParamsSeen.keySet()}")
   }
 
-  test("HttpOffresApi unit behavior: Content-Range count, 429 fetch throws, referentiel") {
+  test("HttpOffresApi: count, fetch sleeps Retry-After, referentiel") {
     val (tok, ttl) = HttpOffresApi.authenticate(s"$base/token", "k1", "s-k1")
     assert(tok == "tok-k1" && ttl == 3600000L)
     val api = new HttpOffresApi(base, () => Some(tok))
     assert(api.count(FetchFilter(region = Some("R1"))) == 80L)
     assert(api.count(FetchFilter()) == 200L)
     assert(api.referentiel("metiers").size == 2)
-    rateLimited429.set(false) // re-arm the single 429
-    val e = intercept[RateLimitedException] {
-      api.fetch(FetchFilter(region = Some("R1")), PageRange(0, 49), tok)
-    }
-    assert(e.retryAfterMs == 1000L)
+    rateLimited429.set(false) // re-arm the single 429 (Retry-After: 1)
+    pageUris.clear()
+    val t0 = System.nanoTime()
     val page = api.fetch(FetchFilter(region = Some("R1")), PageRange(0, 49), tok)
+    val sleptMs = (System.nanoTime() - t0) / 1000000L
     assert(page.size == 50)
+    assert(sleptMs >= 1000L, s"returned after $sleptMs ms, before the advertised 1 s")
+    // the server saw the throttled request and then its retry
+    val seen = pageUris.toArray.toSeq
+    assert(seen.size == 2 && seen.distinct.size == 1, seen)
+    // a filter throttled on every answer gives up with the last hint
+    val e = intercept[RateLimitedException] {
+      api.count(FetchFilter(region = Some("THROTTLED")))
+    }
+    assert(e.retryAfterMs == 0L)
+  }
+
+  test("one scan plans once: no count probe is requested twice") {
+    probeUris.clear()
+    val ids = spark.read.format("graft.sources.OffresSource")
+      .option("endpoint", base)
+      .option("authUrl", s"$base/token")
+      .option("secrets", "k1:s-k1,k2:s-k2")
+      .option("maxPerFilter", "100")
+      .option("pageSize", "50")
+      .load()
+      .filter($"romeCode".isin("M1", "M2"))
+      .select($"id")
+      .as[String].collect()
+    assert(ids.length == 200)
+    val probes = probeUris.toArray.toSeq.map(_.toString)
+    val repeated = probes.groupBy(identity).collect { case (u, us) if us.size > 1 => u -> us.size }
+    assert(probes.nonEmpty && repeated.isEmpty, s"probes requested more than once: $repeated")
   }
 
   test("IngestionJob runs the full E1 lifecycle over HTTP: collect, dead-letter, reconcile") {

@@ -1,82 +1,58 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
-import graft.sources.AdaptivePlanner._
-import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
-/** In-memory France-Travail-shaped API: R1 small (direct fetch), R2
-  * saturated (→ departements; D22 saturated → métier split). Exercises
-  * the full adaptive plan + pagination + token assignment + 429 retry.
+/** France-Travail-shaped corpus served by [[StubOffresServer]]: R1 small
+  * (direct fetch), R2 saturated (→ departements; D22 saturated → métier
+  * split). Exercises the full adaptive plan + pagination over HTTP.
   */
-object FakeOffresApi extends OffresApi {
-  case class O(id: Int, region: String, departement: String, rome: String)
-  val offers: Seq[O] =
-    (0 until 200).map(i => O(i, "R1", "D11", if (i % 2 == 0) "M1" else "M2")) ++
-    (0 until 2000).map(i => O(1000 + i, "R2", "D21", if (i % 2 == 0) "M1" else "M2")) ++
-    (0 until 4000).map(i => O(10000 + i, "R2", "D22", if (i % 2 == 0) "M1" else "M2"))
+object OffresSourceSpec {
+  val secrets: Map[String, String] = Map("k1" -> "s-k1", "k2" -> "s-k2", "k3" -> "s-k3")
 
-  private def matches(f: FetchFilter)(o: O): Boolean =
-    f.region.forall(_ == o.region) &&
-      f.departement.forall(_ == o.departement) &&
-      f.codeRome.forall(_ == o.rome)
-
-  val countCalls = new AtomicInteger(0)
-  val fetchCalls = new AtomicInteger(0)
-  val rateLimitsThrown = new AtomicInteger(0)
-  val tokensSeen: ConcurrentHashMap[String, Boolean] = new ConcurrentHashMap()
-  private val throttled: ConcurrentHashMap[String, Boolean] = new ConcurrentHashMap()
-
-  override def count(filter: FetchFilter): Long = {
-    countCalls.incrementAndGet()
-    offers.count(matches(filter)).toLong
+  val offers: Seq[StubOffre] = {
+    def o(id: Int, region: String, departement: String, rome: String) =
+      StubOffre(Some(id.toString), s"Offre $id", s"desc $id", rome, region, departement)
+    (0 until 200).map(i => o(i, "R1", "D11", if (i % 2 == 0) "M1" else "M2")) ++
+      (0 until 2000).map(i => o(1000 + i, "R2", "D21", if (i % 2 == 0) "M1" else "M2")) ++
+      (0 until 4000).map(i => o(10000 + i, "R2", "D22", if (i % 2 == 0) "M1" else "M2"))
   }
 
-  override def fetch(filter: FetchFilter, range: PageRange, token: String): Seq[String] = {
-    fetchCalls.incrementAndGet()
-    tokensSeen.put(token, true)
-    val key = s"$filter:$range"
-    if (throttled.putIfAbsent(key, true) == null) {
-      rateLimitsThrown.incrementAndGet()
-      throw new RateLimitedException(5) // first hit on every page: HTTP 429
-    }
-    offers.filter(matches(filter)).sortBy(_.id)
-      .slice(range.start, range.end + 1)
-      .map(o => s"""{"id":"${o.id}","intitule":"Offre ${o.id}","description":"desc ${o.id}","romeCode":"${o.rome}","region":"${o.region}","departement":"${o.departement}"}""")
-  }
-
-  override def referentiel(name: String): Seq[String] = name match {
-    case "regions" => Seq("""{"code":"R1"}""", """{"code":"R2"}""")
-    case "departements" => Seq(
-      """{"code":"D11","region":{"code":"R1"}}""",
-      """{"code":"D21","region":{"code":"R2"}}""",
-      """{"code":"D22","region":{"code":"R2"}}""")
-    case "metiers" => Seq("""{"code":"M1"}""", """{"code":"M2"}""")
-    case _ => Seq.empty
-  }
+  def options(server: StubOffresServer): Map[String, String] = Map(
+    "endpoint" -> server.base, "authUrl" -> server.authUrl,
+    "secrets" -> secrets.map { case (k, v) => s"$k:$v" }.mkString(","))
 }
 
-class OffresSourceSpec extends SparkSpec {
+class OffresSourceSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 
-  OffresApiRegistry.register("fake", FakeOffresApi)
+  private var server: StubOffresServer = _
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    server = new StubOffresServer(OffresSourceSpec.offers, OffresSourceSpec.secrets)
+  }
+
+  override def afterAll(): Unit = {
+    if (server != null) server.stop()
+    super.afterAll()
+  }
 
   private def read = spark.read.format("graft.sources.OffresSource")
-    .option("api", "fake").option("tokens", "tokA,tokB,tokC")
+    .options(OffresSourceSpec.options(server))
+
+  /** Messages along a throwable's cause chain. */
+  private def chain(t: Throwable): List[String] =
+    if (t == null) Nil else String.valueOf(t.getMessage) :: chain(t.getCause)
 
   test("adaptive scan reads every offer exactly once through the split hierarchy") {
     val df = read.load()
     val ids = df.select($"id").as[String].collect()
     assert(ids.length == 6200)                       // 200 + 2000 + 4000
     assert(ids.distinct.length == 6200)              // no dup, no loss (A3)
-    assert(FakeOffresApi.rateLimitsThrown.get() > 0) // 429s were retried (S5)
-    assert(FakeOffresApi.tokensSeen.size() == 3)     // round-robin used all creds (S1)
   }
 
   test("rome pushdown narrows the plan and the scan (P4)") {
-    FakeOffresApi.fetchCalls.set(0)
     val df = read.load().filter($"romeCode" === "M1")
       .select($"id", $"romeCode")
     val rows = df.as[(String, String)].collect()
@@ -104,15 +80,28 @@ class OffresSourceSpec extends SparkSpec {
     assert(cross.count() == 0)
   }
 
-  test("unregistered api key fails with a clear message, not a hang") {
+  test("a source without `endpoint` fails with a clear message") {
     val e = intercept[Exception] {
       spark.read.format("graft.sources.OffresSource")
-        .option("api", "nope").load().count()
+        .options(OffresSourceSpec.options(server) - "endpoint").load().count()
     }
-    def chain(t: Throwable): List[String] =
-      if (t == null) Nil else t.getMessage :: chain(t.getCause)
-    assert(chain(e).exists(m => m != null && m.contains("no OffresApi registered")),
+    assert(chain(e).exists(m => m.contains("missing the option(s) endpoint")),
       chain(e).toString)
+  }
+
+  test("incomplete credentials fail at planning, naming the option") {
+    val noAuth = intercept[Exception] {
+      spark.read.format("graft.sources.OffresSource")
+        .option("endpoint", server.base).load().count()
+    }
+    assert(chain(noAuth).exists(_.contains("missing the option(s) authUrl, secrets")),
+      chain(noAuth).toString)
+    val badPair = intercept[Exception] {
+      read.option("secrets", "k1:s-k1,k2").load().count()
+    }
+    assert(chain(badPair).exists(m =>
+      m.contains("option 'secrets'") && m.contains("entry 2 has no ':'")),
+      chain(badPair).toString)
   }
 
   test("column pruning reaches the reader schema (P1)") {
