@@ -35,10 +35,7 @@ import graft.sources.AdaptivePlanner.{FetchFilter, PageRange}
   */
 class HttpOffresApi(endpoint: String, planningToken: () => Option[String]) {
 
-  private val client: HttpClient = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofSeconds(10))
-    .build()
-  private val mapper = new ObjectMapper()
+  import HttpOffresApi.{client, mapper}
 
   private def enc(s: String) = URLEncoder.encode(s, StandardCharsets.UTF_8)
 
@@ -143,6 +140,16 @@ object HttpOffresApi {
   /** Throttled answers one request sleeps through before it gives up. */
   private val MaxRetries = 10
 
+  /** The one HTTP client of the JVM, shared by every instance and by
+    * [[authenticate]]: a `HttpClient` owns a selector thread until it is
+    * collected, so a client per instance or per token request keeps one
+    * thread alive per API endpoint the JVM ever talked to.
+    */
+  private val client: HttpClient = HttpClient.newBuilder()
+    .connectTimeout(Duration.ofSeconds(10))
+    .build()
+  private val mapper = new ObjectMapper()
+
   /** OAuth2 client-credentials flow (`ingestion-elasticsearch.py:10-25`):
     * form POST → `(access_token, ttlMs)`. Plugged into [[TokenProvider]]
     * for expiry-aware caching and re-auth.
@@ -155,7 +162,6 @@ object HttpOffresApi {
       "scope" -> s"application_$key api_offresdemploiv2 o2dsoffre")
       .map { case (k, v) => s"$k=${URLEncoder.encode(v, StandardCharsets.UTF_8)}" }
       .mkString("&")
-    val client = HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
     val res = client.send(
       HttpRequest.newBuilder(URI.create(authUrl))
         .header("Content-Type", "application/x-www-form-urlencoded")
@@ -164,13 +170,13 @@ object HttpOffresApi {
       HttpResponse.BodyHandlers.ofString())
     if (res.statusCode() != 200)
       throw new RuntimeException(s"auth failed: HTTP ${res.statusCode()} ${res.body().take(200)}")
-    val node = new ObjectMapper().readTree(res.body())
+    val node = mapper.readTree(res.body())
     val ttlSec = Option(node.get("expires_in")).map(_.asLong).getOrElse(3600L)
     (node.get("access_token").asText, ttlSec * 1000L)
   }
 }
 
-/** Builds, once per JVM, the client and the credential slots for a
+/** Builds the client and (once per JVM) the credential slots for a
   * lower-cased option map, on the driver for planning and on each
   * executor for page fetches: nothing but the plain string options
   * crosses the boundary. The source needs `endpoint`, `authUrl` and
@@ -179,12 +185,6 @@ object HttpOffresApi {
   * gets a 401.
   */
 object OffresApiResolver {
-  // keyed by (endpoint, credentials): concurrent plans with different
-  // credentials get distinct clients, while token rotations within one
-  // credential set reuse the cached client (the planning token is read
-  // per probe from the expiry-aware provider)
-  private val clients = new ConcurrentHashMap[String, HttpOffresApi]()
-
   /** Per-JVM token providers keyed by (authUrl, secrets): a partition
     * reader outliving the token TTL re-authenticates through the
     * expiry-aware [[TokenProvider]] instead of failing on a frozen
@@ -218,10 +218,13 @@ object OffresApiResolver {
     })
   }
 
+  /** A client for `endpoint`: cheap to build, as every instance shares
+    * the one `HttpClient`; the planning token is read per probe from the
+    * cached expiry-aware provider.
+    */
   def resolve(opts: Map[String, String]): HttpOffresApi = {
     val endpoint = required(opts, "endpoint")
     val provider = tokenProvider(opts)
-    clients.computeIfAbsent(s"$endpoint|${opts("authurl")}|${opts("secrets")}",
-      _ => new HttpOffresApi(endpoint, () => Some(provider.token(0))))
+    new HttpOffresApi(endpoint, () => Some(provider.token(0)))
   }
 }

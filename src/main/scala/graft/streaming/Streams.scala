@@ -1,7 +1,11 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+
 import graft.Tables
+import graft.util.Scratch
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamReader, Trigger}
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -16,6 +20,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * give its event-time story: watermarked tumbling/sliding windows,
   * session windows, and `_id`-upsert dedup as
   * `dropDuplicatesWithinWatermark`.
+  *
+  * Every drained gate (s04-s23) runs its stream through ONE path,
+  * [[drain]]: the stream reads a parquet file source ([[fileStream]],
+  * schema from the fixture footer), is built on a child session whose
+  * conf alone carries the shuffle width and, for the
+  * `transformWithState` gates, the RocksDB state store
+  * ([[streamSession]]), and runs to the end of its input under the
+  * `AvailableNow` trigger, each micro-batch handed to a `foreachBatch`
+  * sink. Its checkpoint is a `Scratch` dir per (gate, input dir,
+  * application), kept after the run for offline state reads (s09),
+  * wiped by the next run of the same gate and removed at JVM exit.
+  * Keyed sinks (s12, s14) fold each batch into their table with the
+  * one idempotent merge, [[mergeInto]].
   */
 object Streams {
 
@@ -64,98 +81,114 @@ object Streams {
   def userSessionStats(spark: SparkSession, dir: String): DataFrame =
     userSessionStatsOf(Tables.events(spark, dir))
 
-  /** Streaming variants with watermarks (used by the streaming specs;
-    * not oracle-checked — DuckDB has no watermark semantics).
+  /** [[hourlyTypeCounts]] with a 2-hour watermark, the stream form s04
+    * drains (complete mode, so the watermark bounds state only and the
+    * drained result stays batch-equal).
     */
   def hourlyTypeCountsStream(events: DataFrame): DataFrame =
     hourlyTypeCounts(events.withWatermark("ts", "2 hours"))
 
   // — real-streaming-run gate entries (shared scaffolding) —
 
-  /** Stream source over the events fixture. `readStream` needs an
-    * explicit schema; take it from a batch footer read of the same file
-    * (cheap, metadata-only) so the stream sees whatever physical `ts`
-    * type this fixture generation carries, then normalize it to
+  /** A file stream over `dir`'s files matching `glob`. `readStream`
+    * needs an explicit schema; take it from a batch footer read of the
+    * same glob (cheap, metadata-only), so the stream sees exactly the
+    * types this fixture generation carries.
+    */
+  private[graft] def fileStream(ss: SparkSession, dir: String, glob: String): DataStreamReader =
+    ss.readStream
+      .schema(ss.read.option("pathGlobFilter", glob).parquet(dir).schema)
+      .option("pathGlobFilter", glob)
+
+  /** The events fixture as a stream, its physical `ts` normalized to
     * TimestampType exactly like the batch path (`Tables.events`).
     */
-  private[graft] def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema = spark.read
-      .option("pathGlobFilter", "events.parquet").parquet(dir).schema
-    graft.Tables.normalizeEventTs(
-      spark.readStream.schema(fileSchema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir))
-  }
+  private[graft] def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    Tables.normalizeEventTs(fileStream(spark, dir, "events.parquet").parquet(dir))
 
   /** A CHILD session (shared SparkContext, isolated SQLConf) pinned to
-    * `width` shuffle partitions. Stateful-operator parallelism = shuffle
+    * `width` shuffle partitions, with the RocksDB state store when
+    * `rocksDb` (the v2 state API of `transformWithState` needs its
+    * column families). Stateful-operator parallelism = shuffle
     * partitions AT QUERY START (frozen into the checkpoint): each
     * partition is a state-store instance whose per-batch commit is an
     * fsync'd delta file — a stream-stream join keeps FOUR stores per
     * partition. The drains here move fixture-scale batches, so 8 stores
     * beat 32 on pure commit overhead; a production deployment sizes the
     * width to key cardinality instead (state ops hash-partition by key,
-    * so throughput scales out with the partition count). Scoping the
-    * width to a child session — the streaming source MUST be built from
-    * it, since a query executes under the conf of the session its
-    * DataFrame was created in — replaces the old mutate-and-restore of
-    * the caller's conf: a concurrent session (or the caller's own next
-    * query) can never observe the override, and there is nothing to
-    * restore on failure.
+    * so throughput scales out with the partition count). A query
+    * executes under the conf of the session its DataFrame was created
+    * in, so the stream MUST be built from this session; the caller's
+    * conf is never touched, and a concurrent session (or the caller's
+    * own next query) can never observe the override.
     */
-  private def streamSession(spark: SparkSession, width: Int = 8): SparkSession = {
+  private def streamSession(spark: SparkSession, rocksDb: Boolean, width: Int = 8): SparkSession = {
     val ss = spark.newSession()
-    // newSession starts from the CONTEXT defaults, not the caller's
-    // runtime conf — the one runtime override that must survive into
-    // the child is the state-store provider ([[withRocksDBStateStore]]
-    // scopes RocksDB around the transformWithState drains, and state
-    // v2 hard-requires it)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.getOption(providerKey).foreach(ss.conf.set(providerKey, _))
     ss.conf.set("spark.sql.shuffle.partitions", width.toString)
+    if (rocksDb)
+      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     ss
   }
 
-  /** Drain one streaming query into a parquet dir and read it back.
-    * The output dir is DETERMINISTIC per (tag, input dir, session) and
-    * wiped at the start of each run — repeated gate/bench invocations
-    * reuse one directory instead of accumulating copies, and the
-    * session discriminator keeps concurrent runs against the same
-    * fixture dir from deleting each other's in-flight output; the
-    * checkpoint is deleted even when the query fails (it is useless
-    * without its output dir's batch state anyway).
+  /** The one streaming run every drained gate goes through: build the
+    * stream with `streamOf` on a [[streamSession]] child, run it to the
+    * end of its input under `AvailableNow` in `outputMode`, and
+    * hand each micro-batch to `sink`. Returns the checkpoint, which
+    * lives in the `Scratch` dir `<tag>_ckpt` over `dir` and is KEPT
+    * after the drain: s09 reads its state store offline. The next drain
+    * with the same tag wipes it, and `Scratch`'s shutdown hook removes
+    * it at exit.
     */
-  private def drainToParquet(spark: SparkSession, tag: String, dir: String,
-                             build: DataFrame => DataFrame,
-                             mode: String, outputMode: String): DataFrame =
-    drainStreamed(spark, tag, dir, ss => build(eventsStream(ss, dir)), mode, outputMode)
+  private def drain(spark: SparkSession, tag: String, dir: String, outputMode: String,
+                    rocksDb: Boolean = false)
+                   (streamOf: SparkSession => DataFrame)
+                   (sink: DataFrame => Unit): Path = {
+    val ckpt = Scratch.dir(spark, s"${tag}_ckpt", dir)
+    streamOf(streamSession(spark, rocksDb))
+      .writeStream
+      .outputMode(outputMode)
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch { (batch: DataFrame, _: Long) => sink(batch) }
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    ckpt
+  }
 
-  /** Drain a streaming DataFrame (possibly reading from SEVERAL
-    * `readStream` sources, e.g. a stream-stream join) — the
-    * multi-source generalization of [[drainToParquet]]. The stream is
-    * built by `streamedOf` AGAINST THE SCOPED CHILD SESSION so the
-    * pinned shuffle width (see [[streamSession]]) actually governs the
-    * query's state-store count.
+  /** [[drain]] into the `Scratch` dir `<tag>_out` over `dir` and read
+    * the drained table back: a complete-mode batch is the whole result
+    * and overwrites, an append- or update-mode batch appends.
     */
-  private def drainStreamed(spark: SparkSession, tag: String, dir: String,
-                            streamedOf: SparkSession => DataFrame,
-                            mode: String, outputMode: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.util.Scratch.rmTree
-    val outDir = graft.util.Scratch.dir(spark, s"${tag}_out", dir)
-    val ckpt = java.nio.file.Files.createTempDirectory(s"graft_${tag}_ckpt")
-    try {
-      val q = streamedOf(streamSession(spark))
-        .writeStream
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(mode).parquet(outDir.toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally rmTree(ckpt)
-    spark.read.parquet(outDir.toString)
+  private def drainToTable(spark: SparkSession, tag: String, dir: String, outputMode: String,
+                           rocksDb: Boolean = false)
+                          (streamOf: SparkSession => DataFrame): DataFrame = {
+    val out = Scratch.dir(spark, s"${tag}_out", dir).toString
+    val mode = if (outputMode == "complete") "overwrite" else "append"
+    drain(spark, tag, dir, outputMode, rocksDb)(streamOf)(_.write.mode(mode).parquet(out))
+    spark.read.parquet(out)
+  }
+
+  /** The idempotent keyed-table merge of a `foreachBatch` sink: read
+    * the table (or start empty), union the batch, `fold` to one row per
+    * key, and overwrite (`localCheckpoint` cuts the lineage so the
+    * overwrite never reads the files it replaces). With a `fold` whose
+    * result does not depend on how often a row was seen, re-applying a
+    * batch reaches the same fixed point: exactly-once effect from
+    * at-least-once delivery (the retry spec in `StreamsSpec` proves it
+    * through the engine's own replay). ONLY a missing table counts as
+    * empty (first batch before any write): a read that fails on an
+    * existing table throws and fails the batch — treating it as empty
+    * would silently drop every previously merged key.
+    */
+  private[graft] def mergeInto(batch: DataFrame, tableDir: String)
+                              (fold: DataFrame => DataFrame): Unit = {
+    val existing =
+      if (Files.exists(Paths.get(tableDir))) batch.sparkSession.read.parquet(tableDir)
+      else batch.limit(0)
+    fold(existing.unionByName(batch))
+      .localCheckpoint(true)
+      .write.mode("overwrite").parquet(tableDir)
   }
 
   /** s05: watermarked streaming dedup executed through a REAL streaming
@@ -166,24 +199,21 @@ object Streams {
     * dedup operator does the work.
     */
   def streamingDedup(spark: SparkSession, dir: String): DataFrame =
-    drainToParquet(spark, "s05", dir,
-      s => dedupStream(s).select(col("event_id"), col("user_id"), col("event_type")),
-      mode = "append", outputMode = "append")
+    drainToTable(spark, "s05", dir, "append")(ss =>
+      dedupStream(eventsStream(ss, dir)).select(col("event_id"), col("user_id"), col("event_type")))
       .orderBy(col("event_id"))
 
   /** s04: the hourly aggregation executed through a REAL streaming query
     * — `readStream` over the events parquet, watermark + complete-mode
     * aggregation, `foreachBatch` parquet sink, result read back. The
-    * stream drains under `Trigger.AvailableNow` and complete mode emits
+    * stream drains under `AvailableNow` and complete mode emits
     * the full aggregate, so the result is batch-equivalent and
     * DuckDB-checkable: the streaming engine itself (source planning,
     * state store, sink commit) sits inside the driver's correctness
     * gate instead of only inside specs.
     */
   def hourlyTypeCountsStreamed(spark: SparkSession, dir: String): DataFrame =
-    drainToParquet(spark, "s04", dir,
-      s => hourlyTypeCounts(s.withWatermark("ts", "2 hours")),
-      mode = "overwrite", outputMode = "complete")
+    drainToTable(spark, "s04", dir, "complete")(ss => hourlyTypeCountsStream(eventsStream(ss, dir)))
       .orderBy(col("hour_start"), col("event_type"))
 
   def dedupStream(events: DataFrame): DataFrame =
@@ -218,12 +248,11 @@ object Streams {
   }
 
   /** s10: [[chainedDailyStats]] drained through a real append-mode
-    * streaming run (`Trigger.AvailableNow`, foreachBatch parquet APPEND
+    * streaming run (`AvailableNow`, foreachBatch parquet APPEND
     * — finalized days arrive across micro-batches).
     */
   def streamingChainedDaily(spark: SparkSession, dir: String): DataFrame =
-    drainToParquet(spark, "s10", dir, chainedDailyStats,
-      mode = "append", outputMode = "append")
+    drainToTable(spark, "s10", dir, "append")(ss => chainedDailyStats(eventsStream(ss, dir)))
       .orderBy(col("day_start"), col("event_type"))
 
   /** Stream-STATIC enrichment: the event stream inner-joined to the
@@ -251,9 +280,8 @@ object Streams {
     * broadcast, stateless join) sits inside the DuckDB gate.
     */
   def streamingEnrichedSegments(spark: SparkSession, dir: String): DataFrame =
-    drainToParquet(spark, "s15", dir,
-      s => enrichedSegmentCounts(s, Tables.customer(spark, dir)),
-      mode = "overwrite", outputMode = "complete")
+    drainToTable(spark, "s15", dir, "complete")(ss =>
+      enrichedSegmentCounts(eventsStream(ss, dir), Tables.customer(spark, dir)))
       .orderBy(col("c_mktsegment"), col("event_type"))
 
   /** s17: streaming anomaly gate — the q92 z-score outlier filter run
@@ -270,9 +298,8 @@ object Streams {
   def streamingOutlierGate(spark: SparkSession, dir: String): DataFrame = {
     val profile = graft.operators.DataQuality.outlierProfile(
       Tables.events(spark, dir))
-    drainToParquet(spark, "s17", dir,
-      s => graft.operators.DataQuality.flagOutliers(s, profile, 3.0),
-      mode = "append", outputMode = "append")
+    drainToTable(spark, "s17", dir, "append")(ss =>
+      graft.operators.DataQuality.flagOutliers(eventsStream(ss, dir), profile, 3.0))
       .orderBy(col("event_type"), col("event_id"))
   }
 
@@ -299,18 +326,17 @@ object Streams {
     * streaming run — two independent `readStream` sources over the same
     * events parquet (purchases vs clicks), both watermarked, inner
     * interval join on user within ±1 hour, drained append-mode under
-    * `Trigger.AvailableNow`. Inner-join matches are emitted in the
+    * `AvailableNow`. Inner-join matches are emitted in the
     * micro-batch where both sides are present (watermarks bound STATE
     * RETENTION, not inner-join emission), so the drained result equals
     * the batch interval join and is DuckDB-checkable — while the
     * symmetric-hash join state store does the actual work.
     */
   def streamingIntervalJoin(spark: SparkSession, dir: String): DataFrame =
-    drainStreamed(spark, "s06", dir,
-      ss => purchaseClickJoinStream(
+    drainToTable(spark, "s06", dir, "append")(ss =>
+      purchaseClickJoinStream(
         eventsStream(ss, dir).filter(col("event_type") === "purchase"),
-        eventsStream(ss, dir).filter(col("event_type") === "click")),
-      mode = "append", outputMode = "append")
+        eventsStream(ss, dir).filter(col("event_type") === "click")))
       .orderBy(col("event_id"), col("c_ts"))
 
   /** LEFT OUTER stream-stream interval join — s06's shape with the
@@ -345,19 +371,17 @@ object Streams {
     * two-source append-mode streaming run.
     */
   def streamingLeftOuterJoin(spark: SparkSession, dir: String): DataFrame =
-    drainStreamed(spark, "s11", dir,
-      ss => purchaseClickLeftJoinStream(
+    drainToTable(spark, "s11", dir, "append")(ss =>
+      purchaseClickLeftJoinStream(
         eventsStream(ss, dir).filter(col("event_type") === "purchase"),
-        eventsStream(ss, dir).filter(col("event_type") === "click")),
-      mode = "append", outputMode = "append")
+        eventsStream(ss, dir).filter(col("event_type") === "click")))
       .orderBy(col("event_id"), col("c_ts"))
 
   /** s12: the streaming KEYED-UPSERT SINK — the reference's `_id` bulk
     * upsert (S6, `ingestion-elasticsearch.py:36-55`) as a streaming
-    * apply: every micro-batch folds into a keyed parquet table via
-    * read → union → keep latest per key → overwrite (the idempotent
-    * `foreachBatch` CDC-apply pattern; `localCheckpoint` cuts the
-    * lineage so the overwrite never reads the files it replaces).
+    * apply: every micro-batch folds into a keyed parquet table through
+    * [[mergeInto]] with [[latestPerUser]] (the idempotent
+    * `foreachBatch` CDC-apply pattern).
     * Last-write-wins is (ts, event_id)-ordered, so the winner is
     * deterministic under any batch split, and a batch REPLAY re-applies
     * to the same result — exactly-once effect from at-least-once
@@ -365,23 +389,10 @@ object Streams {
     * oracle = the batch latest-per-key query over all events.
     */
   def streamingUpsertApply(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.streaming.Trigger
-    val tableDir = graft.util.Scratch.dir(spark, "s12_table", dir).toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_s12_ckpt")
-    try {
-      val q = eventsStream(streamSession(spark), dir)
-        .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          upsertBatch(batch, tableDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.util.Scratch.rmTree(ckpt)
+    val tableDir = Scratch.dir(spark, "s12_table", dir).toString
+    drain(spark, "s12", dir, "append")(ss =>
+      eventsStream(ss, dir).select(col("user_id"), col("event_id"), col("ts"), col("value")))(
+      mergeInto(_, tableDir)(latestPerUser))
     spark.read.parquet(tableDir)
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("ts"), col("value"))
@@ -433,7 +444,7 @@ object Streams {
   /** s14: the ordered funnel (q85) executed as a STATEFUL STREAMING
     * query — `mapGroupsWithState` keeps the per-user [[FunnelState]],
     * every micro-batch emits the user's current stage (update mode),
-    * and a `foreachBatch` keyed upsert folds emissions into a stage
+    * and a [[mergeInto]] keyed upsert folds emissions into a stage
     * table keeping each user's MAX stage (stages are monotone because
     * t1/t2/t3 only decrease — so last-write and max-write agree, and a
     * batch replay re-applies to the same fixed point, the s12
@@ -442,47 +453,24 @@ object Streams {
     */
   def streamingFunnel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, Trigger}
-    val tableDir = graft.util.Scratch.dir(spark, "s14_table", dir).toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_s14_ckpt")
-    try {
-      val q = eventsStream(streamSession(spark), dir)
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+    val tableDir = Scratch.dir(spark, "s14_table", dir).toString
+    drain(spark, "s14", dir, "update")(ss =>
+      eventsStream(ss, dir)
         .select(col("user_id"), col("event_type"),
           expr("unix_micros(ts)").as("us"))
         .as[FunnelEvent]
         .groupByKey(_.user_id)
         .mapGroupsWithState[FunnelState, FunnelUpdate](GroupStateTimeout.NoTimeout) {
-          (uid: Long, rows: Iterator[FunnelEvent],
-           state: org.apache.spark.sql.streaming.GroupState[FunnelState]) =>
+          (uid: Long, rows: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
             var s = state.getOption.getOrElse(
               FunnelState(Long.MaxValue, Long.MaxValue, Long.MaxValue, Nil, Nil))
             rows.foreach(e => s = funnelAdvance(s, e.event_type, e.us))
             state.update(s)
             FunnelUpdate(uid, funnelStage(s))
         }
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[FunnelUpdate], _: Long) =>
-          val sp = batch.sparkSession
-          val b = batch.toDF()
-          val existing =
-            try sp.read.parquet(tableDir)
-            catch {
-              case _: org.apache.spark.sql.AnalysisException
-                  if !java.nio.file.Files.exists(java.nio.file.Paths.get(tableDir)) =>
-                b.limit(0)
-            }
-          existing.unionByName(b)
-            .groupBy(col("user_id"))
-            .agg(max(col("stage")).as("stage"))
-            .localCheckpoint(true)
-            .write.mode("overwrite").parquet(tableDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.util.Scratch.rmTree(ckpt)
+        .toDF())(
+      mergeInto(_, tableDir)(_.groupBy(col("user_id")).agg(max(col("stage")).as("stage"))))
     val st = spark.read.parquet(tableDir)
     def stepRow(step: Int, name: String) =
       st.filter(col("stage") >= step)
@@ -508,34 +496,16 @@ object Streams {
     * frozen centroids.
     */
   def streamingIndexAppend(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
     import graft.operators.Similarity
     val split = Similarity.indexBaseSplit
-    val idxDir = graft.util.Scratch.dir(spark, "s13_idx", dir).toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_s13_ckpt")
+    val idxDir = Scratch.dir(spark, "s13_idx", dir).toString
     val emb = Tables.embeddings(spark, dir)
     // fixed-point build (r8): the frozen index is integer-derived, so
     // the drained stream's answers hash-check against the e13 oracle
     Similarity.buildIvfIndexFixedPoint(emb.filter(col("vec_id") < split), "vec_id", "embedding", idxDir)
-    val embFileSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    try {
-      val q = streamSession(spark).readStream.schema(embFileSchema)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        .filter(col("vec_id") >= split)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Similarity.appendIvfIndexFixedPoint(batch, "vec_id", "embedding", idxDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.util.Scratch.rmTree(ckpt)
+    drain(spark, "s13", dir, "append")(ss =>
+      fileStream(ss, dir, "embeddings.parquet").parquet(dir).filter(col("vec_id") >= split))(
+      Similarity.appendIvfIndexFixedPoint(_, "vec_id", "embedding", idxDir))
     Similarity.queryIvfIndexFixedPoint(spark, idxDir,
       emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
   }
@@ -560,19 +530,18 @@ object Streams {
     * oracle CTEs restricted to doc_b ≥ split.
     */
   def streamingNearDup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     import graft.operators.Dedup
     val split = Dedup.incrementalSplit
-    val idxDir = graft.util.Scratch.dir(spark, "s19_idx", dir).toString
-    val outDir = graft.util.Scratch.dir(spark, "s19_out", dir).toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_s19_ckpt")
-    // the index-build batch read uses the SAME glob as the stream
-    // source below, so one fixture contract covers both layouts: the
-    // driver fixtures' single documents.parquet FILE and a
-    // production-shaped multi-file drop (documents-NNNNN.parquet)
-    val docs = spark.read.option("pathGlobFilter", "documents*.parquet")
-      .parquet(dir)
+    val idxDir = Scratch.dir(spark, "s19_idx", dir).toString
+    val outDir = Scratch.dir(spark, "s19_out", dir).toString
+    // the index build and the stream source read the SAME glob, so one
+    // fixture contract covers both layouts: the test fixtures' single
+    // documents.parquet FILE and a production-shaped multi-file drop
+    // (documents-NNNNN.parquet) — a micro-batch then carries one input
+    // SPLIT per file, so the per-batch map stages parallelize instead of
+    // running single-task (the GuardStress drain leg measures this)
+    val glob = "documents*.parquet"
+    val docs = spark.read.option("pathGlobFilter", glob).parquet(dir)
     // index build and the schema-seed write touch disjoint directories
     // — overlapped (guide §2.6), the seed's tiny job rides inside the
     // build's window instead of paying its own driver gap
@@ -584,31 +553,9 @@ object Streams {
       // still reads cleanly
       () => Seq.empty[(Long, Long, Double)].toDF("doc_a", "doc_b", "jaccard")
         .write.mode("overwrite").parquet(outDir))
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    try {
-      // glob covers both the fixtures' single `documents.parquet` FILE
-      // and a production-shaped multi-file drop (`documents-00017
-      // .parquet`, ...) — a micro-batch then carries one input SPLIT
-      // per file, so the per-batch map stages parallelize instead of
-      // running single-task (the GuardStress drain leg measures this)
-      val q = streamSession(spark).readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents*.parquet").parquet(dir)
-        .filter(col("doc_id") >= split)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Dedup.appendLshDetect(batch, "doc_id", "text", idxDir, outDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.util.Scratch.rmTree(ckpt)
+    drain(spark, "s19", dir, "append")(ss =>
+      fileStream(ss, dir, glob).parquet(dir).filter(col("doc_id") >= split))(
+      Dedup.appendLshDetect(_, "doc_id", "text", idxDir, outDir))
     spark.read.parquet(outDir)
       .dropDuplicates("doc_a", "doc_b")
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
@@ -630,11 +577,8 @@ object Streams {
     * oracle VERBATIM.
     */
   def streamingDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     import graft.operators.Curation
-    val outDir = graft.util.Scratch.dir(spark, "s20_out", dir).toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_s20_ckpt")
+    val outDir = Scratch.dir(spark, "s20_out", dir).toString
     val docs = Tables.documents(spark, dir)
     // static side once: an 8 KiB-scale key set, localCheckpoint cuts
     // the per-batch lineage back to the materialized keys
@@ -642,26 +586,9 @@ object Streams {
     import spark.implicits._
     Seq.empty[(Long, Long)].toDF("doc_id", "n_eval_hits")
       .write.mode("overwrite").parquet(outDir)
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    try {
-      val q = streamSession(spark).readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Curation.contaminationHits(batch, evalKeys, 8)
-            .write.mode("append").parquet(outDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.util.Scratch.rmTree(ckpt)
+    drain(spark, "s20", dir, "append")(ss =>
+      fileStream(ss, dir, "documents.parquet").parquet(dir))(
+      Curation.contaminationHits(_, evalKeys, 8).write.mode("append").parquet(outDir))
     spark.read.parquet(outDir)
       .dropDuplicates("doc_id")
       .select(col("doc_id"), col("n_eval_hits"))
@@ -682,12 +609,9 @@ object Streams {
     * oracle VERBATIM.
     */
   def streamingLmScore(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     import graft.functions.TextFns._
     import graft.operators.TextAnalysis
-    val outDir = graft.util.Scratch.dir(spark, "s21_out", dir).toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_s21_ckpt")
+    val outDir = Scratch.dir(spark, "s21_out", dir).toString
     val toksOf = (df: DataFrame) => df.select(col("doc_id"),
       filter(tokens(normalizeText(col("text"))), t => length(t) > 0).as("toks"))
     // static side once: the reference split's bigram counts,
@@ -699,27 +623,10 @@ object Streams {
     Seq.empty[(Long, Long, Long, Long)]
       .toDF("doc_id", "n_bigrams", "oov_bigrams", "lm_score")
       .write.mode("overwrite").parquet(outDir)
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    try {
-      val q = streamSession(spark).readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          TextAnalysis.lmScoreAgainst(
-            toksOf(batch.filter(col("doc_id") % 10 >= 8)), lm)
-            .write.mode("append").parquet(outDir)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally graft.util.Scratch.rmTree(ckpt)
+    drain(spark, "s21", dir, "append")(ss =>
+      fileStream(ss, dir, "documents.parquet").parquet(dir))(batch =>
+      TextAnalysis.lmScoreAgainst(toksOf(batch.filter(col("doc_id") % 10 >= 8)), lm)
+        .write.mode("append").parquet(outDir))
     spark.read.parquet(outDir)
       .dropDuplicates("doc_id")
       .orderBy(col("doc_id"))
@@ -743,66 +650,35 @@ object Streams {
   def streamingTokenMeter(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalysis
     val merges = TextAnalysis.bpeTrainBatched(spark, dir, 8, 8, 64)
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("lang",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("source",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("n_chars",
-        org.apache.spark.sql.types.LongType)))
-    drainStreamed(spark, "s23", dir,
+    drainToTable(spark, "s23", dir, "append")(ss =>
       // repartition BEFORE the 64-deep replace chain: a single-file
       // micro-batch otherwise metres the whole batch on one core (r14
       // job profile: 1.8 s in one 1-task stage); the exchange carries
       // raw text — cheap next to the encode — and the width follows
       // the session's core count, not a constant
-      ss => graft.util.Spread.stream(ss.readStream.schema(docSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir))
+      graft.util.Spread.stream(fileStream(ss, dir, "documents.parquet").parquet(dir))
         .select(col("doc_id"),
           size(TextAnalysis.bpeTokensCol(merges, col("text")))
-            .cast("long").as("n_bpe_tokens")),
-      mode = "append", outputMode = "append")
+            .cast("long").as("n_bpe_tokens")))
       .dropDuplicates(Seq("doc_id", "n_bpe_tokens"))
       .orderBy(col("doc_id"))
   }
 
-  /** The s12 merge: read → union → keep latest per (ts, event_id) →
-    * overwrite. IDEMPOTENT under replay — re-applying the same batch
-    * reaches the same fixed point (the retry spec in `StreamsSpec`
-    * injects a post-write failure and proves it through the streaming
-    * engine's own replay).
+  /** The s12 fold: the latest row per user by (ts, event_id) — a
+    * total order, so the winner is the same however often a row was
+    * merged, which makes [[mergeInto]] idempotent under replay.
     */
-  private[graft] def upsertBatch(batch: DataFrame, tableDir: String): Unit = {
+  private[graft] def latestPerUser(rows: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sp = batch.sparkSession
-    // ONLY table-absent counts as "empty" (first batch before any
-    // write). A transient IO failure must rethrow and fail the batch —
-    // treating it as an empty table would silently drop every
-    // previously-upserted key, breaking the exactly-once claim this
-    // sink exists to demonstrate.
-    val existing =
-      try sp.read.parquet(tableDir)
-      catch {
-        case _: org.apache.spark.sql.AnalysisException
-            if !java.nio.file.Files.exists(java.nio.file.Paths.get(tableDir)) =>
-          batch.limit(0)
-      }
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id").desc)
-    existing.unionByName(batch)
-      .withColumn("rn", row_number().over(w))
+    rows.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
-      .localCheckpoint(true)
-      .write.mode("overwrite").parquet(tableDir)
   }
 
   /** s09: offline STATE-STORE inspection — the `statestore` batch
     * reader over a retained checkpoint. A streaming `groupBy(type)
-    * .count()` drains under `Trigger.AvailableNow` (update mode, the
+    * .count()` drains under `AvailableNow` (update mode, the
     * checkpoint deliberately KEPT), then the state store itself is
     * read back as a batch DataFrame: one row per aggregation key
     * holding the running-count buffer of the last committed batch —
@@ -815,23 +691,11 @@ object Streams {
     * so they are discovered from the read schema, not hard-coded.
     */
   def stateInspect(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types.StructType
-    val ckpt = graft.util.Scratch.dir(spark, "s09_ckpt", dir)
-    val sink = graft.util.Scratch.dir(spark, "s09_out", dir)
-    locally {
-      val q = eventsStream(streamSession(spark), dir)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(sink.toString)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val sink = Scratch.dir(spark, "s09_out", dir).toString
+    val ckpt = drain(spark, "s09", dir, "update")(ss =>
+      eventsStream(ss, dir).groupBy(col("event_type")).agg(count(lit(1)).as("n")))(
+      _.write.mode("append").parquet(sink))
     val state = spark.read.format("statestore")
       .option("path", ckpt.toString).load()
     val keyField = state.schema("key").dataType
@@ -847,17 +711,18 @@ object Streams {
 
   // — custom state v2: transformWithState running totals (§2.9) —
 
-  case class RunningTotal(user_id: Long, n_events: Long, total_value: Double)
-
   case class TotalsInput(user_id: Long, cents: Long)
   case class UserTotal(user_id: Long, n_events: Long, total_cents: Long)
 
-  /** Integer-cents running-totals processor — the [[RunningTotalsProcessor]]
-    * shape with ALL-INTEGER state, so the drained final totals are exact
-    * regardless of micro-batch boundaries or in-batch row order (a double
-    * accumulator's value depends on addition order; a long's doesn't).
-    * That is what lets a `transformWithState` query sit inside the
-    * DuckDB-checked driver gate (s07) rather than only inside specs.
+  /** Per-user running totals via the arbitrary-state v2 API
+    * (`transformWithState` + `StatefulProcessor` + `ValueState`): state
+    * survives across micro-batches, and each batch emits the updated
+    * running (count, cents) per key. The state is ALL-INTEGER, so the
+    * drained final totals are exact regardless of micro-batch
+    * boundaries or in-batch row order (a double accumulator's value
+    * depends on addition order; a long's doesn't). That is what lets a
+    * `transformWithState` query sit inside the DuckDB-checked
+    * correctness gate (s07) rather than only inside specs.
     */
   class CentsTotalsProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
@@ -890,25 +755,6 @@ object Streams {
     events.groupByKey(_.user_id)
       .transformWithState(new CentsTotalsProcessor,
         TimeMode.None(), OutputMode.Update())
-  }
-
-  /** Run `body` with the RocksDB state-store provider set (the v2 state
-    * API needs column families), restoring the previous session value —
-    * shared by every `transformWithState` gate entry (s07, s08).
-    */
-  private def withRocksDBStateStore[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      body
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
   }
 
   case class ShardEvent(shard: Long, event_type: String)
@@ -970,14 +816,11 @@ object Streams {
     */
   def streamingTypeCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val drained = withRocksDBStateStore(spark) {
-      drainStreamed(spark, "s08", dir,
-        ss => runningTypeCounts(
-          eventsStream(ss, dir)
-            .select((col("user_id") % 16).as("shard"), col("event_type"))
-            .as[ShardEvent]).toDF(),
-        mode = "append", outputMode = "update")
-    }
+    val drained = drainToTable(spark, "s08", dir, "update", rocksDb = true)(ss =>
+      runningTypeCounts(
+        eventsStream(ss, dir)
+          .select((col("user_id") % 16).as("shard"), col("event_type"))
+          .as[ShardEvent]).toDF())
     drained.groupBy(col("shard"), col("event_type"))
       .agg(max(col("n")).as("n_final"))
       .groupBy(col("event_type"))
@@ -1044,40 +887,23 @@ object Streams {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import graft.functions.TextFns._
-    val drained = withRocksDBStateStore(spark) {
-      drainStreamed(spark, "s22", dir,
-        ss => {
-          val docSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("lang",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("source",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("n_chars",
-              org.apache.spark.sql.types.LongType)))
-          // maxFilesPerTrigger bounds the per-micro-batch row count at
-          // scale (a crawl delivers many files), which is what bounds
-          // the processor's per-shard sort buffer: buffer ≤ batch/shards
-          // rows. On this single-file fixture the batch is the whole
-          // (small) corpus — the file source can't split one file — so
-          // the option is inert here but the bound is real in any
-          // multi-file deployment.
-          ss.readStream.schema(docSchema)
-            .option("pathGlobFilter", "documents.parquet")
-            .option("maxFilesPerTrigger", "1").parquet(dir)
-            .select((col("doc_id") % shards).as("shard"), col("doc_id"),
-              size(tokens(col("text"))).cast("long").as("n_tokens"))
-            .as[PackInput]
-            .groupByKey(_.shard)
-            .transformWithState(new SequencePackProcessor(budget),
-              TimeMode.None(), OutputMode.Update())
-            .toDF()
-        },
-        mode = "append", outputMode = "update")
-    }
+    val drained = drainToTable(spark, "s22", dir, "update", rocksDb = true)(ss =>
+      // maxFilesPerTrigger bounds the per-micro-batch row count at
+      // scale (a crawl delivers many files), which is what bounds the
+      // processor's per-shard sort buffer: buffer ≤ batch/shards rows.
+      // On this single-file fixture the batch is the whole (small)
+      // corpus — the file source can't split one file — so the option
+      // is inert here but the bound is real in any multi-file
+      // deployment.
+      fileStream(ss, dir, "documents.parquet")
+        .option("maxFilesPerTrigger", "1").parquet(dir)
+        .select((col("doc_id") % shards).as("shard"), col("doc_id"),
+          size(tokens(col("text"))).cast("long").as("n_tokens"))
+        .as[PackInput]
+        .groupByKey(_.shard)
+        .transformWithState(new SequencePackProcessor(budget),
+          TimeMode.None(), OutputMode.Update())
+        .toDF())
     // dedup on ALL columns, not just doc_id: if a foreachBatch retry
     // ever replayed a batch with divergent state-derived offsets, a
     // doc_id-only dedup would mask it by keeping an arbitrary row —
@@ -1103,60 +929,16 @@ object Streams {
     */
   def streamingUserTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val drained = withRocksDBStateStore(spark) {
-      drainStreamed(spark, "s07", dir,
-        ss => runningUserCents(
-          eventsStream(ss, dir)
-            .select(col("user_id"),
-              (dec(col("value")) * 100).cast("long").as("cents"))
-            .as[TotalsInput]).toDF(),
-        mode = "append", outputMode = "update")
-    }
+    val drained = drainToTable(spark, "s07", dir, "update", rocksDb = true)(ss =>
+      runningUserCents(
+        eventsStream(ss, dir)
+          .select(col("user_id"), (dec(col("value")) * 100).cast("long").as("cents"))
+          .as[TotalsInput]).toDF())
     drained.groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("total_cents"))).as("m"))
       .select(col("user_id"), col("m.n_events").as("n_events"),
         col("m.total_cents").as("total_cents"))
       .orderBy(col("user_id"))
-  }
-
-  /** Per-user running totals via the arbitrary-state v2 API
-    * (`transformWithState` + `StatefulProcessor` + `ValueState`): state
-    * survives across micro-batches, each batch emits the updated
-    * running aggregate per key — the modern replacement for
-    * `mapGroupsWithState`-style accumulators with typed, TTL-capable
-    * state handles.
-    */
-  class RunningTotalsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, SessionInput, RunningTotal] {
-    @transient private var state:
-        org.apache.spark.sql.streaming.ValueState[(Long, Double)] = _
-
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[(Long, Double)]("totals",
-        org.apache.spark.sql.Encoders.product[(Long, Double)],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        userId: Long, rows: Iterator[SessionInput],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[RunningTotal] = {
-      val (n0, s0) = if (state.exists()) state.get() else (0L, 0.0)
-      var n = n0; var s = s0
-      rows.foreach { e => n += 1; s += e.value }
-      state.update((n, s))
-      Iterator.single(RunningTotal(userId, n, s))
-    }
-  }
-
-  def runningUserTotals(events: org.apache.spark.sql.Dataset[SessionInput])
-      : org.apache.spark.sql.Dataset[RunningTotal] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalsProcessor,
-        TimeMode.None(), OutputMode.Update())
   }
 
   // — custom state: flatMapGroupsWithState sessionizer (§2.9) —
@@ -1293,22 +1075,18 @@ object Streams {
   def streamingSampledQuantiles(spark: SparkSession, dir: String,
                                 k: Int = 256): DataFrame = {
     import spark.implicits._
-    val drained = withRocksDBStateStore(spark) {
-      drainStreamed(spark, "s18", dir,
-        ss => eventsStream(ss, dir)
-          .select(col("event_type"), col("event_id"),
-            expr("cast(conv(substr(md5(cast(cast(event_id as string) as binary)), 1, 15), 16, 10) as bigint)").as("hk"),
-            (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) *
-              100).cast("long").as("cents"))
-          .as[QsInput]
-          .groupByKey(_.event_type)
-          .transformWithState(
-            new QuantileSampleProcessor(k, Seq(0.25, 0.5, 0.75, 0.9)),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF(),
-        mode = "append", outputMode = "update")
-    }
+    val drained = drainToTable(spark, "s18", dir, "update", rocksDb = true)(ss =>
+      eventsStream(ss, dir)
+        .select(col("event_type"), col("event_id"),
+          expr("cast(conv(substr(md5(cast(cast(event_id as string) as binary)), 1, 15), 16, 10) as bigint)").as("hk"),
+          (dec(col("value")) * 100).cast("long").as("cents"))
+        .as[QsInput]
+        .groupByKey(_.event_type)
+        .transformWithState(
+          new QuantileSampleProcessor(k, Seq(0.25, 0.5, 0.75, 0.9)),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF())
     drained
       .groupBy(col("event_type"), col("q"))
       .agg(max(struct(col("version"), col("est"))).as("m"))
@@ -1365,19 +1143,16 @@ object Streams {
   def streamingKmvDistinct(spark: SparkSession, dir: String,
                            k: Int = 64): DataFrame = {
     import spark.implicits._
-    val drained = withRocksDBStateStore(spark) {
-      drainStreamed(spark, "s16", dir,
-        ss => eventsStream(ss, dir)
-          .select(col("event_type"),
-            expr("cast(conv(substr(md5(cast(cast(user_id as string) as binary)), 1, 15), 16, 10) as bigint)").as("h"))
-          .as[KmvInput]
-          .groupByKey(_.event_type)
-          .transformWithState(new KmvSketchProcessor(k),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF(),
-        mode = "append", outputMode = "update")
-    }
+    val drained = drainToTable(spark, "s16", dir, "update", rocksDb = true)(ss =>
+      eventsStream(ss, dir)
+        .select(col("event_type"),
+          expr("cast(conv(substr(md5(cast(cast(user_id as string) as binary)), 1, 15), 16, 10) as bigint)").as("h"))
+        .as[KmvInput]
+        .groupByKey(_.event_type)
+        .transformWithState(new KmvSketchProcessor(k),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF())
     val finals = drained
       .groupBy(col("event_type"))
       .agg(max(struct(col("version"), col("n_kept"), col("h_k"))).as("m"))

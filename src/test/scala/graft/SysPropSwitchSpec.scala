@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * system property. Only the two same-JVM kill switches the `DebugPerf
   * propab` harness toggles (`graft.par.off` in `util/Par.scala`,
   * `graft.spread.off` in `util/Spread.scala`) and the tools may read
-  * one. Likewise only `util/GraftSession` builds a session.
+  * one. Likewise only `util/GraftSession` builds a session, and only
+  * `Streams.drain` starts a stream.
   */
 class SysPropSwitchSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
@@ -50,5 +51,11 @@ class SysPropSwitchSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
     // the factory itself still matches (the pattern is not stale)
     assert(matches(builder, _ == "util/GraftSession.scala").nonEmpty)
+  }
+
+  test("writeStream appears once in src/main, in the streaming drain") {
+    val sites = matches("""\.writeStream\b""".r, _ => true)
+    assert(sites.size == 1 && sites.head.startsWith("streaming/Streams.scala:"),
+      sites.mkString("\n"))
   }
 }

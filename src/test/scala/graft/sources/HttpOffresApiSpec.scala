@@ -210,6 +210,38 @@ class HttpOffresApiSpec extends SparkSpec with BeforeAndAfterAll {
     assert(spark.read.parquet(s"$out/offres").count() == 200)
   }
 
+  test("scanning fresh API endpoints leaves at most one HTTP client thread behind") {
+    import scala.jdk.CollectionConverters._
+    // each java.net.http client owns one SelectorManager thread until
+    // it is collected, which that thread notices within seconds
+    def selectorThreads(): Int = {
+      System.gc()
+      Thread.getAllStackTraces.keySet.asScala.count(_.getName.contains("SelectorManager"))
+    }
+    val stubOffers = (0 until 30).map(i =>
+      StubOffre(Some(s"o$i"), s"Offre $i", s"d$i", "M1", "R1", "D11"))
+    val before = selectorThreads()
+    (1 to 6).foreach { _ =>
+      val stub = new StubOffresServer(stubOffers, Map("k1" -> "s-k1"))
+      try {
+        val n = spark.read.format("graft.sources.OffresSource")
+          .option("endpoint", stub.base)
+          .option("authUrl", stub.authUrl)
+          .option("secrets", "k1:s-k1")
+          .load().count()
+        assert(n == 30L)
+      } finally stub.stop()
+    }
+    val deadline = System.nanoTime() + 15000000000L
+    var after = selectorThreads()
+    while (after > before + 1 && System.nanoTime() < deadline) {
+      Thread.sleep(250)
+      after = selectorThreads()
+    }
+    assert(after - before <= 1,
+      s"$before SelectorManager threads before six scans, $after after")
+  }
+
   test("bad credentials fail fast with a clear auth error") {
     val e = intercept[RuntimeException] {
       HttpOffresApi.authenticate(s"$base/token", "k1", "wrong")

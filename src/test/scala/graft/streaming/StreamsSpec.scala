@@ -87,15 +87,8 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("file-source streaming: events parquet replayed as a stream matches batch") {
-    val dir = sf // fixture dir; pathGlobFilter selects the events table
-    // schema from a batch footer read + the shared adaptive ts
-    // normalization — robust to the fixture's physical ts type
-    val schema = spark.read
-      .option("pathGlobFilter", "events.parquet").parquet(dir).schema
-    val stream = graft.Tables.normalizeEventTs(
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir))
-    val q = Streams.hourlyTypeCountsStream(stream)
+    val dir = sf // fixture dir; the events stream globs its one file
+    val q = Streams.hourlyTypeCountsStream(Streams.eventsStream(spark, dir))
       .writeStream.format("memory").queryName("file_hourly")
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
@@ -151,8 +144,9 @@ class StreamsSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val mem = MemoryStream[Ev]
-    val in = mem.toDF().selectExpr("user_id", "ts", "value").as[Streams.SessionInput]
-    val q = Streams.runningUserTotals(in)
+    val in = mem.toDF()
+      .selectExpr("user_id", "CAST(value * 100 AS BIGINT) AS cents").as[Streams.TotalsInput]
+    val q = Streams.runningUserCents(in)
       .writeStream.format("memory").queryName("tws_totals")
       .outputMode("update").start()
     try {
@@ -165,13 +159,13 @@ class StreamsSpec extends SparkSpec {
       spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
     val rows = spark.table("tws_totals")
-      .select($"user_id", $"n_events", $"total_value")
-      .as[(Long, Long, Double)].collect().toSeq
-    // batch 1 emitted u1 -> (2, 3.0); batch 2 emitted u1 -> (3, 6.0)
-    // proving state carried across batches, and u2 -> (2, 9.0)
-    assert(rows.contains((1L, 2L, 3.0)))
-    assert(rows.contains((1L, 3L, 6.0)))
-    assert(rows.contains((2L, 2L, 9.0)))
+      .select($"user_id", $"n_events", $"total_cents")
+      .as[(Long, Long, Long)].collect().toSeq
+    // batch 1 emitted u1 -> (2, 300); batch 2 emitted u1 -> (3, 600)
+    // proving state carried across batches, and u2 -> (2, 900)
+    assert(rows.contains((1L, 2L, 300L)))
+    assert(rows.contains((1L, 3L, 600L)))
+    assert(rows.contains((2L, 2L, 900L)))
   }
 
   test("s07 streaming user totals equal the batch aggregate on the fixture") {
@@ -319,7 +313,7 @@ class StreamsSpec extends SparkSpec {
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          Streams.upsertBatch(batch, tableDir)
+          Streams.mergeInto(batch, tableDir)(Streams.latestPerUser)
           if (!failedOnce.getAndSet(true))
             throw new RuntimeException("injected post-write failure")
         }
@@ -341,6 +335,39 @@ class StreamsSpec extends SparkSpec {
       .orderBy($"user_id")
       .collect().toSeq
     assert(got == expected, "replayed drain equals the batch latest-per-key oracle")
+  }
+
+  test("s12 and s14 merges never read a table that is not there yet") {
+    // Spark logs a WARN naming the path, with its FileNotFoundException,
+    // whenever a parquet read is pointed at a missing path
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("s12-s14-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warnings.add(e.getMessage.getFormattedMessage + " " +
+            Option(e.getThrown).map(_.toString).getOrElse(""))
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      assert(Streams.streamingUpsertApply(spark, sf).count() > 0)
+      assert(Streams.streamingFunnel(spark, sf).count() == 3)
+    } finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    val onTables = warnings.asScala.filter(w => "graft_s1[24]_table".r.findFirstIn(w).isDefined)
+    assert(onTables.isEmpty, onTables.mkString("\n"))
   }
 
   test("s13 streaming index append == one-pass assignment on the same frozen centroids") {
@@ -402,7 +429,6 @@ class StreamsSpec extends SparkSpec {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val sf = "/root/testdata/sf0.001"
     val split = Dedup.incrementalSplit
     val idxDir = graft.util.Scratch.dir(spark, "s19_retry_idx", sf).toString
@@ -415,14 +441,9 @@ class StreamsSpec extends SparkSpec {
     def bandsCount(): Long = spark.read.parquet(
       graft.util.GenManifest.tablePath(spark, idxDir, "bands")).count()
     val baseBands = bandsCount()
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
     val failedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
     def run(): Unit = {
-      val q = spark.readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(sf)
+      val q = Streams.fileStream(spark, sf, "documents.parquet").parquet(sf)
         .filter($"doc_id" >= split)
         .writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
