@@ -1,68 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
-  /** clearCache only unpersists cached datasets; localCheckpoint blocks
-    * (eagerly-materialized pair sets etc.) live as persistent RDDs
-    * outside the cache manager — drop those too so no query runs with a
-    * predecessor's storage resident.
-    */
-  def dropAllStorage(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    // blocking: the next timed window must not overlap async eviction
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    // Quiesce between timed windows: without this, sub-second queries
-    // absorb 2-5x of the previous query's deferred GC + scheduler
-    // cleanup (r6 judge: e10 3.56s in-sequence vs 0.73s standalone).
-    // The GC and sleep are OUTSIDE every timed window.
-    System.gc()
-    Thread.sleep(150)
-  }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = util.GraftSession()
     // SPARK_GRAFT_ONLY: comma-separated subset for local iteration —
     // the driver and pre-snapshot gate always run the full map
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    // Untimed warmup on the smallest fixture: JIT + codegen + parquet
-    // footer caches, so the first timed query doesn't absorb JVM startup.
-    queries.foreach { case (_, fn) =>
-      // per-query guard: one failing query must not abort warmup for
-      // the rest
-      try fn(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
-    }
-    // drop warmup persists BEFORE timing — otherwise query 1 runs with
-    // the whole warmup cache footprint (or outright hits it when sfDir
-    // is the warmup fixture) while queries 2..N run cold
-    dropAllStorage(spark)
-    // Steady state per query: two timed reps back-to-back, report the
-    // min. Rep 1 doubles as the target-scale JIT/codegen warmup (the old
-    // single-pass harness under-warmed once the suite grew past ~100
-    // queries: r5's in-sequence numbers were first-execution compile
-    // cost, 4-8x above the standalone warm times — see VERDICT r5).
-    // Storage is dropped between reps so rep 2 re-executes the plan
-    // (Spark's cache manager matches by logical plan, so a persist left
-    // by rep 1 would turn rep 2 into a cache read, not a measurement).
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
+    val names = QueryRun.names()
+    QueryRun.warmup(spark, names)
+    // min of the reps per query (QueryRun.timed has the rep contract)
+    val reps = QueryRun.defaultReps
+    val timings = names.map(name => name -> QueryRun.timed(spark, name, sfDir, reps))
     // a query that THROWS must be visible in the artifact — its elapsed
     // time alone reads as a deceptively fast success
-    val failedQ = scala.collection.mutable.LinkedHashSet[String]()
-    val repTimes = queries.map { case (name, fn) =>
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
-        catch { case _: Throwable => failedQ += name; -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        dropAllStorage(spark) // per-rep: drop persists + checkpoint blocks (untimed)
-        dt
-      }
-      name -> times
-    }
+    val failedQ = timings.collect { case (name, rs) if rs.exists(_.failed) => name }
+    val repTimes = timings.map { case (name, rs) => name -> rs.map(_.sec) }
     val results = repTimes.map { case (name, times) => name -> times.min }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -75,7 +26,7 @@ object Bench {
     val repsJson = repTimes.map { case (k, ts) =>
       s"\"" + k + "\":" + ts.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val total = results.map(_._2).sum
     // Environment calibration: a fixed CPU-bound workload (hash+sum
     // over a generated range — no I/O, no fixture dependence), min of
     // 3. The r7→r8 d08-chain "regression" turned out to be the

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.QueryRun
 import graft.util.GraftSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -37,10 +38,11 @@ object DumpExchangeBudget {
     // the budget only holds under the planner inputs the spec plans
     // with: TestSpark's session, the same factory at the same 8 cores
     val spark = GraftSession(8)
-    val lines = graft.SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
+    // every registered query: SPARK_GRAFT_ONLY would write a partial budget
+    val lines = QueryRun.names(None).sorted.map { name =>
+      val df = QueryRun.frame(spark, name, sfDir)
       val n = shuffleCount(initial(df.queryExecution.executedPlan))
-      graft.Bench.dropAllStorage(spark)
+      QueryRun.dropAllStorage(spark)
       println(s"[exchangebudget] $name $n")
       s"$name $n"
     }

@@ -2,15 +2,22 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkEntry
+import graft.QueryRun
 import graft.util.GraftSession
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes PLANS.md: `explain("formatted")` output for the headline
   * queries — the physical-plan evidence (pushed filters, pruned read
   * schemas, broadcast joins, codegen spans) behind OPERATORS.md's scale
-  * claims.
+  * claims: `runMain graft.tools.DumpPlans [sfDir]`.
+  *
+  * Per-query form, for an optimization's before/after evidence:
+  * `runMain graft.tools.DumpPlans <sfDir> <outDir> <suffix> <q>[,<q>...]`
+  * writes `<outDir>/<q>_<suffix>.txt` with the REGISTERED entry's plan —
+  * the thing the bench times — even where a checkpoint collapses part
+  * of it. A kill switch for a "before" dump goes on the forked JVM:
+  * `sbt 'set javaOptions += "-Dgraft.spread.off=true"' "runMain …"`.
   */
 object DumpPlans {
   val headline: Seq[String] = Seq(
@@ -183,11 +190,34 @@ object DumpPlans {
     // repeating pair-aggregate kernel both trainers share)
     "t34_bpe_encode_batched")
 
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     // the 8 cores TestSpark and DumpExchangeBudget plan with
     val spark = GraftSession(8)
+    args match {
+      case Array() | Array(_) => writePlansMd(spark, dir)
+      case Array(_, outDir, suffix, list) => dumpEach(spark, dir, outDir, suffix, list)
+      case _ => throw new IllegalArgumentException(
+        "usage: DumpPlans [sfDir] | DumpPlans <sfDir> <outDir> <suffix> <q,...>")
+    }
+    spark.stop()
+  }
 
+  private def dumpEach(spark: SparkSession, dir: String, outDir: String,
+                       suffix: String, list: String): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    QueryRun.names(Some(list)).foreach { name =>
+      val out = Paths.get(outDir, s"${name}_$suffix.txt")
+      Files.writeString(out, formatted(QueryRun.frame(spark, name, dir)))
+      println(s"[plandump] wrote $out")
+      QueryRun.dropAllStorage(spark)
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession, dir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of headline queries\n\n")
     sb.append(s"Generated by `graft.tools.DumpPlans` on $dir. ")
@@ -199,8 +229,7 @@ object DumpPlans {
     // Scan ExistingRDD — dump the LAZY pipeline variants instead so the
     // plan evidence (band shuffle, prefilter joins, window dedup,
     // anti-join) stays visible.
-    val planVariants: Map[String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame] = Map(
+    val planVariants: Map[String, (SparkSession, String) => DataFrame] = Map(
       "d03_minhash_lsh" -> ((s, d) => graft.operators.Dedup.minHashLshPairsPortable(
         graft.Tables.documents(s, d), "doc_id", "text", materialize = false)),
       "d07_curation_pipeline" -> (graft.jobs.CurationJob.curateExactPlan _),
@@ -229,13 +258,13 @@ object DumpPlans {
       // the plan evidence (build once, reuse), and the degree/
       // orientation/wedge joins above it stay fully visible.
     headline.foreach { name =>
-      val df = planVariants.getOrElse(name, SparkEntry.queries(name))(spark, dir)
+      val df = planVariants.get(name).fold(QueryRun.frame(spark, name, dir))(_(spark, dir))
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+      sb.append(formatted(df))
       sb.append("```\n")
       // drop caches AND checkpoint blocks (d07's plan build runs its
       // inner LSH pass eagerly)
-      graft.Bench.dropAllStorage(spark)
+      QueryRun.dropAllStorage(spark)
     }
     // PRESERVE the manually-maintained stress section (ScaleStress
     // results live at the end of PLANS.md; a plans regeneration must
@@ -249,6 +278,5 @@ object DumpPlans {
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"[plans] wrote PLANS.md (${headline.size} queries)")
-    spark.stop()
   }
 }

@@ -88,7 +88,7 @@ object GuardStress {
       println(f"[guard] $name%-28s rows=$rows%12d wall=$dt%8.2fs " +
         f"maxTask=${extremes.maxDurMs.get / 1000.0}%7.2fs " +
         f"maxTaskShufRecords=${extremes.maxShuffleRecords.get}%12d")
-      graft.Bench.dropAllStorage(spark)
+      graft.QueryRun.dropAllStorage(spark)
       rows
     }
 

@@ -1,10 +1,8 @@
 package graft.tools
 
-import java.nio.file.Files
-
 import graft.Tables
 import graft.operators.Dedup
-import graft.util.GraftSession
+import graft.util.{GraftSession, Scratch}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -54,8 +52,8 @@ object IndexLifecycle {
       .select(col("doc_id"), col("text")).localCheckpoint(true)
     val maxId = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
     val split = Dedup.incrementalSplit.toLong
-    val idxDir = Files.createTempDirectory("graft_lifecycle_idx").toString
-    val outDir = Files.createTempDirectory("graft_lifecycle_out").toString
+    val idxDir = Scratch.dir(spark, "lifecycle_idx", sfDir).toString
+    val outDir = Scratch.dir(spark, "lifecycle_out", sfDir).toString
     def secs[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f
       (a, (System.nanoTime() - t0) / 1e9)
@@ -150,14 +148,11 @@ object IndexLifecycle {
     // geometry-migration economics (d31): re-band from persisted
     // signatures vs a from-scratch rebuild that must re-shingle+sign
     val (_, rebandSec) = secs(Dedup.rebandLshIndex(spark, idxDir, 16, 2))
-    val rebuildDir = Files.createTempDirectory("graft_lifecycle_rebuild").toString
+    val rebuildDir = Scratch.dir(spark, "lifecycle_rebuild", sfDir).toString
     val (_, rebuildSec) = secs(Dedup.buildLshIndex(
       visible, "doc_id", "text", rebuildDir))
     println(f"[lifecycle] reband 8x4->16x2 wall=$rebandSec%.2fs vs " +
       f"from-scratch rebuild=$rebuildSec%.2fs (reband skips shingle+sign)")
-    graft.util.Scratch.rmTree(java.nio.file.Paths.get(rebuildDir))
-    graft.util.Scratch.rmTree(java.nio.file.Paths.get(idxDir))
-    graft.util.Scratch.rmTree(java.nio.file.Paths.get(outDir))
 
     // — the IVF half: the SAME mixed question for the e13 index — N
     // frozen-centroid append cycles with interleaved takedowns, then
@@ -169,7 +164,7 @@ object IndexLifecycle {
       .select(col("vec_id"), col("embedding")).localCheckpoint(true)
     val vMax = emb.agg(max(col("vec_id"))).head().getLong(0) + 1
     val vSplit = Similarity.indexBaseSplit.toLong
-    val ivfDir = Files.createTempDirectory("graft_lifecycle_ivf").toString
+    val ivfDir = Scratch.dir(spark, "lifecycle_ivf", sfDir).toString
     def ivfFiles(): Int = {
       val d = new java.io.File(
         graft.util.GenManifest.tablePath(spark, ivfDir, "assignments"))
@@ -230,7 +225,6 @@ object IndexLifecycle {
     println(f"[lifecycle] IVF retrain(+fold) wall=$retrainSec%.2fs - " +
       f"assign_files=${ivfFiles()} query=${querySec()}%.2fs " +
       f"(parity with survivors-only rebuild OK, ${postRetrain.size} rows)")
-    graft.util.Scratch.rmTree(java.nio.file.Paths.get(ivfDir))
     spark.stop()
   }
 }

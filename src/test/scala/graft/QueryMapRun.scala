@@ -14,9 +14,9 @@ object QueryMapRun {
 
   /** Per query, by name: why it failed, or its initial plan and rows. */
   lazy val results: Seq[(String, Either[String, Run])] =
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    QueryRun.names(None).sorted.map { name =>
       name -> (try {
-        val df = fn(TestSpark.spark, TestSpark.sf)
+        val df = QueryRun.frame(TestSpark.spark, name, TestSpark.sf)
         val plan = initial(df.queryExecution.executedPlan)
         Right(Run(plan, df.count()))
       } catch { case e: Throwable => Left(e.toString) })

@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
   * system property. Only the two same-JVM kill switches the `DebugPerf
   * propab` harness toggles (`graft.par.off` in `util/Par.scala`,
   * `graft.spread.off` in `util/Spread.scala`) and the tools may read
-  * one. Likewise only `util/GraftSession` builds a session, and only
-  * `Streams.drain` starts a stream.
+  * one. Likewise only `util/GraftSession` builds a session, only
+  * `Streams.drain` starts a stream, and only `QueryRun` walks the
+  * registered query map or drops storage.
   */
 class SysPropSwitchSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
@@ -56,6 +57,18 @@ class SysPropSwitchSpec extends AnyFunSuite {
   test("writeStream appears once in src/main, in the streaming drain") {
     val sites = matches("""\.writeStream\b""".r, _ => true)
     assert(sites.size == 1 && sites.head.startsWith("streaming/Streams.scala:"),
+      sites.mkString("\n"))
+  }
+
+  test("SparkEntry.queries is read only in QueryRun") {
+    val sites = matches("""SparkEntry\.queries\b""".r, _ => true)
+    assert(sites.nonEmpty && sites.forall(_.startsWith("QueryRun.scala:")),
+      sites.mkString("\n"))
+  }
+
+  test("getPersistentRDDs appears once in src/main, in QueryRun.dropAllStorage") {
+    val sites = matches("""getPersistentRDDs""".r, _ => true)
+    assert(sites.size == 1 && sites.head.startsWith("QueryRun.scala:"),
       sites.mkString("\n"))
   }
 }
